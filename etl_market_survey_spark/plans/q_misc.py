@@ -4564,7 +4564,7 @@ def q370_delta_deletion_vectors(spark, sf_dir):
                 commit_ts=200)
 
     # version -> file rel path (v0's file is the older add)
-    snap = load_snapshot(spark, path)
+    snap = load_snapshot(path)
     rel_of = {}
     for rel, a in snap.adds.items():
         rel_of[a["modificationTime"]] = rel
@@ -4939,7 +4939,7 @@ def q377_delta_change_feed(spark, sf_dir):
     o = _orders_kpt(spark, sf_dir)  # (k, pr, tp)
     sub = o.filter(F.col("k") % 3 == 0)
     write_delta(spark, path, sub.orderBy("k"), commit_ts=100)       # v0
-    rel = next(iter(load_snapshot(spark, path).adds))
+    rel = next(iter(load_snapshot(path).adds))
     # positions read straight off the written file's
     # _metadata.row_index — distributed, no global window sort (the
     # file holds sub in k order, so row_index == the k-rank the old
@@ -5087,7 +5087,7 @@ def q379_delta_lite_datasource(spark, sf_dir):
     # each sorted by k so DV positions are content-derived ranks
     write_delta(spark, path, o.orderBy("k"), partition_col="pr",
                 commit_ts=100, column_mapping=True)
-    snap = load_snapshot(spark, path)
+    snap = load_snapshot(path)
     pr_phys = snap.physical_names()["pr"]
     rel_of_pr = {
         (a.get("partitionValues") or {}).get(pr_phys): rel

@@ -20,12 +20,23 @@ natively. Partition column VALUES live only in the log (Delta never
 writes them into the data files), so the read path groups surviving
 files by partition tuple and re-attaches the columns as typed literals.
 
+This module holds the ONE log fold, and it needs no SparkSession:
+:func:`_log_segment` picks the ``_last_checkpoint`` checkpoint and the
+JSON tail past it (Delta's own cold-start path), :func:`_read_checkpoint`
+reads single- or multi-part checkpoints with pyarrow, and
+:func:`_fold_log` folds the two. ``read_delta``, ``read_delta_pruned``
+(checkpoint projected to metaData/protocol) and the ``delta_lite``
+source (:mod:`.pyds`, which plans inside Python workers) all use it.
+Log cleanup deletes the commits behind a checkpoint; a version the
+remaining commits cannot rebuild raises rather than folding a partial
+history.
+
 Scale story (100 TB): the log is metadata-sized — the driver folds a few
-KB of JSON (or ONE checkpoint parquet + the JSON tail past it, exactly
-Delta's own cold-start path via ``_last_checkpoint``), prunes files
+KB of JSON (or ONE checkpoint + the JSON tail past it), prunes files
 against partition predicates AND per-file min/max ``stats`` BEFORE Spark
 ever lists a path, then hands only surviving files to the parquet scan
-where Catalyst pushdown still applies. Time travel (version or
+where Catalyst pushdown still applies. Many-file tables keep the state a
+DataFrame instead (:func:`snapshot_files_df`). Time travel (version or
 timestamp) is choosing where the fold stops; data files are immutable.
 
 Reference parity: upgrades the reference's re-scan-the-directory catalog
@@ -38,9 +49,11 @@ other engines write.
 from __future__ import annotations
 
 import contextlib
+import itertools
 import json
 import os
 import uuid
+from urllib.parse import quote, unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -81,6 +94,9 @@ def _write_commit(path: str, version: int, actions: list[dict]) -> None:
 
 
 def _list_commit_versions(path: str) -> list[int]:
+    """The commit versions present in ``_delta_log``, ascending. Log
+    cleanup deletes commits behind a checkpoint, so the list need not
+    start at 0; :func:`_log_segment` decides what a fold may use."""
     d = _log_dir(path)
     if not os.path.isdir(d):
         raise FileNotFoundError(f"not a Delta table (no {_LOG_DIR}): {path}")
@@ -113,6 +129,125 @@ def _read_last_checkpoint(path: str) -> dict | None:
         return None
     with open(p) as f:
         return json.load(f)
+
+
+def _checkpoint_files(path: str, cp: dict) -> list[str]:
+    """The parquet file(s) of a ``_last_checkpoint`` entry: the single
+    ``N.checkpoint.parquet``, or the protocol's multi-part form
+    ``N.checkpoint.<part>.<K>.parquet`` when the entry records
+    ``parts``."""
+    v, parts = int(cp["version"]), cp.get("parts")
+    if parts:
+        return [
+            os.path.join(
+                _log_dir(path),
+                f"{v:020d}.checkpoint.{i + 1:010d}.{int(parts):010d}.parquet",
+            )
+            for i in range(int(parts))
+        ]
+    return [os.path.join(_log_dir(path), f"{v:020d}.checkpoint.parquet")]
+
+
+# checkpoint action columns -> the field a row's struct must carry to
+# hold that action (a row holds one action; the other columns are null
+# or, from some writers, all-null structs)
+_CHECKPOINT_ACTIONS = {
+    "metaData": "schemaString", "protocol": "minReaderVersion", "add": "path",
+}
+
+
+def _as_dict(m):
+    """pyarrow reads a parquet MAP as ``[(key, value), ...]`` and a
+    map-as-list column as ``[{"key", "value"}, ...]``; the log's JSON
+    form, which every consumer expects, is an object."""
+    if not isinstance(m, list):
+        return m
+    return dict(
+        (kv["key"], kv["value"]) if isinstance(kv, dict) else kv for kv in m
+    )
+
+
+def _read_checkpoint(
+    path: str, cp: dict, columns=tuple(_CHECKPOINT_ACTIONS)
+) -> list[dict]:
+    """The checkpoint's actions (the public checkpoint schema: one
+    action struct column per kind) as log-JSON-shaped dicts, read with
+    pyarrow and projected to ``columns``. No SparkSession: the
+    ``delta_lite`` source plans inside Python workers. ``remove``
+    tombstones are never read — they are not live state."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for f in _checkpoint_files(path, cp):
+        pf = pq.ParquetFile(f)
+        cols = [c for c in columns if c in pf.schema_arrow.names]
+        for batch in pf.iter_batches(columns=cols):
+            for row in batch.to_pylist():
+                for kind in cols:
+                    a = row[kind]
+                    if not a or a.get(_CHECKPOINT_ACTIONS[kind]) is None:
+                        continue
+                    for k in ("partitionValues", "tags", "configuration"):
+                        if k in a:
+                            a[k] = _as_dict(a[k])
+                    if "options" in (a.get("format") or {}):
+                        a["format"]["options"] = _as_dict(
+                            a["format"]["options"]
+                        )
+                    out.append({kind: a})
+    return out
+
+
+def _version_at_timestamp(path: str, timestamp: int) -> int:
+    """Delta's ``timestampAsOf`` rule: the newest commit whose timestamp
+    is <= ``timestamp`` (epoch ms). Commit timestamps are
+    non-decreasing, so the newest-first scan stops after a handful of
+    reads, not the whole history."""
+    for v in reversed(_list_commit_versions(path)):
+        if _commit_timestamp(path, v, _read_actions(path, v)) <= timestamp:
+            return v
+    raise ValueError(f"no commit at or before timestamp {timestamp} in {path}")
+
+
+def _log_segment(
+    path: str, version: int | None = None, timestamp: int | None = None
+) -> tuple[int, dict | None, list[int]]:
+    """``(version, checkpoint, tail)`` that rebuild the table at
+    ``version`` (or at ``timestamp``, or the latest): the
+    ``_last_checkpoint`` entry the fold starts from (None = from commit
+    0) and the commit versions after it, up to ``version``.
+
+    Every one of those commits must be present. Log cleanup deletes the
+    commits behind a checkpoint, so a version older than the checkpoint
+    may be beyond rebuilding; folding what is left would silently drop
+    the files the deleted commits added, so this raises instead."""
+    if version is not None and timestamp is not None:
+        raise ValueError("pass version OR timestamp, not both")
+    versions = _list_commit_versions(path)
+    if not versions:
+        raise FileNotFoundError(f"empty {_LOG_DIR} in {path}")
+    if timestamp is not None:
+        version = _version_at_timestamp(path, timestamp)
+    elif version is None:
+        version = versions[-1]
+    elif version > versions[-1]:
+        raise ValueError(
+            f"version {version} not in log (latest is {versions[-1]})"
+        )
+    cp = _read_last_checkpoint(path)
+    if cp and int(cp["version"]) > version:
+        cp = None
+    first = int(cp["version"]) + 1 if cp else 0
+    have = set(versions)
+    missing = [v for v in range(first, version + 1) if v not in have]
+    if missing or version not in have:
+        raise ValueError(
+            f"version {version} of {path} cannot be rebuilt: commit "
+            f"{(missing or [version])[0]} is missing from {_LOG_DIR} and "
+            "no checkpoint covers it (log cleanup deletes the commits "
+            "behind a checkpoint)"
+        )
+    return version, cp, list(range(first, version + 1))
 
 
 # reader capabilities of THIS implementation, per the protocol's
@@ -173,6 +308,12 @@ class DeltaSnapshot:
                 out[f["name"]] = int(md["delta.columnMapping.id"])
         return out
 
+    def read_ids(self) -> dict[str, int] | None:
+        """The field ids readers resolve parquet columns by: only under
+        ``columnMapping.mode='id'`` (None otherwise, where the physical
+        NAME resolves)."""
+        return self.field_ids() if self.column_mapping_mode == "id" else None
+
     def check_reader_support(self):
         p = self.protocol
         v = int(p.get("minReaderVersion", 1))
@@ -192,124 +333,50 @@ class DeltaSnapshot:
             )
 
 
-def _fold_actions(state_adds: dict, metadata_ref: list, actions: list[dict],
-                  protocol_ref: list | None = None):
-    for a in actions:
-        if "metaData" in a:
-            metadata_ref[0] = a["metaData"]
-        elif "add" in a:
-            state_adds[a["add"]["path"]] = a["add"]
-        elif "remove" in a:
-            state_adds.pop(a["remove"]["path"], None)
-        elif "protocol" in a and protocol_ref is not None:
-            protocol_ref[0] = a["protocol"]
-
-
-def _load_checkpoint_state(
-    spark: SparkSession, path: str, cp: dict
-) -> tuple[dict, dict, int]:
-    """Read a ``*.checkpoint.parquet`` into (adds, metadata, cp_version).
-
-    Checkpoint rows are the same actions as struct columns (add/remove/
-    metaData/protocol), one non-null per row — the public checkpoint
-    schema."""
-    v = int(cp["version"])
-    parts = cp.get("parts")
-    if parts:
-        files = [
-            os.path.join(
-                _log_dir(path),
-                f"{v:020d}.checkpoint.{i + 1:010d}.{int(parts):010d}.parquet",
-            )
-            for i in range(int(parts))
-        ]
-    else:
-        files = [os.path.join(_log_dir(path), f"{v:020d}.checkpoint.parquet")]
-    rows = spark.read.parquet(*files).collect()
-    adds: dict[str, dict] = {}
-    metadata = None
-    protocol = None
-    for r in rows:
-        d = r.asDict(recursive=True)
-        if d.get("metaData") and d["metaData"].get("schemaString"):
-            metadata = d["metaData"]
-        if d.get("protocol") and d["protocol"].get("minReaderVersion"):
-            protocol = d["protocol"]
-        add = d.get("add")
-        if add and add.get("path"):
-            if isinstance(add.get("partitionValues"), list):  # map-as-list form
-                add["partitionValues"] = {
-                    kv["key"]: kv["value"] for kv in add["partitionValues"]
-                }
-            adds[add["path"]] = add
-    return adds, metadata or {}, v, protocol
-
-
-def load_snapshot(
-    spark: SparkSession,
+def _fold_log(
     path: str,
     version: int | None = None,
     timestamp: int | None = None,
+    checkpoint_columns=tuple(_CHECKPOINT_ACTIONS),
 ) -> DeltaSnapshot:
-    """Fold the log (checkpoint + JSON tail) to the requested version.
-
-    ``timestamp`` selects the newest commit whose timestamp is <= the
-    given epoch-ms value (Delta's ``timestampAsOf`` rule)."""
-    if version is not None and timestamp is not None:
-        raise ValueError("pass version OR timestamp, not both")
-    versions = _list_commit_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"empty {_LOG_DIR} in {path}")
-
-    # LAZY commit reads: snapshot load must be O(checkpoint + JSON
-    # tail), not O(history) — a long-lived table has thousands of
-    # commit files behind its checkpoint, and eagerly parsing them all
-    # defeats the _last_checkpoint cold-start path
-    per_commit: dict[int, list] = {}
-
-    def acts(v: int) -> list[dict]:
-        if v not in per_commit:
-            per_commit[v] = _read_actions(path, v)
-        return per_commit[v]
-
-    if timestamp is not None:
-        # newest-first scan: per the protocol commit timestamps are
-        # non-decreasing, so the FIRST commit (from the tail) at or
-        # before the target is the answer — typical cost is a handful
-        # of reads, not the whole history
-        version = None
-        for v in reversed(versions):
-            if _commit_timestamp(path, v, acts(v)) <= timestamp:
-                version = v
-                break
-        if version is None:
-            raise ValueError(
-                f"no commit at or before timestamp {timestamp} in {path}"
-            )
-    elif version is None:
-        version = versions[-1]
-    elif version not in versions:
-        raise ValueError(f"version {version} not in log (have {versions})")
-
+    """THE log fold: checkpoint actions, then every commit of the JSON
+    tail, in order; the last ``metaData``/``protocol`` wins and the live
+    file set is adds minus removes keyed by path. Reading only
+    ``metaData``/``protocol`` from the checkpoint (``read_delta_pruned``
+    keeps file state distributed) leaves ``adds`` empty."""
+    version, cp, tail = _log_segment(path, version, timestamp)
+    commits = [_read_actions(path, v) for v in tail]
+    checkpoint = _read_checkpoint(path, cp, checkpoint_columns) if cp else []
     adds: dict[str, dict] = {}
-    metadata_ref: list = [None]
-    protocol_ref: list = [None]
-    start = 0
-    cp = _read_last_checkpoint(path)
-    if cp and int(cp["version"]) <= version:
-        adds, meta, cpv, proto = _load_checkpoint_state(spark, path, cp)
-        if meta:
-            metadata_ref[0] = meta
-        if proto:
-            protocol_ref[0] = proto
-        start = cpv + 1
-    for v in versions:
-        if start <= v <= version:
-            _fold_actions(adds, metadata_ref, acts(v), protocol_ref)
-    if metadata_ref[0] is None:
+    metadata = protocol = None
+    for a in itertools.chain(checkpoint, *commits):
+        if "metaData" in a:
+            metadata = a["metaData"]
+        elif "protocol" in a:
+            protocol = a["protocol"]
+        elif "add" in a:
+            adds[a["add"]["path"]] = a["add"]
+        elif "remove" in a:
+            adds.pop(a["remove"]["path"], None)
+    if metadata is None:
         raise ValueError(f"no metaData action found up to version {version}")
-    ts = _commit_timestamp(path, version, acts(version))
-    return DeltaSnapshot(version, metadata_ref[0], adds, ts, protocol_ref[0])
+    ts = _commit_timestamp(
+        path, version, commits[-1] if commits else _read_actions(path, version)
+    )
+    return DeltaSnapshot(
+        version, metadata, adds if "add" in checkpoint_columns else {}, ts,
+        protocol,
+    )
+
+
+def load_snapshot(
+    path: str, version: int | None = None, timestamp: int | None = None
+) -> DeltaSnapshot:
+    """The table at ``version`` (default latest), or at ``timestamp``
+    (the newest commit at or before that epoch-ms value): one
+    checkpoint plus the JSON tail past it, exactly Delta's cold-start
+    path through ``_last_checkpoint``. Needs no SparkSession."""
+    return _fold_log(path, version, timestamp)
 
 
 def _phys_cols(cols_logical, phys: dict, ids: dict | None):
@@ -397,6 +464,20 @@ def _stats_prune(add: dict, col: str, lo, hi) -> bool:
     return True
 
 
+def _scanned_file_name():
+    """The scanned file's basename as the log spells it: the file
+    identity the partition-value lookup and the deletion-vector
+    anti-join key on (the log side is ``os.path.basename(add["path"])``).
+    Spark renders ``_metadata.file_path`` as a URI (space -> ``%20``,
+    ``%`` -> ``%25``). ``url_decode`` undoes that, but it is FORM
+    decoding, which reads ``+`` as a space, so a literal ``+`` is
+    escaped first."""
+    from pyspark.sql import functions as F
+
+    name = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
+    return F.url_decode(F.regexp_replace(name, r"\+", "%2B"))
+
+
 def read_delta(
     spark: SparkSession,
     path: str,
@@ -443,35 +524,15 @@ def read_delta(
     if (partition_filter or stats_filter) \
             and _read_last_checkpoint(path) is not None:
         if timestamp is not None:
-            if version is not None:
-                # same validation as load_snapshot — the routed path
-                # must not silently prefer one selector (ADVICE r9)
-                raise ValueError(
-                    "pass version OR timestamp, not both"
-                )
-            # pruned path addresses versions; resolve timestampAsOf
-            # by the newest-commit-<=-ts rule WITHOUT folding add
-            # state (folding is what this route exists to avoid)
-            version = next(
-                (
-                    v for v in reversed(_list_commit_versions(path))
-                    if _commit_timestamp(
-                        path, v, _read_actions(path, v)
-                    ) <= timestamp
-                ),
-                None,
-            )
-            if version is None:
-                raise ValueError(
-                    f"no commit at or before timestamp {timestamp} "
-                    f"in {path}"
-                )
+            # the pruned path addresses versions: resolve (and check)
+            # the selectors without folding add state
+            version = _log_segment(path, version, timestamp)[0]
         return read_delta_pruned(
             spark, path, version=version,
             partition_filter=partition_filter, stats_filter=stats_filter,
         )
 
-    snap = load_snapshot(spark, path, version=version, timestamp=timestamp)
+    snap = load_snapshot(path, version=version, timestamp=timestamp)
     snap.check_reader_support()
     schema = snap.schema()
     pcols = snap.partition_columns
@@ -499,7 +560,7 @@ def read_delta(
 
     return _assemble_scan(
         spark, path, schema, pcols, phys, adds,
-        ids=snap.field_ids() if snap.column_mapping_mode == "id" else None,
+        ids=snap.read_ids(),
     )
 
 
@@ -595,8 +656,6 @@ def _assemble_scan(
         files = [fp for fp, _ in entries]
         part_keys = {key for _, key in entries}
         bases = [os.path.basename(fp) for fp in files]
-        from urllib.parse import quote
-
         if len(part_keys) > 1 and (
             len(set(bases)) != len(bases)
             or any(quote(b, safe="") != b for b in bases)
@@ -618,9 +677,7 @@ def _assemble_scan(
                        for pn, f in zip(pnames, data_fields)]
                 if has_dv:
                     sel += [
-                        F.element_at(
-                            F.split(F.col("_metadata.file_path"), "/"), -1
-                        ).alias("_dv_name"),
+                        _scanned_file_name().alias("_dv_name"),
                         F.col("_metadata.row_index").alias("_dv_pos"),
                     ]
                 df = df.select(*sel)
@@ -639,9 +696,7 @@ def _assemble_scan(
         need_file = has_dv or (pcols and len(part_keys) > 1)
         if need_file:
             sel += [
-                F.element_at(
-                    F.split(F.col("_metadata.file_path"), "/"), -1
-                ).alias("_dv_name"),
+                _scanned_file_name().alias("_dv_name"),
             ]
         if has_dv:
             sel += [F.col("_metadata.row_index").alias("_dv_pos")]
@@ -726,35 +781,11 @@ def snapshot_files_df(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    versions = _list_commit_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"empty {_LOG_DIR} in {path}")
-    if version is None:
-        version = versions[-1]
-    elif version not in versions:
-        raise ValueError(f"version {version} not in log (have {versions})")
-
+    version, cp, tail = _log_segment(path, version)
     frames = []
-    start = 0
-    cp = _read_last_checkpoint(path)
-    if cp and int(cp["version"]) <= version:
-        v = int(cp["version"])
-        parts = cp.get("parts")
-        if parts:
-            files = [
-                os.path.join(
-                    _log_dir(path),
-                    f"{v:020d}.checkpoint."
-                    f"{i + 1:010d}.{int(parts):010d}.parquet",
-                )
-                for i in range(int(parts))
-            ]
-        else:
-            files = [
-                os.path.join(_log_dir(path), f"{v:020d}.checkpoint.parquet")
-            ]
+    if cp:
         cp_df = (
-            spark.read.parquet(*files)
+            spark.read.parquet(*_checkpoint_files(path, cp))
             .filter(F.col("add.path").isNotNull())
             .select(
                 F.col("add.path").alias("path"),
@@ -764,29 +795,25 @@ def snapshot_files_df(
                 F.col("add.dataChange").alias("dataChange"),
                 F.col("add.stats").alias("stats"),
                 F.col("add.deletionVector").alias("deletionVector"),
-                F.lit(v).alias("_v"),
+                F.lit(int(cp["version"])).alias("_v"),
                 F.lit(0).cast("long").alias("_idx"),
                 F.lit("add").alias("_kind"),
             )
         )
         frames.append(cp_df)
-        start = v + 1
 
     tail_rows = []
-    for v in versions:
-        if start <= v <= version:
-            # within a commit a path can carry remove THEN re-add (a DV
-            # rewrite); the action INDEX breaks the same-version tie the
-            # sequential fold resolves by order
-            for i, a in enumerate(_read_actions(path, v)):
-                if "add" in a:
-                    tail_rows.append(
-                        _action_state_row(a["add"], v, i, "add")
-                    )
-                elif "remove" in a:
-                    tail_rows.append(
-                        _action_state_row(a["remove"], v, i, "remove")
-                    )
+    for v in tail:
+        # within a commit a path can carry remove THEN re-add (a DV
+        # rewrite); the action INDEX breaks the same-version tie the
+        # sequential fold resolves by order
+        for i, a in enumerate(_read_actions(path, v)):
+            if "add" in a:
+                tail_rows.append(_action_state_row(a["add"], v, i, "add"))
+            elif "remove" in a:
+                tail_rows.append(
+                    _action_state_row(a["remove"], v, i, "remove")
+                )
     if tail_rows or not frames:
         frames.append(spark.createDataFrame(tail_rows, _ADD_STATE_DDL))
 
@@ -799,73 +826,6 @@ def snapshot_files_df(
         .filter((F.col("_rn") == 1) & (F.col("_kind") == "add"))
         .drop("_rn", "_v", "_idx", "_kind")
     )
-
-
-def _load_metadata_only(
-    spark: SparkSession, path: str, version: int | None = None
-) -> tuple[dict, dict | None, int]:
-    """(metadata, protocol, version) WITHOUT folding add state — JSON
-    tail first, checkpoint parquet (a 2-row filtered scan) as the
-    cold-start fallback. The driver never holds the file list."""
-    versions = _list_commit_versions(path)
-    if version is None:
-        version = versions[-1]
-    cp = _read_last_checkpoint(path)
-    start = 0
-    if cp and int(cp["version"]) <= version:
-        start = int(cp["version"]) + 1
-    metadata = None
-    protocol = None
-    for v in versions:
-        if start <= v <= version:
-            for a in _read_actions(path, v):
-                if "metaData" in a:
-                    metadata = a["metaData"]
-                elif "protocol" in a:
-                    protocol = a["protocol"]
-    if (metadata is None or protocol is None) and cp \
-            and int(cp["version"]) <= version:
-        from pyspark.sql import functions as F
-
-        v = int(cp["version"])
-        parts = cp.get("parts")
-        files = (
-            [
-                os.path.join(
-                    _log_dir(path),
-                    f"{v:020d}.checkpoint."
-                    f"{i + 1:010d}.{int(parts):010d}.parquet",
-                )
-                for i in range(int(parts))
-            ]
-            if parts
-            else [os.path.join(_log_dir(path),
-                               f"{v:020d}.checkpoint.parquet")]
-        )
-        rows = (
-            spark.read.parquet(*files)
-            .filter(
-                F.col("metaData.schemaString").isNotNull()
-                | F.col("protocol.minReaderVersion").isNotNull()
-            )
-            .select("metaData", "protocol")
-            .collect()
-        )
-        for r in rows:
-            d = r.asDict(recursive=True)
-            if metadata is None and d.get("metaData") \
-                    and d["metaData"].get("schemaString"):
-                metadata = d["metaData"]
-            if protocol is None and d.get("protocol") \
-                    and d["protocol"].get("minReaderVersion"):
-                protocol = d["protocol"]
-    elif metadata is None:
-        # no checkpoint: fold the whole tail (already done above with
-        # start=0, so reaching here means the log has no metaData)
-        pass
-    if metadata is None:
-        raise ValueError(f"no metaData action found up to version {version}")
-    return metadata, protocol, version
 
 
 def read_delta_pruned(
@@ -889,15 +849,16 @@ def read_delta_pruned(
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    metadata, protocol, version = _load_metadata_only(spark, path, version)
-    snap = DeltaSnapshot(version, metadata, {}, 0, protocol)
+    snap = _fold_log(
+        path, version, checkpoint_columns=("metaData", "protocol")
+    )
     snap.check_reader_support()
     schema = snap.schema()
     pcols = snap.partition_columns
     phys = snap.physical_names()
     assert isinstance(schema, StructType)
 
-    files = snapshot_files_df(spark, path, version)
+    files = snapshot_files_df(spark, path, snap.version)
     if partition_filter:
         for k, vals in partition_filter.items():
             files = files.filter(
@@ -945,7 +906,7 @@ def read_delta_pruned(
     ]
     return _assemble_scan(
         spark, path, schema, pcols, phys, adds,
-        ids=snap.field_ids() if snap.column_mapping_mode == "id" else None,
+        ids=snap.read_ids(),
     )
 
 
@@ -1177,7 +1138,7 @@ def write_delta(
 
     prior = None
     if versions:
-        prior = load_snapshot(spark, path, version=versions[-1])
+        prior = load_snapshot(path, version=versions[-1])
         pcols = prior.partition_columns
         if partition_col is None and pcols:
             partition_col = pcols[0]
@@ -1466,7 +1427,7 @@ def write_delta(
         except DeltaConcurrentWriteError:
             if not blind_append:
                 raise
-            winner = load_snapshot(spark, path)
+            winner = load_snapshot(path)
             if winner.metadata.get("schemaString") != (
                 prior.metadata.get("schemaString") if prior else None
             ):
@@ -1504,7 +1465,7 @@ def delete_where(
     """Partition-level delete: remove every live file whose partition
     value is in ``partition_values``. Metadata-only (no data rewrite) —
     the protocol's cheap-delete path."""
-    snap = load_snapshot(spark, path)
+    snap = load_snapshot(path)
     _check_append_only(
         snap.metadata.get("configuration") or {}, "DELETE"
     )
@@ -1559,7 +1520,7 @@ def add_deletion_vectors(
     ``.bin`` file, addressed by (offset, size) frames."""
     from .dvbitmap import dv_file_name, encode_dv_path, serialize_rbm64
 
-    snap = load_snapshot(spark, path)
+    snap = load_snapshot(path)
     _check_append_only(
         snap.metadata.get("configuration") or {}, "DELETE (deletion vectors)"
     )
@@ -1702,7 +1663,7 @@ def delete_rows_where(
 
     from .dvbitmap import dv_file_name, encode_dv_path, write_dv_file
 
-    snap = load_snapshot(spark, path)
+    snap = load_snapshot(path)
     snap.check_reader_support()
     _check_append_only(
         snap.metadata.get("configuration") or {}, "DELETE"
@@ -1925,7 +1886,7 @@ def update_rows_where(
 
     from .dvbitmap import dv_file_name, encode_dv_path, write_dv_file
 
-    snap = load_snapshot(spark, path)
+    snap = load_snapshot(path)
     snap.check_reader_support()
     _check_append_only(
         snap.metadata.get("configuration") or {}, "UPDATE"
@@ -2132,11 +2093,11 @@ def write_checkpoint(
 
     Multi-part is the 100-TB shape: a table with millions of live
     files makes a single checkpoint parquet a one-task read; K parts
-    let the snapshot load scan them in parallel (the loader passes all
+    let :func:`snapshot_files_df` scan them in parallel (it passes all
     part paths to one ``spark.read.parquet``). Add actions round-robin
     across parts; the metaData/protocol row lives in part 1, which the
     fold accepts anywhere per the spec."""
-    snap = load_snapshot(spark, path)
+    snap = load_snapshot(path)
     rows = [
         {"metaData": snap.metadata, "add": None, "protocol": snap.protocol},
     ]
@@ -2163,28 +2124,19 @@ def write_checkpoint(
         )
 
     # checkpoint rows carry struct columns; JSON-encoded structs keep the
-    # writer dependency-free while _load_checkpoint_state accepts both
+    # writer dependency-free
+    last = {"version": snap.version, "size": len(rows)}
+    chunks = [rows]
     if parts:
         if parts < 1:
             raise ValueError("parts must be >= 1")
-        chunks: list[list] = [[] for _ in range(parts)]
+        last["parts"] = parts
+        chunks = [[] for _ in range(parts)]
         chunks[0].append(rows[0])  # metaData/protocol row
         for i, r in enumerate(rows[1:]):
             chunks[i % parts].append(r)
-        for i, chunk in enumerate(chunks):
-            cp_file = os.path.join(
-                _log_dir(path),
-                f"{snap.version:020d}.checkpoint."
-                f"{i + 1:010d}.{parts:010d}.parquet",
-            )
-            _pdf_to_struct_checkpoint(spark, to_pdf(chunk), cp_file)
-        last = {"version": snap.version, "size": len(rows), "parts": parts}
-    else:
-        cp_file = os.path.join(
-            _log_dir(path), f"{snap.version:020d}.checkpoint.parquet"
-        )
-        _pdf_to_struct_checkpoint(spark, to_pdf(rows), cp_file)
-        last = {"version": snap.version, "size": len(rows)}
+    for chunk, cp_file in zip(chunks, _checkpoint_files(path, last)):
+        _pdf_to_struct_checkpoint(spark, to_pdf(chunk), cp_file)
     with open(os.path.join(_log_dir(path), _LAST_CHECKPOINT), "w") as f:
         json.dump(last, f)
     return snap.version
@@ -2424,7 +2376,7 @@ def optimize_zorder(
 
     if not 1 <= len(cols) <= 4:
         raise ValueError("zorder takes 1 to 4 columns")
-    snap = load_snapshot(spark, path)
+    snap = load_snapshot(path)
     snap.check_reader_support()
     pcols = snap.partition_columns
     schema = snap.schema()
@@ -2496,7 +2448,6 @@ def optimize_zorder(
                 .mode("overwrite")
                 .parquet(stage)
             )
-        from urllib.parse import unquote
 
         files = sorted(
             _glob.glob(os.path.join(stage, f"{pphys}=*", "part-*.parquet"))
@@ -2581,11 +2532,11 @@ def restore_delta(
     the restore is itself a version, and time travel across it still
     works — exactly the protocol's representation (RESTORE has no
     dedicated action; it is remove+add like any other commit)."""
-    snap_now = load_snapshot(spark, path)
+    snap_now = load_snapshot(path)
     _check_append_only(
         snap_now.metadata.get("configuration") or {}, "RESTORE"
     )
-    snap_old = load_snapshot(spark, path, version=version)
+    snap_old = load_snapshot(path, version=version)
     if snap_old.metadata.get("schemaString") != snap_now.metadata.get(
         "schemaString"
     ):
@@ -2671,9 +2622,7 @@ def _scan_logical_with_file(
             *[fp for fp, _ in entries]
         )
         sel = [F.col(phys[f.name]).alias(f.name) for f in data_fields] + [
-            F.element_at(
-                F.split(F.col("_metadata.file_path"), "/"), -1
-            ).alias("_file"),
+            _scanned_file_name().alias("_file"),
             F.col("_metadata.row_index").alias("_dv_pos"),
         ]
         df = df.select(*sel)
@@ -2703,9 +2652,7 @@ def _scan_logical_with_file(
             sel = [
                 F.col(phys[f.name]).alias(f.name) for f in data_fields
             ] + [
-                F.element_at(
-                    F.split(F.col("_metadata.file_path"), "/"), -1
-                ).alias("_file"),
+                _scanned_file_name().alias("_file"),
                 F.col("_metadata.row_index").alias("_dv_pos"),
             ]
             df = df.select(*sel)
@@ -2803,7 +2750,7 @@ def read_delta_changes(
         raise ValueError(
             f"no commits in [{starting_version}, {end}] (have {versions})"
         )
-    snap_end = load_snapshot(spark, path, version=end)
+    snap_end = load_snapshot(path, version=end)
     snap_end.check_reader_support()
     cols = [f.name for f in snap_end.schema().fields]
 
@@ -2829,7 +2776,7 @@ def read_delta_changes(
     # version would be O(V^2) in commit count — a real cost on tables
     # with long histories); prev/cur states evolve action by action
     prev_adds: dict[str, dict] = (
-        load_snapshot(spark, path, version=wanted[0] - 1).adds
+        load_snapshot(path, version=wanted[0] - 1).adds
         if wanted[0] > 0
         else {}
     )
@@ -3000,7 +2947,7 @@ def merge_delta(
         or when_not_matched_by_source is not None
     )
 
-    snap = load_snapshot(spark, path)
+    snap = load_snapshot(path)
     snap.check_reader_support()
     if when_matched is not None or when_not_matched_by_source is not None:
         _check_append_only(
@@ -3405,7 +3352,6 @@ def _stage_cdc(
         rel = f"{cdc_dir}/cdc-{new_version:05d}-{uuid.uuid4().hex}.parquet"
         _write_single_parquet(cdc_df.coalesce(1), os.path.join(path, rel))
         return [(rel, {})]
-    from urllib.parse import unquote
 
     stage = os.path.join(path, f".stage-cdc-{uuid.uuid4().hex}")
     # id-mode tables: the sidecar carries parquet.field.id metadata
@@ -3455,7 +3401,7 @@ def compact(
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructField, StructType
 
-    snap = load_snapshot(spark, path)
+    snap = load_snapshot(path)
     snap.check_reader_support()
     pcols = snap.partition_columns
     schema = snap.schema()
@@ -3498,9 +3444,7 @@ def compact(
             merged = (
                 merged.select(
                     "*",
-                    F.element_at(
-                        F.split(F.col("_metadata.file_path"), "/"), -1
-                    ).alias("_dv_name"),
+                    _scanned_file_name().alias("_dv_name"),
                     F.col("_metadata.row_index").alias("_dv_pos"),
                 )
                 .join(deleted, ["_dv_name", "_dv_pos"], "left_anti")
@@ -3577,7 +3521,7 @@ def vacuum(
     kept = versions[-keep_versions:]
     referenced: set[str] = set()
     for v in kept:
-        referenced.update(load_snapshot(spark, path, version=v).adds)
+        referenced.update(load_snapshot(path, version=v).adds)
 
     # every file any version ever added
     all_files: set[str] = set()
@@ -3667,7 +3611,6 @@ def _stage_partitioned(
     table. Returns [(rel, partitionValues, stats_json)]."""
     import glob as _glob
     import shutil
-    from urllib.parse import unquote
 
     from pyspark.sql import functions as F
 
@@ -3703,7 +3646,6 @@ def _stage_partitioned(
 def _batch_stats(spark: SparkSession, files: list[str], schema) -> dict:
     """Per-file stats for MANY files in one aggregate job, keyed by
     ``input_file_name`` — same JSON shape as :func:`_file_stats_json`."""
-    from urllib.parse import unquote, urlparse
 
     from pyspark.sql import functions as F
 
@@ -3755,7 +3697,7 @@ def count_rows_delta(
     Falls back to scanning ONLY if some live file has no recorded
     stats (foreign writers may omit them); this engine's writer always
     records numRecords, so its own tables never scan."""
-    snap = load_snapshot(spark, path, version, timestamp)
+    snap = load_snapshot(path, version, timestamp)
     total = 0
     for a in snap.adds.values():
         st = a.get("stats")

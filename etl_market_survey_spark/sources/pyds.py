@@ -18,12 +18,11 @@ executors exactly like the batch path — micro-batch rows never
 materialize on the driver.
 
 Everything here runs WITHOUT a SparkSession (DataSource objects are
-pickled into Python workers): the log fold is pure JSON (log JSONs are
-never deleted by this writer, so folding the tail from version 0 is
-always complete — checkpoints are a cold-start optimization, not a
-correctness requirement), parquet IO is pyarrow, deletion vectors
-decode with the pure-Python roaring codec, and column mapping is an
-Arrow rename.
+pickled into Python workers): the log fold is :mod:`.deltalog`'s
+SparkSession-free core (checkpoint via pyarrow + the JSON tail, so
+tables whose old commits log cleanup deleted read like in
+``read_delta``), parquet IO is pyarrow, deletion vectors decode with
+the pure-Python roaring codec, and column mapping is an Arrow rename.
 
 Semantics:
 - batch: live adds at the current version; DVs applied; partition
@@ -59,122 +58,40 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-# ---------------------------------------------------------------------------
-# SparkSession-free log fold (pure JSON + pyarrow)
-# ---------------------------------------------------------------------------
-
-_LOG_DIR = "_delta_log"
-
-
-def _versions(path: str) -> list[int]:
-    log = os.path.join(path, _LOG_DIR)
-    out = []
-    for f in os.listdir(log):
-        if f.endswith(".json") and f[:-5].isdigit():
-            out.append(int(f[:-5]))
-    if not out:
-        raise FileNotFoundError(f"no commits in {log}")
-    return sorted(out)
+from .deltalog import (
+    DeltaConcurrentWriteError,
+    _commit_timestamp,
+    _dv_location,
+    _list_commit_versions,
+    _log_dir,
+    _read_actions,
+    _version_at_timestamp,
+    _write_commit,
+    last_txn_version,
+    load_snapshot,
+)
 
 
-def _actions(path: str, v: int) -> list[dict]:
-    fp = os.path.join(path, _LOG_DIR, f"{v:020d}.json")
-    with open(fp) as f:
-        return [json.loads(line) for line in f if line.strip()]
+def _columns(snap):
+    """``(fields, phys, pcols, ids)`` of a snapshot: ``[(name, spark
+    type json)]`` in schema order, logical -> physical names, the
+    partition columns, and the field ids columns resolve by (None
+    unless ``columnMapping.mode='id'``)."""
+    fields = [
+        (f.name, json.loads(f.dataType.json())) for f in snap.schema().fields
+    ]
+    return fields, snap.physical_names(), snap.partition_columns, \
+        snap.read_ids()
 
 
-def _version_at_timestamp(path: str, ts_ms: int) -> int:
-    """Delta's timestampAsOf rule: the newest commit whose timestamp
-    (commitInfo.timestamp, else log-file mtime) is <= the target —
-    resolved newest-first over the version-sorted log (the first hit
-    IS the max eligible version; see deltalog.load_snapshot)."""
-    for v in reversed(_versions(path)):
-        t = None
-        for a in _actions(path, v):
-            ci = a.get("commitInfo")
-            if ci and "timestamp" in ci:
-                t = int(ci["timestamp"])
-                break
-        if t is None:
-            t = int(os.path.getmtime(
-                os.path.join(path, _LOG_DIR, f"{v:020d}.json")) * 1000)
-        if t <= ts_ms:
-            return v
-    raise ValueError(f"no commit at or before timestamp {ts_ms} in {path}")
-
-
-def _fold(path: str, version: int | None = None) -> dict:
-    """{'version', 'metadata', 'protocol', 'adds': {rel: add},
-    'acts_by_version'} — the pure-JSON snapshot fold."""
-    vs = _versions(path)
-    version = vs[-1] if version is None else version
-    adds: dict[str, dict] = {}
-    metadata = None
-    protocol = None
-    for v in vs:
-        if v > version:
-            break
-        for a in _actions(path, v):
-            if "metaData" in a:
-                metadata = a["metaData"]
-            elif "protocol" in a:
-                protocol = a["protocol"]
-            elif "add" in a:
-                adds[a["add"]["path"]] = a["add"]
-            elif "remove" in a:
-                adds.pop(a["remove"]["path"], None)
-    if metadata is None:
-        raise ValueError(f"no metaData up to version {version} in {path}")
-    return {
-        "version": version,
-        "metadata": metadata,
-        "protocol": protocol or {"minReaderVersion": 1},
-        "adds": adds,
-    }
-
-
-_SUPPORTED_READER_FEATURES = {"deletionVectors", "columnMapping"}
-
-
-def _check_protocol(protocol: dict) -> None:
-    v = int(protocol.get("minReaderVersion", 1))
-    if v not in (1, 2, 3):
-        raise ValueError(f"unsupported minReaderVersion {v}")
-    if v == 3:
-        feats = set(protocol.get("readerFeatures") or [])
-        unknown = feats - _SUPPORTED_READER_FEATURES
-        if unknown:
-            raise ValueError(f"unsupported reader features {sorted(unknown)}")
-
-
-def _schema_info(metadata: dict):
-    """(logical StructType, logical->physical map, partition cols,
-    logical->field-id map or None). The id map is non-None exactly for
-    ``columnMapping.mode='id'`` tables — there, parquet columns resolve
-    by the ``PARQUET:field_id`` each file carries, and the physical
-    NAME is advisory only (kept as the fallback for files that predate
-    id stamping)."""
-    from pyspark.sql.types import StructType
-
-    st = StructType.fromJson(json.loads(metadata["schemaString"]))
-    mode = (metadata.get("configuration") or {}).get(
-        "delta.columnMapping.mode", "none"
-    )
-    mapped = mode != "none"
-    phys = {}
-    ids = {}
-    for f in json.loads(metadata["schemaString"])["fields"]:
-        md = f.get("metadata") or {}
-        phys[f["name"]] = (
-            md.get("delta.columnMapping.physicalName", f["name"])
-            if mapped
-            else f["name"]
-        )
-        if "delta.columnMapping.id" in md:
-            ids[f["name"]] = int(md["delta.columnMapping.id"])
-    return st, phys, list(metadata.get("partitionColumns") or []), (
-        ids if mode == "id" else None
-    )
+def _current_snapshot(path: str):
+    """The table's latest snapshot, or None when there is no table yet:
+    no ``_delta_log``, or one without commits. Every other fold error
+    propagates: taking a log that cannot be folded for "no table" would
+    commit a fresh version 0 over the existing data."""
+    if not os.path.isdir(_log_dir(path)) or not _list_commit_versions(path):
+        return None
+    return load_snapshot(path)
 
 
 def _pa_type(spark_type_json):
@@ -299,7 +216,6 @@ def _read_file_partition(p: _FilePartition):
         else:
             tbl = pf.read_row_groups(list(range(lo, hi)), columns=cols)
     if p.dv:
-        from .deltalog import _dv_location
         from .dvbitmap import deserialize_rbm64, read_dv_blob
 
         dv_path, off, size = _dv_location(p.table_path, p.dv)
@@ -372,7 +288,9 @@ class _DeltaLitePlainReader(DataSourceReader):
     """Pushdown-free batch reader — selected via
     ``.option("pushdown", "false")`` for sessions where Spark's
     ``spark.sql.python.filterPushdown.enabled`` is off (Spark rejects
-    any reader that IMPLEMENTS pushFilters under that conf)."""
+    any reader that IMPLEMENTS pushFilters under that conf).
+    :class:`_DeltaLiteReader` adds pushFilters and file pruning through
+    ``_may_match``; both plan one partition per live file chunk."""
 
     def __init__(self, path: str, version: int | None,
                  max_rows: int = 2_000_000):
@@ -380,16 +298,18 @@ class _DeltaLitePlainReader(DataSourceReader):
         self.version = version
         self.max_rows = max_rows
 
+    def _may_match(self, add, types, phys, pcols) -> bool:
+        return True
+
     def partitions(self):
-        snap = _fold(self.path, self.version)
-        _check_protocol(snap["protocol"])
-        st, phys, pcols, ids = _schema_info(snap["metadata"])
-        fields = [
-            (f.name, json.loads(f.dataType.json())) for f in st.fields
-        ]
+        snap = load_snapshot(self.path, self.version)
+        snap.check_reader_support()
+        fields, phys, pcols, ids = _columns(snap)
+        types = dict(fields)
         return [
             p
-            for rel, a in sorted(snap["adds"].items())
+            for rel, a in sorted(snap.adds.items())
+            if self._may_match(a, types, phys, pcols)
             for p in _split_partitions(
                 lambda s, rel=rel, a=a: _FilePartition(
                     self.path, rel, a.get("partitionValues"),
@@ -404,12 +324,10 @@ class _DeltaLitePlainReader(DataSourceReader):
         yield from _read_file_partition(partition)
 
 
-class _DeltaLiteReader(DataSourceReader):
+class _DeltaLiteReader(_DeltaLitePlainReader):
     def __init__(self, path: str, version: int | None,
                  max_rows: int = 2_000_000):
-        self.path = path
-        self.version = version
-        self.max_rows = max_rows
+        super().__init__(path, version, max_rows)
         self.pushed = []  # single-column comparison filters
 
     def pushFilters(self, filters):
@@ -433,10 +351,9 @@ class _DeltaLiteReader(DataSourceReader):
                 self.pushed.append(f)
             yield f
 
-    def _may_match(self, add, st, phys, pcols) -> bool:
+    def _may_match(self, add, types, phys, pcols) -> bool:
         from pyspark.sql.datasource import EqualTo, In
 
-        types = {f.name: json.loads(f.dataType.json()) for f in st.fields}
         stats = None
         if add.get("stats"):
             try:
@@ -468,30 +385,6 @@ class _DeltaLiteReader(DataSourceReader):
                 if _interval_disjoint(lo, hi, flt):
                     return False
         return True
-
-    def partitions(self):
-        snap = _fold(self.path, self.version)
-        _check_protocol(snap["protocol"])
-        st, phys, pcols, ids = _schema_info(snap["metadata"])
-        fields = [
-            (f.name, json.loads(f.dataType.json())) for f in st.fields
-        ]
-        return [
-            p
-            for rel, a in sorted(snap["adds"].items())
-            if self._may_match(a, st, phys, pcols)
-            for p in _split_partitions(
-                lambda s, rel=rel, a=a: _FilePartition(
-                    self.path, rel, a.get("partitionValues"),
-                    a.get("deletionVector"), fields, phys, pcols,
-                    ids=ids, split=s,
-                ),
-                a, self.max_rows,
-            )
-        ]
-
-    def read(self, partition):
-        yield from _read_file_partition(partition)
 
 
 class _CdfPartition(InputPartition):
@@ -671,7 +564,8 @@ class _DeltaLiteStreamReader(DataSourceStreamReader):
         return {"version": self._configured_start()}
 
     def latestOffset(self):
-        latest = _versions(self.path)[-1]
+        versions = _list_commit_versions(self.path)
+        latest = versions[-1]
         if self.max_versions > 0:
             base = (
                 self._anchor
@@ -681,7 +575,7 @@ class _DeltaLiteStreamReader(DataSourceStreamReader):
             if self._emitted is not None:
                 base = max(base, self._emitted)
             pending = [
-                v for v in _versions(self.path) if base < v <= latest
+                v for v in versions if base < v <= latest
             ]
             if len(pending) > self.max_versions:
                 latest = pending[self.max_versions - 1]
@@ -701,20 +595,25 @@ class _DeltaLiteStreamReader(DataSourceStreamReader):
         )
         self._anchor = max(self._anchor if self._anchor is not None
                            else hi, lo, hi)
-        snap = _fold(self.path)  # mapping/partition metadata as of now
-        _check_protocol(snap["protocol"])
-        st, phys, pcols, ids = _schema_info(snap["metadata"])
-        fields = self.pinned_fields or [
-            (f.name, json.loads(f.dataType.json())) for f in st.fields
-        ]
+        snap = load_snapshot(self.path)  # mapping/partition metadata now
+        snap.check_reader_support()
+        fields, phys, pcols, ids = _columns(snap)
+        fields = self.pinned_fields or fields
+        deleted = set(range(lo + 1, hi + 1)) - set(
+            _list_commit_versions(self.path)
+        )
+        if deleted:
+            raise ValueError(
+                f"commits {sorted(deleted)} of {self.path} are gone (log "
+                "cleanup); the stream cannot replay them — restart it "
+                f"with startingVersion > {max(deleted)}"
+            )
         if self.read_change_feed:
             return self._cdf_partitions(lo, hi, fields, phys, pcols,
                                         ids=ids)
         parts = []
-        for v in _versions(self.path):
-            if not (lo < v <= hi):
-                continue
-            acts = _actions(self.path, v)
+        for v in range(lo + 1, hi + 1):
+            acts = _read_actions(self.path, v)
             removes = [
                 a["remove"] for a in acts
                 if "remove" in a and a["remove"].get("dataChange", True)
@@ -760,36 +659,16 @@ class _DeltaLiteStreamReader(DataSourceStreamReader):
             dvd = (entry or {}).get("deletionVector")
             if not dvd:
                 return set()
-            from .deltalog import _dv_location
             from .dvbitmap import deserialize_rbm64, read_dv_blob
 
             dv_path, off, size = _dv_location(self.path, dvd)
             return set(deserialize_rbm64(read_dv_blob(dv_path, off, size)))
 
-        versions = _versions(self.path)
-        state: dict[str, dict] = {}
-        for v in versions:
-            if v > lo:
-                break
-            for a in _actions(self.path, v):
-                if "add" in a:
-                    state[a["add"]["path"]] = a["add"]
-                elif "remove" in a:
-                    state.pop(a["remove"]["path"], None)
+        state = dict(load_snapshot(self.path, lo).adds) if lo >= 0 else {}
         parts = []
-        for v in versions:
-            if not (lo < v <= hi):
-                continue
-            acts = _actions(self.path, v)
-            ts = None
-            for a in acts:
-                ci = a.get("commitInfo")
-                if ci and "timestamp" in ci:
-                    ts = int(ci["timestamp"])
-            if ts is None:
-                ts = int(os.path.getmtime(
-                    os.path.join(self.path, _LOG_DIR, f"{v:020d}.json")
-                ) * 1000)
+        for v in range(lo + 1, hi + 1):
+            acts = _read_actions(self.path, v)
+            ts = _commit_timestamp(self.path, v, acts)
             prev = dict(state)
             for a in acts:
                 if "add" in a:
@@ -932,10 +811,7 @@ class _DeltaLiteWriter(DataSourceArrowWriter):
         # Fail actionably instead — repartition(pcol) upstream, or
         # raise the cap deliberately.
         self.max_open_files = int(options.get("maxopenfiles", 200))
-        try:
-            snap = _fold(path)
-        except (FileNotFoundError, ValueError):
-            snap = None
+        snap = _current_snapshot(path)
         self.creating = snap is None
         self.protocol_action = None
         self.metadata_action = None
@@ -971,10 +847,12 @@ class _DeltaLiteWriter(DataSourceArrowWriter):
             self.prior_version = None
             self.prior_schema_string = table_schema.json()
         else:
-            _check_protocol(snap["protocol"])
-            meta = snap["metadata"]
-            table_schema, self.phys, pcols, self.field_ids = \
-                _schema_info(meta)
+            snap.check_reader_support()
+            meta = snap.metadata
+            table_schema = snap.schema()
+            self.phys = snap.physical_names()
+            pcols = snap.partition_columns
+            self.field_ids = snap.read_ids()
             ptypes = {f.name: f.dataType for f in table_schema.fields}
             lost = [
                 f.name for f in table_schema.fields
@@ -1003,7 +881,7 @@ class _DeltaLiteWriter(DataSourceArrowWriter):
                     "table is delta.appendOnly=true: overwrite would "
                     "commit dataChange removes"
                 )
-            self.prior_version = snap["version"]
+            self.prior_version = snap.version
             self.prior_schema_string = meta.get("schemaString")
         self.table_fields = [
             (f.name, json.loads(f.dataType.json()))
@@ -1014,7 +892,7 @@ class _DeltaLiteWriter(DataSourceArrowWriter):
             for k, v in (config or {}).items()
             if k.startswith("delta.constraints.")
         }
-        os.makedirs(_log_dir_of(path), exist_ok=True)
+        os.makedirs(_log_dir(path), exist_ok=True)
 
     # -- executor side ------------------------------------------------
 
@@ -1165,8 +1043,6 @@ class _DeltaLiteWriter(DataSourceArrowWriter):
     # -- driver side ---------------------------------------------------
 
     def commit(self, messages):
-        from .deltalog import DeltaConcurrentWriteError, _write_commit
-
         staged = [
             a for m in messages if m is not None for a in m.adds
         ]
@@ -1181,10 +1057,7 @@ class _DeltaLiteWriter(DataSourceArrowWriter):
                 }
             }
         ]
-        try:
-            cur = _fold(self.path)
-        except (FileNotFoundError, ValueError):
-            cur = None
+        cur = _current_snapshot(self.path)
         if self.creating:
             if cur is not None:
                 raise DeltaConcurrentWriteError(
@@ -1194,12 +1067,12 @@ class _DeltaLiteWriter(DataSourceArrowWriter):
             actions.append(self.metadata_action)
             version = 0
         elif self.overwrite:
-            if cur is None or cur["version"] != self.prior_version:
+            if cur is None or cur.version != self.prior_version:
                 raise DeltaConcurrentWriteError(
                     f"concurrent commit in {self.path}: overwrite planned "
                     f"at version {self.prior_version}"
                 )
-            for p in sorted(cur["adds"]):
+            for p in sorted(cur.adds):
                 actions.append(
                     {
                         "remove": {
@@ -1209,7 +1082,7 @@ class _DeltaLiteWriter(DataSourceArrowWriter):
                         }
                     }
                 )
-            version = cur["version"] + 1
+            version = cur.version + 1
         else:
             if cur is None:
                 # Table existed at plan time (creating is False) but
@@ -1222,7 +1095,7 @@ class _DeltaLiteWriter(DataSourceArrowWriter):
                     f"table {self.path} disappeared between append "
                     "planning and commit"
                 )
-            version = cur["version"] + 1
+            version = cur.version + 1
         for rel, pv, stats, size in staged:
             actions.append(
                 {
@@ -1244,12 +1117,12 @@ class _DeltaLiteWriter(DataSourceArrowWriter):
             except DeltaConcurrentWriteError:
                 if not blind_append:
                     raise
-                winner = _fold(self.path)
-                if winner["metadata"].get("schemaString") != (
+                winner = load_snapshot(self.path)
+                if winner.metadata.get("schemaString") != (
                     self.prior_schema_string
                 ):
                     raise  # concurrent schema change: our files are stale
-                version = winner["version"] + 1
+                version = winner.version + 1
         raise DeltaConcurrentWriteError(
             f"append could not commit after 16 rebases in {self.path}"
         )
@@ -1293,12 +1166,6 @@ class _DeltaLiteStreamWriter(_DeltaLiteWriter, DataSourceStreamArrowWriter):
         self.txn_app = options.get("txnappid", "delta_lite_stream")
 
     def commit(self, messages, batchId):
-        from .deltalog import (
-            DeltaConcurrentWriteError,
-            _write_commit,
-            last_txn_version,
-        )
-
         last = last_txn_version(self.path, self.txn_app)
         if last is not None and batchId <= last:
             # replay after recovery: the log already has this batch —
@@ -1326,10 +1193,7 @@ class _DeltaLiteStreamWriter(_DeltaLiteWriter, DataSourceStreamArrowWriter):
                 }
             },
         ]
-        try:
-            cur = _fold(self.path)
-        except (FileNotFoundError, ValueError):
-            cur = None
+        cur = _current_snapshot(self.path)
         creating = cur is None
         if creating:
             if self.protocol_action is None:
@@ -1340,7 +1204,7 @@ class _DeltaLiteStreamWriter(_DeltaLiteWriter, DataSourceStreamArrowWriter):
             actions.append(self.metadata_action)
             version = 0
         else:
-            version = cur["version"] + 1
+            version = cur.version + 1
         for rel, pv, stats, size in staged:
             actions.append(
                 {
@@ -1361,8 +1225,8 @@ class _DeltaLiteStreamWriter(_DeltaLiteWriter, DataSourceStreamArrowWriter):
             except DeltaConcurrentWriteError:
                 if creating:
                     raise
-                winner = _fold(self.path)
-                if winner["metadata"].get("schemaString") != (
+                winner = load_snapshot(self.path)
+                if winner.metadata.get("schemaString") != (
                     self.prior_schema_string
                 ):
                     raise
@@ -1370,7 +1234,7 @@ class _DeltaLiteStreamWriter(_DeltaLiteWriter, DataSourceStreamArrowWriter):
                 if last is not None and batchId <= last:
                     self.abort(messages, batchId)
                     return  # the winner recorded our txn
-                version = winner["version"] + 1
+                version = winner.version + 1
         raise DeltaConcurrentWriteError(
             f"stream batch {batchId} could not commit after 16 rebases "
             f"in {self.path}"
@@ -1378,10 +1242,6 @@ class _DeltaLiteStreamWriter(_DeltaLiteWriter, DataSourceStreamArrowWriter):
 
     def abort(self, messages, batchId):
         _DeltaLiteWriter.abort(self, messages)
-
-
-def _log_dir_of(path: str) -> str:
-    return os.path.join(path, _LOG_DIR)
 
 
 class DeltaLiteDataSource(DataSource):
@@ -1415,8 +1275,7 @@ class DeltaLiteDataSource(DataSource):
 
     def schema(self):
         v = self._version()
-        snap = _fold(self._path(), v)
-        st, _, _, _ = _schema_info(snap["metadata"])
+        st = load_snapshot(self._path(), v).schema()
         if str(self.options.get("readchangefeed", "false")).lower() \
                 == "true":
             from pyspark.sql.types import (

@@ -78,7 +78,7 @@ def mirror_to_iceberg(
     first mirror — falls back to the full-state overwrite snapshot.
     A mirror with nothing new is a NO-OP (returns the current snapshot
     id, writes nothing)."""
-    snap = load_snapshot(spark, path)
+    snap = load_snapshot(path)
     if snap.partition_columns:
         raise NotImplementedError(
             "mirror of partitioned Delta tables: partition values live "
@@ -295,7 +295,7 @@ def mirror_to_delta(
         new_version = versions[-1] + 1
         from .deltalog import load_snapshot
 
-        prior = load_snapshot(spark, path, version=versions[-1])
+        prior = load_snapshot(path, version=versions[-1])
         table_id = prior.metadata.get("id") or _uuid.uuid4().hex
         prior_adds = list(prior.adds)
     except FileNotFoundError:

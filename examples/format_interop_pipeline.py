@@ -108,7 +108,7 @@ def main(spark, sf_dir: str = "/root/testdata/sf0.01"):
     )
     print(f"pruned scans touch {len(d_pruned.inputFiles())} delta file(s), "
           f"{len(i_pruned.inputFiles())} iceberg file(s) "
-          f"(of {len(deltalog.load_snapshot(spark, DELTA).adds)} / "
+          f"(of {len(deltalog.load_snapshot(DELTA).adds)} / "
           f"{len(iceberg.snapshot_files(ICE))} live)")
     assert _counts(d_pruned) == _counts(i_pruned)
     return current

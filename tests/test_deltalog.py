@@ -222,7 +222,7 @@ class TestWriterRoundTrip:
         write_delta(spark, root, df, commit_ts=100)
         out = read_delta(spark, root)
         assert out.count() == 20
-        snap = load_snapshot(spark, root)
+        snap = load_snapshot(root)
         assert snap.partition_columns == []
 
     def test_checkpoint_fold(self, spark, tmp_path):
@@ -244,7 +244,7 @@ class TestWriterRoundTrip:
         root = str(tmp_path / "t6")
         write_delta(spark, root, self._mk(spark), partition_col="cat",
                     commit_ts=100)
-        snap = load_snapshot(spark, root)
+        snap = load_snapshot(root)
         st = json.loads(next(iter(snap.adds.values()))["stats"])
         assert st["numRecords"] > 0 and "id" in st["minValues"]
         empty = read_delta(spark, root, stats_filter={"id": (1000, 2000)})
@@ -263,10 +263,10 @@ class TestCompaction:
         for i in range(3):  # 3 commits x 2 partitions = 6 small files
             write_delta(spark, root, df.filter(F.col("id") % 3 == i),
                         partition_col="cat", commit_ts=100 + i)
-        before = load_snapshot(spark, root)
+        before = load_snapshot(root)
         assert len(before.adds) == 6
         v = compact(spark, root, commit_ts=400)
-        after = load_snapshot(spark, root)
+        after = load_snapshot(root)
         assert len(after.adds) == 2  # one file per partition
         got = {(r["id"], r["cat"]) for r in read_delta(spark, root).collect()}
         want = {(r["id"], r["cat"]) for r in df.collect()}
@@ -283,7 +283,7 @@ class TestCompaction:
         write_delta(spark, root, df, commit_ts=100)
         v1 = compact(spark, root, commit_ts=200)
         assert v1 == 0  # single file already — no empty commit written
-        assert len(load_snapshot(spark, root).adds) == 1
+        assert len(load_snapshot(root).adds) == 1
 
 
 class TestVacuum:
@@ -474,7 +474,7 @@ class TestDeletionVectors:
 
         path = str(tmp_path / "dvt")
         self._table(spark, path)
-        rel = next(iter(load_snapshot(spark, path).adds))
+        rel = next(iter(load_snapshot(path).adds))
         add_deletion_vectors(spark, path, {rel: [0, 5, 59]}, commit_ts=200)
         got = {r["k"] for r in read_delta(spark, path).collect()}
         assert got == set(range(60)) - {0, 5, 59}
@@ -519,9 +519,9 @@ class TestDeletionVectors:
 
         path = str(tmp_path / "dvp")
         self._table(spark, path)
-        rel = next(iter(load_snapshot(spark, path).adds))
+        rel = next(iter(load_snapshot(path).adds))
         add_deletion_vectors(spark, path, {rel: [1]}, commit_ts=200)
-        snap = load_snapshot(spark, path)
+        snap = load_snapshot(path)
         assert snap.protocol["minReaderVersion"] == 3
         assert "deletionVectors" in snap.protocol["readerFeatures"]
         dvd = snap.adds[rel]["deletionVector"]
@@ -540,7 +540,7 @@ class TestColumnMapping:
         )
         write_delta(spark, path, df, partition_col="cat", commit_ts=100,
                     column_mapping=True)
-        snap = load_snapshot(spark, path)
+        snap = load_snapshot(path)
         assert snap.column_mapping_mode == "name"
         phys = snap.physical_names()
         assert all(p.startswith("col-") for p in phys.values())
@@ -563,7 +563,7 @@ class TestColumnMapping:
         d2 = spark.range(100, 120).select(F.col("id").alias("k"))
         write_delta(spark, path, d1, commit_ts=100, column_mapping=True)
         write_delta(spark, path, d2, commit_ts=200)  # inherits mapping
-        snap = load_snapshot(spark, path)
+        snap = load_snapshot(path)
         assert len({a.get("partitionValues") is not None
                     for a in snap.adds.values()}) == 1
         # stats keys are physical; the LOGICAL-name stats_filter prunes
@@ -580,9 +580,9 @@ class TestColumnMapping:
         df = spark.range(0, 30).select(F.col("id").alias("k"))
         write_delta(spark, path, df.orderBy("k"), commit_ts=100,
                     column_mapping=True)
-        rel = next(iter(load_snapshot(spark, path).adds))
+        rel = next(iter(load_snapshot(path).adds))
         add_deletion_vectors(spark, path, {rel: [2, 3]}, commit_ts=200)
-        snap = load_snapshot(spark, path)
+        snap = load_snapshot(path)
         assert set(snap.protocol["readerFeatures"]) == {
             "columnMapping", "deletionVectors"
         }
@@ -611,7 +611,7 @@ class TestDvInteractions:
                     commit_ts=100, column_mapping=column_mapping)
         write_delta(spark, path, d2.orderBy("k"), partition_col="p",
                     commit_ts=200)
-        snap = load_snapshot(spark, path)
+        snap = load_snapshot(path)
         # delete position 0 of every live file (the smallest k per file)
         deletes = {rel: [0] for rel in snap.adds}
         add_deletion_vectors(spark, path, deletes, commit_ts=300)
@@ -625,7 +625,7 @@ class TestDvInteractions:
         path = str(tmp_path / "dvc")
         kept = self._dv_table(spark, path)
         v = compact(spark, path, commit_ts=400)
-        snap = load_snapshot(spark, path)
+        snap = load_snapshot(path)
         assert all(not a.get("deletionVector") for a in snap.adds.values())
         after = {r["k"] for r in read_delta(spark, path).collect()}
         assert after == kept  # no resurrection
@@ -642,7 +642,7 @@ class TestDvInteractions:
         assert set(out.columns) == {"k", "p"}
         assert {r["k"] for r in out.collect()} == kept
         # physical partition keys preserved in the compacted adds
-        snap = load_snapshot(spark, path)
+        snap = load_snapshot(path)
         pkey = snap.physical_names()["p"]
         assert all(
             pkey in (a.get("partitionValues") or {})
@@ -654,7 +654,7 @@ class TestDvInteractions:
         kept = self._dv_table(spark, path, column_mapping=True)
         write_checkpoint(spark, path)
         # force the cold-start path: fold from checkpoint + empty tail
-        snap = load_snapshot(spark, path)
+        snap = load_snapshot(path)
         assert any(a.get("deletionVector") for a in snap.adds.values())
         assert snap.column_mapping_mode == "name"
         assert snap.protocol["minReaderVersion"] == 3
@@ -696,12 +696,12 @@ class TestMergeDelta:
 
         path = str(tmp_path / "m2")
         self._mk(spark, path)
-        before = dict(load_snapshot(spark, path).adds)
+        before = dict(load_snapshot(path).adds)
         # keys hit ONLY the first file's [0, 49] stats range
         src = spark.createDataFrame([(7, -7)], "k long, v long")
         merge_delta(spark, path, src, on=["k"],
                     when_not_matched=None, commit_ts=300)
-        after = load_snapshot(spark, path).adds
+        after = load_snapshot(path).adds
         kept = set(before) & set(after)
         # the second file's add entry survives BYTE-identical
         assert any("part-00001" in r for r in kept)
@@ -757,7 +757,7 @@ class TestMergeDelta:
         merge_delta(spark, path, src, on=["k"], commit_ts=200)
         got = {(r["k"], r["p"]) for r in read_delta(spark, path).collect()}
         assert (4, "9") in got and (4, "0") not in got and len(got) == 20
-        snap = load_snapshot(spark, path)
+        snap = load_snapshot(path)
         assert any("p=9" in r for r in snap.adds)
 
     def test_merge_materializes_dvs_on_touched(self, spark, tmp_path):
@@ -767,7 +767,7 @@ class TestMergeDelta:
 
         path = str(tmp_path / "m7")
         self._mk(spark, path, column_mapping=True)
-        snap = load_snapshot(spark, path)
+        snap = load_snapshot(path)
         # delete position 0 of every file (k=0 and k=100)
         add_deletion_vectors(
             spark, path, {rel: [0] for rel in snap.adds}, commit_ts=250
@@ -780,7 +780,7 @@ class TestMergeDelta:
         got = {r["k"]: r["v"] for r in read_delta(spark, path).collect()}
         assert 0 not in got and 100 not in got
         assert got[5] == -5 and len(got) == 98
-        snap2 = load_snapshot(spark, path)
+        snap2 = load_snapshot(path)
         dvs = [a for a in snap2.adds.values() if a.get("deletionVector")]
         assert len(dvs) == 1  # untouched file still merge-on-read
 
@@ -880,7 +880,7 @@ class TestSchemaEvolution:
                                   "k long, v long, w string"),
             commit_ts=200, merge_schema=True,
         )
-        snap = load_snapshot(spark, path)
+        snap = load_snapshot(path)
         phys = snap.physical_names()
         assert phys["w"].startswith("col-")
         cfg = snap.metadata["configuration"]
@@ -931,7 +931,7 @@ class TestRestore:
         path = str(tmp_path / "r2")
         d = spark.range(0, 10).select(F.col("id").alias("k"))
         v0 = write_delta(spark, path, d.orderBy("k"), commit_ts=100)
-        snap = load_snapshot(spark, path)
+        snap = load_snapshot(path)
         add_deletion_vectors(
             spark, path, {next(iter(snap.adds)): [0, 1]}, commit_ts=200
         )
@@ -970,7 +970,7 @@ class TestChangeDataFeed:
         path = str(tmp_path / "cdf1")
         d = spark.range(0, 10).select(F.col("id").alias("k"))
         write_delta(spark, path, d.orderBy("k"), commit_ts=100)   # v0
-        snap = load_snapshot(spark, path)
+        snap = load_snapshot(path)
         rel = next(iter(snap.adds))
         add_deletion_vectors(spark, path, {rel: [2, 5]}, commit_ts=200)  # v1
         d2 = spark.range(100, 103).select(F.col("id").alias("k"))
@@ -1048,7 +1048,7 @@ class TestChangeDataFeed:
                          spark.range(0, 6).select(F.col("id").alias("k"))
                          .orderBy("k"),
                          commit_ts=100)
-        rel = next(iter(load_snapshot(spark, path).adds))
+        rel = next(iter(load_snapshot(path).adds))
         add_deletion_vectors(spark, path, {rel: [1]}, commit_ts=200)
         rv = restore_delta(spark, path, v0, commit_ts=300)
         feed = read_delta_changes(spark, path, rv, rv).collect()
@@ -1127,7 +1127,7 @@ class TestOptimisticConcurrency:
         path = str(tmp_path / "oc3")
         write_delta(spark, path,
                     spark.createDataFrame([(1,)], "k long"), commit_ts=100)
-        meta = dict(load_snapshot(spark, path).metadata)
+        meta = dict(load_snapshot(path).metadata)
         meta["schemaString"] = meta["schemaString"].replace(
             '"k"', '"k_renamed"'
         )
@@ -1184,13 +1184,13 @@ class TestOptimizeZorder:
                for r in read_delta(spark, path).collect()}
         assert got == pts  # logical content identical
         # dataChange false + time travel intact
-        snap = load_snapshot(spark, path)
+        snap = load_snapshot(path)
         assert all(a.get("dataChange") is False for a in snap.adds.values())
         assert read_delta(spark, path, version=v - 1).count() == len(pts)
 
         # pruning: a small box on (x, y) must skip most of the 16 files
         def surviving(filt):
-            s = load_snapshot(spark, path)
+            s = load_snapshot(path)
             from etl_market_survey_spark.sources.deltalog import _stats_prune
             return [
                 a for a in s.adds.values()
@@ -1226,10 +1226,10 @@ class TestOptimizeZorder:
             F.col("id").alias("x"), (F.col("id") * 7 % 100).alias("y")
         )
         write_delta(spark, path, d.orderBy("x"), commit_ts=100)
-        rel = next(iter(load_snapshot(spark, path).adds))
+        rel = next(iter(load_snapshot(path).adds))
         add_deletion_vectors(spark, path, {rel: [0, 1, 2]}, commit_ts=150)
         optimize_zorder(spark, path, ["x", "y"], n_files=4, commit_ts=200)
-        snap = load_snapshot(spark, path)
+        snap = load_snapshot(path)
         assert all(not a.get("deletionVector") for a in snap.adds.values())
         assert read_delta(spark, path).count() == 97
 
@@ -1248,7 +1248,7 @@ class TestOptimizeZorder:
         got = {(r["x"], r["y"], r["p"])
                for r in read_delta(spark, path).collect()}
         assert got == set(rows)
-        snap = load_snapshot(spark, path)
+        snap = load_snapshot(path)
         # every new file belongs to exactly one partition dir
         assert all(a["partitionValues"].get("p") in ("0", "1")
                    for a in snap.adds.values())
@@ -1279,7 +1279,7 @@ class TestLazySnapshotLoad:
             dl, "_read_actions",
             lambda path, v: (reads.append(v), orig(path, v))[1],
         )
-        snap = dl.load_snapshot(spark, root)
+        snap = dl.load_snapshot(root)
         assert snap.version == 4
         # only the post-checkpoint tail (v4) is parsed — the four
         # commits the checkpoint already covers are never opened
@@ -1301,7 +1301,7 @@ class TestLazySnapshotLoad:
             dl, "_read_actions",
             lambda path, v: (reads.append(v), orig(path, v))[1],
         )
-        snap = dl.load_snapshot(spark, root, timestamp=450)
+        snap = dl.load_snapshot(root, timestamp=450)
         assert snap.version == 3
         # newest-first scan touched only v4 (too new) and v3 (answer),
         # plus the fold of 0..3; v4 was never folded twice and the
@@ -1415,7 +1415,7 @@ class TestZOrder3Col:
         )
 
         def n_files_for_box(path):
-            snap = load_snapshot(spark, path)
+            snap = load_snapshot(path)
             total = len(snap.adds)
             box = read_delta(
                 spark, path,
@@ -1585,9 +1585,9 @@ class TestDeleteRowsWhere:
 
         path = str(tmp_path / "dw1")
         self._mk(spark, path)
-        n_before = len(load_snapshot(spark, path).adds)
+        n_before = len(load_snapshot(path).adds)
         delete_rows_where(spark, path, "k % 25 = 0", commit_ts=200)
-        snap = load_snapshot(spark, path)
+        snap = load_snapshot(path)
         assert len(snap.adds) == n_before  # no rewrite
         assert any(a.get("deletionVector") for a in snap.adds.values())
         left = {r["k"] for r in read_delta(spark, path).collect()}
@@ -1605,7 +1605,7 @@ class TestDeleteRowsWhere:
         delete_rows_where(spark, path, "k % 25 = 0", commit_ts=200)
         v2 = delete_rows_where(spark, path, "k >= 50", commit_ts=300,
                                rewrite_fraction=0.3)
-        snap = load_snapshot(spark, path)
+        snap = load_snapshot(path)
         # rewritten files carry no DV and all rows < 50 survive
         left = {r["k"] for r in read_delta(spark, path).collect()}
         assert left == set(range(50)) - {0, 25}
@@ -1644,7 +1644,7 @@ class TestUpdateRowsWhere:
                               {"v": "v * 2 + 1"}, commit_ts=200)
         out = {r["k"]: r["v"] for r in read_delta(spark, path).collect()}
         assert len(out) == 40 and out[10] == 201 and out[5] == 50
-        snap = load_snapshot(spark, path)
+        snap = load_snapshot(path)
         assert any(a.get("deletionVector") for a in snap.adds.values())
         feed = sorted(
             (r["_change_type"], r["k"], r["v"])
@@ -1671,7 +1671,7 @@ class TestUpdateRowsWhere:
         out = {(r["k"], r["p"]) for r in read_delta(spark, path).collect()}
         assert all(p == "9" for k, p in out if k % 2 == 1)
         assert len(out) == 20
-        snap = load_snapshot(spark, path)
+        snap = load_snapshot(path)
         assert not any(a.get("deletionVector")
                        for a in snap.adds.values())  # pure rewrite
 
@@ -1724,7 +1724,7 @@ class TestRowDmlStaysDistributed:
         )
         write_delta(spark, path, t, commit_ts=100)
         delete_rows_where(spark, path, "k % 20 = 0", commit_ts=200)
-        snap = load_snapshot(spark, path)
+        snap = load_snapshot(path)
         assert any(a.get("deletionVector") for a in snap.adds.values())
 
         self._poison(monkeypatch)  # second DML folds the prior DV
@@ -1785,7 +1785,7 @@ class TestDataFrameSnapshotState:
 
         p = str(tmp_path / "st1")
         self._table(spark, p)
-        snap = dl.load_snapshot(spark, p)
+        snap = dl.load_snapshot(p)
         df_state = {
             r["path"]: r for r in
             dl.snapshot_files_df(spark, p).collect()
@@ -1814,18 +1814,28 @@ class TestDataFrameSnapshotState:
             map(tuple, dl.read_delta(spark, p, **flt).collect())
         )
 
-        def boom(*a, **k):
-            raise AssertionError(
-                "read_delta_pruned fell back to the driver dict fold"
-            )
+        # metadata and protocol come from the shared checkpoint reader,
+        # projected to those two columns; reading the checkpoint's add
+        # column would fold the full file list on the driver
+        orig = dl._read_checkpoint
+        projections = []
 
-        monkeypatch.setattr(dl, "_load_checkpoint_state", boom)
+        def no_adds(path, cp, columns=tuple(dl._CHECKPOINT_ACTIONS)):
+            if "add" in columns:
+                raise AssertionError(
+                    "read_delta_pruned fell back to the driver dict fold"
+                )
+            projections.append(tuple(columns))
+            return orig(path, cp, columns)
+
+        monkeypatch.setattr(dl, "_read_checkpoint", no_adds)
         assert sorted(
             map(tuple, dl.read_delta_pruned(spark, p).collect())
         ) == want_full
         assert sorted(
             map(tuple, dl.read_delta_pruned(spark, p, **flt).collect())
         ) == want_flt
+        assert projections == [("metaData", "protocol")] * 2
 
     def test_stats_prune_works_on_mapped_physical_names(
         self, spark, tmp_path
@@ -1848,7 +1858,7 @@ class TestDataFrameSnapshotState:
                 column_mapping=True, commit_ts=100 + i,
             )
         dl.write_checkpoint(spark, p)
-        phys_k = dl.load_snapshot(spark, p).physical_names()["k"]
+        phys_k = dl.load_snapshot(p).physical_names()["k"]
         assert "-" in phys_k  # the hyphen that broke the dotted path
         df = dl.read_delta_pruned(spark, p, stats_filter={"k": (10, 20)})
         # stats_filter prunes FILES (rows are the surviving file's):
@@ -1994,7 +2004,7 @@ class TestAppendOnly:
             dl.merge_delta(spark, p, d, ["k"], commit_ts=300)
         with pytest.raises(ValueError, match="appendOnly"):
             dl.restore_delta(spark, p, 0, commit_ts=300)
-        rel = sorted(dl.load_snapshot(spark, p).adds)[0]
+        rel = sorted(dl.load_snapshot(p).adds)[0]
         with pytest.raises(ValueError, match="appendOnly"):
             dl.add_deletion_vectors(spark, p, {rel: [0]}, commit_ts=300)
 
@@ -2049,7 +2059,7 @@ class TestColumnMappingIdMode:
 
         p = str(tmp_path / "idm1")
         d = self._table(spark, p)
-        snap = dl.load_snapshot(spark, p)
+        snap = dl.load_snapshot(p)
         assert snap.column_mapping_mode == "id"
         assert snap.field_ids() == {"k": 1, "s": 2, "v": 3}
         assert sorted(map(tuple, dl.read_delta(spark, p).collect())) \
@@ -2295,3 +2305,65 @@ class TestExternalLayoutFallbacks:
             tmp_path, "part 0%25a.parquet", "part-1.parquet"
         )
         self._assert_reads(spark, root)
+
+
+class TestSparkFreeFold:
+    """delta_lite plans inside Python workers, where no SparkSession
+    exists: the log fold (checkpoint via pyarrow + JSON tail) must run
+    without ever starting a JVM."""
+
+    _CHILD = """
+import json, sys
+import pyspark.context, pyspark.java_gateway
+
+def no_jvm(*a, **k):
+    raise AssertionError("the log fold started a JVM")
+
+pyspark.context.launch_gateway = no_jvm
+pyspark.java_gateway.launch_gateway = no_jvm
+from etl_market_survey_spark.sources.deltalog import load_snapshot
+
+snap = load_snapshot(sys.argv[1])
+snap.check_reader_support()
+assert pyspark.context.SparkContext._gateway is None
+print(json.dumps({"version": snap.version, "timestamp": snap.timestamp,
+                  "schema": snap.schema().json(), "adds": snap.adds}))
+"""
+
+    def test_checkpointed_fold_in_a_jvm_free_process(self, spark, tmp_path):
+        import subprocess
+        import sys
+
+        from etl_market_survey_spark.sources.deltalog import (
+            add_deletion_vectors,
+        )
+
+        root = str(tmp_path / "nojvm")
+        df = spark.range(40).selectExpr("id", "CAST(id % 4 AS STRING) AS p")
+        for i in range(3):
+            write_delta(spark, root,
+                        df.filter(f"id >= {i * 10} and id < {i * 10 + 10}"),
+                        partition_col="p", commit_ts=100 * (i + 1))
+        rel = sorted(load_snapshot(root).adds)[0]
+        add_deletion_vectors(spark, root, {rel: [0]}, commit_ts=400)
+        write_checkpoint(spark, root, parts=2)  # multi-part, at v3
+        write_delta(spark, root, df.filter("id >= 30"), partition_col="p",
+                    commit_ts=500)
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        out = subprocess.run(
+            [sys.executable, "-c", self._CHILD, root],
+            capture_output=True, text=True, timeout=300, check=True,
+            env={**os.environ, "PYTHONPATH": repo},
+        )
+        got = json.loads(out.stdout.strip().splitlines()[-1])
+        want = load_snapshot(root)
+        assert got["version"] == want.version == 4
+        assert got["timestamp"] == 500
+        assert got["adds"] == want.adds
+        assert len(got["adds"]) == 16
+        # checkpoint maps come back as the log's JSON objects, and the
+        # deletion vector survives the checkpoint
+        assert all(isinstance(a["partitionValues"], dict)
+                   and set(a["partitionValues"]) == {"p"}
+                   for a in got["adds"].values())
+        assert got["adds"][rel]["deletionVector"]["cardinality"] == 1

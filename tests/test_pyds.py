@@ -12,6 +12,7 @@ from etl_market_survey_spark.sources.deltalog import (
     add_deletion_vectors,
     load_snapshot,
     read_delta,
+    write_checkpoint,
     write_delta,
 )
 from etl_market_survey_spark.sources.pyds import DeltaLiteDataSource
@@ -32,7 +33,7 @@ class TestBatch:
         )
         write_delta(spark, path, d, partition_col="p", commit_ts=100,
                     column_mapping=True)
-        rel = sorted(load_snapshot(spark, path).adds)[0]
+        rel = sorted(load_snapshot(path).adds)[0]
         add_deletion_vectors(spark, path, {rel: [0, 1]}, commit_ts=200)
 
         via_ds = spark.read.format("delta_lite").load(path)
@@ -127,7 +128,7 @@ class TestStreaming:
         path, ckpt, sink = (str(tmp_path / n) for n in ("t3", "c3", "s3"))
         d = spark.range(0, 6).select(F.col("id").alias("k"))
         write_delta(spark, path, d.orderBy("k"), commit_ts=100)
-        rel = next(iter(load_snapshot(spark, path).adds))
+        rel = next(iter(load_snapshot(path).adds))
         add_deletion_vectors(spark, path, {rel: [0]}, commit_ts=200)
         with pytest.raises(Exception, match="ignoreChanges"):
             self._drain(spark, path, ckpt, sink)
@@ -317,12 +318,12 @@ class TestPartitionedStreamReader:
                         commit_ts=100 * (i + 1))
         # plan check: the reader plans one partition per live file
         from etl_market_survey_spark.sources.pyds import (
-            _DeltaLiteStreamReader, _fold,
+            _DeltaLiteStreamReader,
         )
 
         r = _DeltaLiteStreamReader(path, False, None)
         parts = r.partitions({"version": -1}, r.latestOffset())
-        assert len(parts) == len(_fold(path)["adds"])
+        assert len(parts) == len(load_snapshot(path).adds)
         q = (
             spark.readStream.format("delta_lite").load(path)
             .writeStream.format("parquet")
@@ -550,7 +551,7 @@ class TestStreamingChangeFeed:
                     spark.createDataFrame([(3, 333), (50, 500)],
                                           "k long, v long"),
                     ["k"], commit_ts=200)
-        rel = next(iter(load_snapshot(spark, path).adds))
+        rel = next(iter(load_snapshot(path).adds))
         add_deletion_vectors(spark, path, {rel: [0]}, commit_ts=300)
         q = (
             spark.readStream.format("delta_lite")
@@ -848,7 +849,7 @@ class TestDeltaLiteWriter:
         # the log carries per-file stats in _file_stats_json's shape
         import json as _json
 
-        snap = load_snapshot(spark, path)
+        snap = load_snapshot(path)
         assert snap.partition_columns == ["p"]
         for add in snap.adds.values():
             st = _json.loads(add["stats"])
@@ -1384,7 +1385,7 @@ class TestDeltaLiteStreamWriter:
         # the orphan is still on disk but NO log entry references it
         # (remove_orphan_files-class debris, invisible to readers)
         assert os.path.exists(orphan)
-        snap = load_snapshot(spark, sink)
+        snap = load_snapshot(sink)
         assert os.path.basename(orphan) not in {
             os.path.basename(p) for p in snap.adds
         }
@@ -1717,3 +1718,190 @@ class TestIcebergRowGroupSplitting:
         b = whole.agg(F.count("*"), F.sum("k"), F.sum("m")).collect()
         assert a == b
         assert a[0][0] == 400_000 - 4_000
+
+
+def _log_cleaned_table(spark, path):
+    """Four appends, a checkpoint at v3, one more append, then commits
+    0-2 deleted: what log retention leaves of a maintained table."""
+    for i in range(4):
+        write_delta(
+            spark, path,
+            spark.range(i * 10, i * 10 + 10).selectExpr("id", "id * 2 AS v"),
+            commit_ts=100 * (i + 1),
+        )
+    write_checkpoint(spark, path)
+    write_delta(spark, path,
+                spark.range(40, 45).selectExpr("id", "id * 2 AS v"),
+                commit_ts=500)
+    for v in range(3):
+        os.remove(os.path.join(path, "_delta_log", f"{v:020d}.json"))
+
+
+def _both_counts(spark, path, version=None):
+    lite = spark.read.format("delta_lite")
+    if version is not None:
+        lite = lite.option("versionAsOf", str(version))
+    return (
+        read_delta(spark, path, version=version).count(),
+        lite.load(path).count(),
+    )
+
+
+class TestLogCleanedTables:
+    """Both readers fold checkpoint + JSON tail through the one
+    deltalog core, so a table whose old commits log cleanup deleted
+    reads the same through each, and a version the remaining log
+    cannot rebuild raises instead of folding a partial history."""
+
+    def test_reads_latest_and_checkpoint_version(self, registered, tmp_path):
+        spark = registered
+        path = str(tmp_path / "lc1")
+        _log_cleaned_table(spark, path)
+        assert _both_counts(spark, path) == (45, 45)
+        assert _both_counts(spark, path, version=3) == (40, 40)
+        # the checkpointed, filtered route folds the same log
+        assert read_delta(
+            spark, path, stats_filter={"id": (0, 100)}
+        ).count() == 45
+
+    def test_deleted_version_raises(self, registered, tmp_path):
+        spark = registered
+        path = str(tmp_path / "lc2")
+        _log_cleaned_table(spark, path)
+        with pytest.raises(ValueError, match="cannot be rebuilt"):
+            read_delta(spark, path, version=1)
+        with pytest.raises(ValueError, match="cannot be rebuilt"):
+            read_delta(spark, path, version=1,
+                       stats_filter={"id": (0, 100)})
+        with pytest.raises(Exception, match="cannot be rebuilt"):
+            spark.read.format("delta_lite").option(
+                "versionAsOf", "1"
+            ).load(path).collect()
+        # the deleted commits' timestamps are gone with them
+        with pytest.raises(ValueError, match="no commit at or before"):
+            read_delta(spark, path, timestamp=250)
+        # a stream cannot replay deleted commits; one that starts past
+        # them plans the remaining commit's files
+        from etl_market_survey_spark.sources.deltalog import _read_actions
+        from etl_market_survey_spark.sources.pyds import (
+            _DeltaLiteStreamReader,
+        )
+
+        with pytest.raises(ValueError, match="log cleanup"):
+            _DeltaLiteStreamReader(path, False, None).partitions(
+                {"version": -1}, {"version": 4}
+            )
+        parts = _DeltaLiteStreamReader(path, False, 4).partitions(
+            {"version": 3}, {"version": 4}
+        )
+        assert len(parts) == sum("add" in a for a in _read_actions(path, 4))
+
+    def test_delta_lite_append_extends_the_log(self, registered, tmp_path):
+        spark = registered
+        path = str(tmp_path / "lc3")
+        _log_cleaned_table(spark, path)
+        spark.range(45, 50).selectExpr("id", "id * 2 AS v").write.format(
+            "delta_lite"
+        ).mode("append").save(path)
+        assert _both_counts(spark, path) == (50, 50)
+        log = os.listdir(os.path.join(path, "_delta_log"))
+        assert f"{0:020d}.json" not in log  # no re-created table
+        assert f"{5:020d}.json" in log
+
+    def test_gap_without_checkpoint_raises(self, registered, tmp_path):
+        spark = registered
+        path = str(tmp_path / "lc4")
+        for i in range(4):
+            write_delta(
+                spark, path,
+                spark.range(i * 10, i * 10 + 10).selectExpr(
+                    "id", "id * 2 AS v"
+                ),
+                commit_ts=100 * (i + 1),
+            )
+        os.remove(os.path.join(path, "_delta_log", f"{1:020d}.json"))
+        with pytest.raises(ValueError, match="commit 1 is missing"):
+            read_delta(spark, path)
+        with pytest.raises(Exception, match="commit 1 is missing"):
+            spark.read.format("delta_lite").load(path).collect()
+        # versions before the gap still rebuild
+        assert _both_counts(spark, path, version=0) == (10, 10)
+
+
+class TestEscapedFileNameDeletionVectors:
+    """A deletion vector on a data file whose basename needs URI
+    escaping: Spark renders ``_metadata.file_path`` URI-encoded, the
+    log holds the raw name, and read_delta's anti-join must key both
+    the same way or deleted rows come back. delta_lite applies DVs per
+    file and is the reference."""
+
+    NAME = "part 0+%25a.parquet"  # space, plus and percent
+
+    @staticmethod
+    def _ext_table(root, files):
+        """files: [(rel, partition values, ids)] written with pyarrow
+        and committed by hand, as an external writer would."""
+        import json
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        os.makedirs(os.path.join(root, "_delta_log"))
+        pcols = sorted({k for _, pv, _ in files for k in pv})
+        fields = [("id", "long"), ("v", "double")] + [
+            (c, "string") for c in pcols
+        ]
+        schema = {"type": "struct", "fields": [
+            {"name": n, "type": t, "nullable": True, "metadata": {}}
+            for n, t in fields
+        ]}
+        actions = [
+            {"commitInfo": {"timestamp": 1000, "operation": "WRITE"}},
+            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+            {"metaData": {
+                "id": "escdv", "format": {"provider": "parquet",
+                                          "options": {}},
+                "schemaString": json.dumps(schema),
+                "partitionColumns": pcols, "configuration": {},
+                "createdTime": 1000,
+            }},
+        ]
+        for rel, pv, ids in files:
+            full = os.path.join(root, rel)
+            os.makedirs(os.path.dirname(full), exist_ok=True)
+            pq.write_table(pa.table({
+                "id": pa.array(ids, pa.int64()),
+                "v": pa.array([i + 0.5 for i in ids], pa.float64()),
+            }), full)
+            actions.append({"add": {
+                "path": rel, "partitionValues": pv,
+                "size": os.path.getsize(full), "modificationTime": 1000,
+                "dataChange": True,
+            }})
+        with open(os.path.join(root, "_delta_log", f"{0:020d}.json"),
+                  "w") as f:
+            f.writelines(json.dumps(a) + "\n" for a in actions)
+
+    def _assert_deleted(self, spark, root, rel, want_ids):
+        add_deletion_vectors(spark, root, {rel: [0]}, commit_ts=2000)
+        got = sorted(r["id"] for r in read_delta(spark, root).collect())
+        ref = sorted(
+            r["id"]
+            for r in spark.read.format("delta_lite").load(root).collect()
+        )
+        assert ref == want_ids
+        assert got == ref
+
+    def test_single_scan(self, registered, tmp_path):
+        root = str(tmp_path / "escdv1")
+        self._ext_table(root, [(self.NAME, {}, [1, 2]),
+                               ("part-1.parquet", {}, [3, 4])])
+        self._assert_deleted(registered, root, self.NAME, [2, 3, 4])
+
+    def test_per_partition_fallback(self, registered, tmp_path):
+        root = str(tmp_path / "escdv2")
+        rel = f"cat=a/{self.NAME}"
+        self._ext_table(root, [(rel, {"cat": "a"}, [1, 2]),
+                               ("cat=b/part-1.parquet", {"cat": "b"},
+                                [3, 4])])
+        self._assert_deleted(registered, root, rel, [2, 3, 4])

@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 from etl_market_survey_spark.sources.skipindex import (
     _load_meta,
     _positions,
+    _probe_cache,
+    _zone_conjunct,
     build_skipping_index,
     prune_files,
     read_with_index,
@@ -73,10 +75,13 @@ def _u64(x: int) -> int:
 
 
 def _py_might_contain(row, col, positions) -> bool:
-    """The prune conjunct for ``=`` re-evaluated in Python over one
-    collected index row: zone interval AND every bloom bit set. The
-    positions come from the SAME JVM xxhash64 expression the build
-    used; only the trivially portable bit test is re-done here."""
+    """The BLOOM half of the ``=`` prune conjunct, re-evaluated in
+    Python over one collected index row: every probe bit set. The zone
+    interval is not checked here (the lake's zone maps cover every
+    probe). The positions come from the SAME JVM xxhash64 expression
+    the build used; only the trivially portable bit test is re-done,
+    and a sample is checked against the production ``_zone_conjunct``
+    Column."""
     bloom = row[f"{col}__bloom"] or {}
     for p in positions:
         if not _u64(bloom.get(p >> 6, 0)) & (1 << (p & 63)):
@@ -122,6 +127,26 @@ def test_no_false_negatives_over_many_probes(spark, lake_ro):
         if not any(_py_might_contain(ir, "k", r["kp"]) for ir in idx_rows)
     ]
     assert k_misses == [], f"bloom false negatives at {k_misses[:10]}"
+    # the production expression stays authoritative: for a sample of
+    # probes, the JVM _zone_conjunct Column (zone interval AND bloom
+    # bits) over the index, in one batched job, keeps exactly the files
+    # the Python replay keeps
+    sample = [("k", "=", k) for k in ks[::25]]
+    pos_cache = _probe_cache(spark, sample, meta)
+    jvm_rows = spark.read.parquet(idx).select(
+        "file",
+        *[_zone_conjunct(spark, p, meta, pos_cache).alias(f"m{i}")
+          for i, p in enumerate(sample)],
+    ).collect()
+    k_pos = {r["k"]: r["kp"] for r in pos_rows}
+    for i, (_, _, k) in enumerate(sample):
+        jvm = {r["file"] for r in jvm_rows if r[f"m{i}"]}
+        py = {
+            ir["file"] for ir in idx_rows
+            if ir["k__min"] <= k <= ir["k__max"]
+            and _py_might_contain(ir, "k", k_pos[k])
+        }
+        assert jvm and py == jvm, f"probe k={k}: jvm {jvm} vs py {py}"
     # string tags: per-tag TRUE file set must be a subset of that tag's
     # bloom-surviving file set; the public read path is exercised on a few.
     truth_rows = (

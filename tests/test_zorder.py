@@ -196,12 +196,12 @@ def test_incremental_zorder_rewrites_only_new_files(spark, sf_dir, tmp_path):
     write_delta(spark, path, o.filter("k % 2 = 0").orderBy("k"),
                 commit_ts=100)
     optimize_zorder(spark, path, ["k", "c"], n_files=8, commit_ts=200)
-    gen1 = set(load_snapshot(spark, path).adds)
+    gen1 = set(load_snapshot(path).adds)
     write_delta(spark, path, o.filter("k % 2 = 1"), mode="append",
                 commit_ts=300)
     v = optimize_zorder(spark, path, ["k", "c"], n_files=4, commit_ts=400,
                         incremental=True)
-    snap = load_snapshot(spark, path)
+    snap = load_snapshot(path)
     # the 8 first-generation curve files are untouched; only the
     # appended file was replaced by 4 new curve files
     assert gen1 <= set(snap.adds)
@@ -219,6 +219,6 @@ def test_incremental_zorder_rewrites_only_new_files(spark, sf_dir, tmp_path):
     v2 = optimize_zorder(spark, path, ["c", "tp"], n_files=6,
                          commit_ts=500, incremental=True)
     assert v2 == v + 1
-    snap2 = load_snapshot(spark, path)
+    snap2 = load_snapshot(path)
     assert len(snap2.adds) == 6  # whole table rewritten
     assert read_delta(spark, path).count() == o.count()
