@@ -1,7 +1,10 @@
-.PHONY: test gate audit bench all
+.PHONY: test benchtest gate audit bench all
 
 test:
 	python -m pytest tests/ -q
+
+benchtest:
+	python -m pytest perfbench/tests -q
 
 gate:
 	python tools/oracle_check.py
@@ -12,4 +15,4 @@ audit:
 bench:
 	python bench.py
 
-all: test gate audit bench
+all: test benchtest gate audit bench

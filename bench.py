@@ -10,7 +10,7 @@ runs: 3 base runs per query taken as ROUND-ROBIN PASSES over the whole
 headline (pass 1 of every query, then pass 2, then pass 3), topped up to
 5 for any query whose 3-run max/min spread exceeds 1.5x, with the top-up
 runs likewise interleaved across the flagged set (VERDICT r5 item 3; the
-ABBA lesson from tools/ab_pagerank.py generalized). Round-robin means a
+ABBA lesson of interleaved A/B runs generalized). Round-robin means a
 time-localized ambient-load window poisons at most ONE run of each query
 it overlaps — sequential per-query runs gave the median no clean sample
 for every query scheduled inside the window.  The per-query

@@ -27,7 +27,7 @@ beyond-reference scope.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -90,13 +90,16 @@ def connected_components(
     of 3 actions per propagation round."""
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    und = und.localCheckpoint(eager=True)
-    gate = und.agg(
+    # the size gate rides on the checkpoint's own job (no separate agg)
+    obs = Observation()
+    und = und.observe(
+        obs,
         F.count(F.lit(1)).alias("n"),
         F.sum(
             (F.col("a").isNull() | F.col("b").isNull()).cast("int")
         ).alias("nulls"),
-    ).first()
+    ).localCheckpoint(eager=True)
+    gate = obs.get
     # null node ids keep the distributed path (they don't order in the
     # driver union-find; join semantics handle them as before)
     if gate["n"] <= _DRIVER_UF_MAX_EDGES and not (gate["nulls"] or 0):

@@ -2371,14 +2371,12 @@ def q255_weighted_pagerank(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# q257 — lakehouse snapshot table + time travel (sources/lakehouse,
-# VERDICT r3 item 8 / ROADMAP 22/26): a three-snapshot table is built
-# from orders on the Iceberg-shaped JSON-manifest protocol (append /
-# append / delete-partition — immutable data files, versioned manifests,
-# atomic current pointer), then read back at v1 (version pin), v2
-# (as-of-timestamp travel), and v3 (current, with driver-side manifest
-# partition pruning to two priorities). Each read aggregates per
-# priority; the oracle rebuilds every version's logical content from
+# q257 — lakehouse table + time travel on Delta (sources/deltalog): a
+# three-commit table is built from orders (append / append /
+# delete-partition — immutable data files, versioned JSON log), then read
+# back at v0 (version pin), v1 (timestamp travel) and v2 (current, with
+# driver-side partition pruning to two priorities). Each read aggregates
+# per priority; the oracle rebuilds every version's logical content from
 # orders with pure SQL. Proves: time travel returns EXACTLY the old
 # content after later commits, deletes never touch files, and pruning
 # is content-correct.
@@ -2411,7 +2409,7 @@ def q257_lakehouse_time_travel(spark, sf_dir):
     import hashlib
     import shutil
 
-    from ..sources.lakehouse import commit_snapshot, read_snapshot
+    from ..sources.deltalog import delete_where, read_delta, write_delta
 
     # rebuild the table deterministically per sf_dir (idempotent gate)
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
@@ -2419,18 +2417,11 @@ def q257_lakehouse_time_travel(spark, sf_dir):
     shutil.rmtree(path, ignore_errors=True)
 
     o = _orders_kpt(spark, sf_dir)  # (k, pr, tp)
-    commit_snapshot(
-        spark, path, o.filter(F.col("k") % 3 == 0),
-        operation="append", partition_col="pr", commit_ts=100, stat_cols=["k"],
-    )
-    commit_snapshot(
-        spark, path, o.filter(F.col("k") % 3 == 1),
-        operation="append", partition_col="pr", commit_ts=200, stat_cols=["k"],
-    )
-    commit_snapshot(
-        spark, path, None,
-        operation="delete", delete_partition_values=["1-URGENT"], commit_ts=300,
-    )
+    write_delta(spark, path, o.filter(F.col("k") % 3 == 0),
+                partition_col="pr", commit_ts=100)
+    write_delta(spark, path, o.filter(F.col("k") % 3 == 1),
+                partition_col="pr", commit_ts=200)
+    delete_where(spark, path, partition_values=["1-URGENT"], commit_ts=300)
 
     def agg(df, tag_):
         return df.groupBy(F.col("pr").alias("o_orderpriority")).agg(
@@ -2440,11 +2431,9 @@ def q257_lakehouse_time_travel(spark, sf_dir):
             .alias("total_cents"),
         ).select(F.lit(tag_).alias("version_tag"), "*")
 
-    v1 = read_snapshot(spark, path, version=1)
-    v2 = read_snapshot(spark, path, as_of_ts=250)  # newest commit_ts <= 250
-    v3 = read_snapshot(
-        spark, path, partition_filter={"pr": ["2-HIGH", "5-LOW"]}
-    )
+    v1 = read_delta(spark, path, version=0)
+    v2 = read_delta(spark, path, timestamp=250)  # newest commit_ts <= 250
+    v3 = read_delta(spark, path, partition_filter={"pr": ["2-HIGH", "5-LOW"]})
     return (
         agg(v1, "v1")
         .unionByName(agg(v2, "v2_asof"))

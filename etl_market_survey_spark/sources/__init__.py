@@ -1,13 +1,12 @@
 """Sources & sinks (SURVEY §2.1).
 
 Beyond the reference's formats (parquet/CSV/SQLite/xlsx/XML/text
-sidecars), three lakehouse/interchange protocols speak their REAL wire
-formats with zero external jars:
+sidecars), these lakehouse/interchange formats are spoken on their REAL
+wire formats with zero external jars:
 
-- lakehouse — the custom JSON-manifest snapshot protocol (versions,
-              time travel, zone maps, compaction, change feeds).
 - deltalog  — Delta Lake ``_delta_log`` (JSON actions, checkpoints,
-              timestampAsOf, OPTIMIZE compaction, VACUUM).
+              timestampAsOf, partition/stats pruning, OPTIMIZE
+              compaction, change data feed, VACUUM).
 - iceberg   — Iceberg v1 (JSON metadata + genuine Avro manifests).
 - avro      — pure-Python Avro container codec + jar-less DISTRIBUTED
               scan (binaryFile + mapInPandas).

@@ -41,8 +41,7 @@ timestamp) is choosing where the fold stops; data files are immutable.
 
 Reference parity: upgrades the reference's re-scan-the-directory catalog
 (SengerM/ETL_market_survey utils.py path walks) to versioned,
-interoperable Delta semantics. Sibling of :mod:`.lakehouse` (the
-Iceberg-shaped custom protocol); this module speaks the wire format
+interoperable Delta semantics; this module speaks the wire format
 other engines write.
 """
 
@@ -1110,7 +1109,7 @@ def write_delta(
     advances.
 
     Deterministic by contract: ``commit_ts`` is caller-supplied (the
-    same rule as :func:`..sources.lakehouse.commit_snapshot`), so time
+    same rule as the streaming sinks' explicit batch ids), so time
     travel is replayable in tests and oracles. ``mode='overwrite'``
     emits remove actions for every previously-live file.
 
@@ -2745,10 +2744,18 @@ def read_delta_changes(
 
     versions = _list_commit_versions(path)
     end = versions[-1] if ending_version is None else ending_version
-    wanted = [v for v in versions if starting_version <= v <= end]
+    wanted = list(range(starting_version, end + 1))
     if not wanted:
         raise ValueError(
             f"no commits in [{starting_version}, {end}] (have {versions})"
+        )
+    # every commit in the range feeds the change set; a missing one (log
+    # cleanup) would silently drop its rows, so refuse like _log_segment
+    missing = sorted(set(wanted) - set(versions))
+    if missing:
+        raise ValueError(
+            f"change feed [{starting_version}, {end}] of {path} cannot be "
+            f"built: commit {missing[0]} is missing from {_LOG_DIR}"
         )
     snap_end = load_snapshot(path, version=end)
     snap_end.check_reader_support()

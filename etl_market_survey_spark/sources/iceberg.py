@@ -21,7 +21,7 @@ by id, or newest with timestamp-ms <= asof) -> its manifest list ->
 manifests -> live data-file entries (status != DELETED) -> parquet
 scan. All metadata is driver-side and metadata-sized; partition and
 min/max pruning drop files BEFORE Spark lists anything (same win as
-:mod:`.deltalog` / :mod:`.lakehouse`). Unlike Delta, Iceberg data
+:mod:`.deltalog`). Unlike Delta, Iceberg data
 files physically CONTAIN identity-partition columns, so no literal
 re-attachment is needed.
 

@@ -1,13 +1,13 @@
-"""Worked example — the lakehouse table lifecycle end-to-end, the way a
-daily ingestion pipeline runs it (sources/lakehouse):
+"""Worked example — the lakehouse table lifecycle end-to-end on a Delta
+table, the way a daily ingestion pipeline runs it (sources/deltalog):
 
-  1. day-1 append of orders partitioned by priority       (commit v1)
-  2. day-2 incremental append                             (commit v2)
-  3. GDPR-style partition delete                          (commit v3)
-  4. small-file compaction — content identical, fewer
-     files, old versions still readable                   (commit v4)
-  5. reads: current, version pin, as-of-timestamp travel,
-     manifest partition pruning, zone-map bounds skipping
+  1. day-1 append of orders partitioned by priority       (commit v0)
+  2. day-2 incremental append                             (commit v1)
+  3. GDPR-style partition delete                          (commit v2)
+  4. OPTIMIZE compaction — content identical, fewer
+     files, old versions still readable                   (commit v3)
+  5. reads: current, version pin, timestamp travel,
+     partition pruning, min/max stats skipping
   6. audit: table history + row counts per version
 
 Run: python examples/lakehouse_pipeline.py [sf_dir]
@@ -22,11 +22,13 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, __file__.rsplit("/", 2)[0])
 
-from etl_market_survey_spark.sources.lakehouse import (
-    commit_snapshot,
-    compact_snapshot,
-    read_snapshot,
-    table_history,
+from etl_market_survey_spark.sources.deltalog import (
+    compact,
+    count_rows_delta,
+    delete_where,
+    delta_history,
+    read_delta,
+    write_delta,
 )
 
 PATH = "/tmp/spark_graft_lakehouse_example"
@@ -41,44 +43,39 @@ def main(spark, sf_dir: str = "/root/testdata/sf0.01"):
     )
 
     # 1-2: two daily appends (deterministic halves of the feed)
-    commit_snapshot(
-        spark, PATH, orders.filter(F.col("k") % 2 == 0),
-        operation="append", partition_col="pr", commit_ts=100, stat_cols=["k"],
-    )
-    commit_snapshot(
-        spark, PATH, orders.filter(F.col("k") % 2 == 1),
-        operation="append", partition_col="pr", commit_ts=200, stat_cols=["k"],
-    )
-    # 3: drop a partition (manifest-only — data files untouched)
-    commit_snapshot(
-        spark, PATH, None,
-        operation="delete", delete_partition_values=["1-URGENT"], commit_ts=300,
-    )
+    write_delta(spark, PATH, orders.filter(F.col("k") % 2 == 0),
+                partition_col="pr", commit_ts=100)
+    write_delta(spark, PATH, orders.filter(F.col("k") % 2 == 1),
+                partition_col="pr", commit_ts=200)
+    # 3: drop a partition (log-only — data files untouched)
+    delete_where(spark, PATH, partition_values=["1-URGENT"], commit_ts=300)
     # 4: compaction — same rows, fewer files
-    pre = read_snapshot(spark, PATH)
+    pre = read_delta(spark, PATH)
     pre_files, pre_rows = len(pre.inputFiles()), pre.count()
-    compact_snapshot(spark, PATH, target_rows=10**6, commit_ts=400, stat_cols=["k"])
-    post = read_snapshot(spark, PATH)
+    compact(spark, PATH, commit_ts=400)
+    post = read_delta(spark, PATH)
     assert post.count() == pre_rows
+    assert len(post.inputFiles()) < pre_files
     print(f"compaction: {pre_files} files -> {len(post.inputFiles())}, "
           f"{pre_rows} rows unchanged")
 
     # 5: the read surface
-    v1 = read_snapshot(spark, PATH, version=1)
-    asof = read_snapshot(spark, PATH, as_of_ts=250)  # sees v2
-    pruned = read_snapshot(spark, PATH, partition_filter={"pr": "5-LOW"})
-    probe = read_snapshot(spark, PATH, bounds_filter={"k": 42})
-    print(f"v1 rows={v1.count()} asof(250) rows={asof.count()} "
+    v0 = read_delta(spark, PATH, version=0)
+    asof = read_delta(spark, PATH, timestamp=250)  # sees v1
+    pruned = read_delta(spark, PATH, partition_filter={"pr": ["5-LOW"]})
+    probe = read_delta(spark, PATH, stats_filter={"k": (42, 42)})
+    print(f"v0 rows={v0.count()} asof(250) rows={asof.count()} "
           f"5-LOW rows={pruned.count()} "
-          f"zone-map probe files={len(probe.inputFiles())}")
+          f"stats probe files={len(probe.inputFiles())}")
     # time travel still shows the deleted partition
     assert asof.filter(F.col("pr") == "1-URGENT").count() > 0
     assert post.filter(F.col("pr") == "1-URGENT").count() == 0
 
     # 6: audit trail
-    for h in table_history(PATH):
-        print(f"v{h['version']} {h['operation']:<9} files={h['n_files']:<3} "
-              f"rows={h['row_count']}")
+    for h in delta_history(PATH):
+        print(f"v{h['version']} {h['operation']:<8} +{h['num_added']:<3} "
+              f"-{h['num_removed']:<3} "
+              f"rows={count_rows_delta(spark, PATH, version=h['version'])}")
     return post
 
 

@@ -142,6 +142,8 @@ class TestHandmadeLog:
         assert ts.count() == 4
         with pytest.raises(ValueError):
             read_delta(spark, root, timestamp=500)
+        with pytest.raises(ValueError, match="not both"):
+            read_delta(spark, root, version=0, timestamp=1500)
 
     def test_partition_values_come_from_log(self, spark, tmp_path):
         # data files do NOT contain `cat`; reader must attach it typed
@@ -157,6 +159,10 @@ class TestHandmadeLog:
         # scan must reference only the cat=a file
         files = df.inputFiles()
         assert files and all("cat=a" in f for f in files)
+        # pruning to nothing keeps the table schema
+        empty = read_delta(spark, root, partition_filter={"cat": ["zzz"]})
+        assert empty.count() == 0
+        assert [f.name for f in empty.schema.fields] == ["id", "v", "cat"]
 
     def test_stats_pruning(self, spark, tmp_path):
         root = _handmade_table(tmp_path)
@@ -165,6 +171,9 @@ class TestHandmadeLog:
         files = df.inputFiles()
         assert len(files) == 1 and "part-2" in files[0]
         assert {r["id"] for r in df.collect()} == {5}
+        # a column without recorded stats never prunes
+        keep = read_delta(spark, root, stats_filter={"cat": ("zzz", "zzz")})
+        assert keep.count() == 3
 
     def test_history(self, spark, tmp_path):
         root = _handmade_table(tmp_path)
@@ -1053,6 +1062,37 @@ class TestChangeDataFeed:
         rv = restore_delta(spark, path, v0, commit_ts=300)
         feed = read_delta_changes(spark, path, rv, rv).collect()
         assert {(r["_change_type"], r["k"]) for r in feed} == {("insert", 1)}
+
+    def test_missing_commit_in_range_raises(self, spark, tmp_path):
+        """Log cleanup can leave a gap inside a feed's range; the feed
+        must refuse it instead of returning one without the lost
+        commit's rows. Ranges the remaining log covers still read, and a
+        partition delete shows up as its partition's rows deleted."""
+        from etl_market_survey_spark.sources.deltalog import (
+            read_delta_changes,
+        )
+
+        path = str(tmp_path / "cdf6")
+        for i in range(5):  # v0..v4, checkpoint at v3
+            write_delta(spark, path,
+                        spark.range(i * 2, i * 2 + 2).select(
+                            F.col("id").alias("k"),
+                            (F.col("id") % 2).cast("string").alias("p")),
+                        partition_col="p", commit_ts=100 * (i + 1))
+            if i == 3:
+                assert write_checkpoint(spark, path) == 3
+        delete_where(spark, path, partition_values=["1"], commit_ts=600)  # v5
+        os.remove(os.path.join(path, "_delta_log", f"{1:020d}.json"))
+
+        with pytest.raises(ValueError, match="commit 1 is missing"):
+            read_delta_changes(spark, path, 0)
+        feed = read_delta_changes(spark, path, 4).collect()
+        assert {(r["_commit_version"], r["_change_type"], r["k"])
+                for r in feed} == {
+            (4, "insert", 8), (4, "insert", 9),
+            (5, "delete", 1), (5, "delete", 3), (5, "delete", 5),
+            (5, "delete", 7), (5, "delete", 9),
+        }
 
 
 class TestOptimisticConcurrency:
