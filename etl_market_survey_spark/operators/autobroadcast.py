@@ -1,6 +1,6 @@
-"""Size-gated choice between broadcast and shuffle rounds for the
-iterative graph operators (guide §3.1: broadcast the side that fits —
-decided from data size, not a per-query literal).
+"""Size-gated choice between broadcast and shuffle layouts (guide §3.1:
+broadcast the side that fits — decided from data size, not a per-query
+literal).
 
 The pagerank/LPA/BFS families run per-round joins against a
 nodes-sized state table. Broadcasting that table makes each round one
@@ -12,6 +12,11 @@ pennies) against ``spark.sql.autoBroadcastJoinThreshold``, so the same
 query text picks shuffle rounds on a billion-node graph and broadcast
 rounds on a dims-sized one. Explicit ``True``/``False`` still
 overrides.
+
+``plan_fits_broadcast`` is the same gate for an operator that has no row
+count, only a DataFrame: it reads the plan's own size estimate (what the
+join planner compares against the same threshold), which runs no job.
+``bootstrap_hash`` uses it to pick its replica-partitioned layout.
 """
 
 from __future__ import annotations
@@ -47,12 +52,27 @@ def _parse_bytes(v: str) -> int:
     return -1
 
 
+def _threshold(spark) -> int:
+    return _parse_bytes(
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    )
+
+
 def rows_fit_broadcast(spark, n_rows: int, row_bytes: int = 64) -> bool:
     """True when an ``n_rows`` state table (estimated ``row_bytes`` per
     row — 64 covers a (long, long) row with unsafe-row and map
     overhead) fits ``spark.sql.autoBroadcastJoinThreshold``. A
     threshold of -1 (broadcast disabled) gates to shuffle rounds."""
-    thr = _parse_bytes(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    )
+    thr = _threshold(spark)
     return thr > 0 and n_rows * row_bytes <= thr
+
+
+def plan_fits_broadcast(df) -> bool:
+    """True when ``df``'s optimized-plan size estimate
+    (``stats().sizeInBytes()``) fits ``spark.sql.autoBroadcastJoinThreshold``.
+    Planning only — no Spark job runs. Threshold -1 gates to False."""
+    thr = _threshold(df.sparkSession)
+    if thr <= 0:
+        return False
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return int(str(size)) <= thr

@@ -19,10 +19,35 @@ the survey calls for (§5.5 determinism discipline):
   Poisson is the standard large-n bootstrap equivalence); the statistics
   (replica std error) are equivalent at bootstrap sample sizes.
 
-At 100 TB: ``bootstrap_hash`` is the default — all replicas materialize as
-one ``explode`` (row blowup = n_replicas on average) feeding a single
-grouped aggregation; no per-group Python and no driver loop (the
-reference's 33-iteration loop becomes a replica dimension, SURVEY §3.1.4).
+``bootstrap_hash`` has two layouts with identical output rows and column
+order; it picks one from the input's size, with no option:
+
+- **replica-partitioned** (input fits a broadcast — the optimized plan's
+  ``sizeInBytes`` estimate is within ``spark.sql.autoBroadcastJoinThreshold``,
+  ``autobroadcast.plan_fits_broadcast``, no job): the replica ids are a
+  relation that scans nothing (``SELECT explode(sequence(0, n-1))``),
+  hash-partitioned on the replica column into
+  ``max(n_replicas, defaultParallelism)`` slices and cross-joined to the
+  broadcast input (``BroadcastNestedLoopJoin``, which keeps the streamed
+  side's partitioning). The output is therefore already
+  ``HashPartitioning(replica)``, which satisfies a clustering on any
+  superset of the replica key: a downstream ``groupBy(..., replica)``
+  (e.g. the Δt-grid MAD) and a ``Window.partitionBy(replica)`` (the
+  per-replica argmin) plan no exchange. The cost is a parallelism cap: the
+  stage has one busy task per distinct replica hash — 33 replicas hash
+  into 20 of 33 slices (19 of 32), at most 3 replicas per slice — and
+  every task scans the whole broadcast input. A global sort right after
+  such an exchange-free chain range-samples it by running the whole
+  chain once more; sort the small result in one partition instead
+  (``repartition(1).sortWithinPartitions``, as q26 and q38 do).
+- **explode-on-data** (input too big, or broadcast disabled): every input
+  row explodes into its replicas in place (row blowup = n_replicas on
+  average) and keeps the input's partitioning; the downstream grouped
+  aggregation shuffles on its keys.
+
+At 100 TB the explode layout is the one that runs: no per-group Python
+and no driver loop (the reference's 33-iteration loop becomes a replica
+dimension, SURVEY §3.1.4), feeding a single grouped aggregation.
 """
 
 from __future__ import annotations
@@ -33,6 +58,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .autobroadcast import plan_fits_broadcast
 
 # LCG-ish mix constants (Knuth multiplicative + Numerical Recipes). The
 # key is folded mod 2^31 BEFORE the multiply, so the arithmetic is
@@ -89,9 +116,18 @@ def bootstrap_hash(
 ) -> DataFrame:
     """Poisson bootstrap: output = input rows replicated per replica with a
     deterministic count; adds ``replica`` int column. Row r appears
-    count(key, replica) times in each replica."""
-    rep = F.explode(F.sequence(F.lit(0), F.lit(n_replicas - 1))).alias(id_col)
-    with_rep = df.select("*", rep)
+    count(key, replica) times in each replica. Replica-partitioned when
+    ``df`` fits a broadcast (module docstring)."""
+    spark = df.sparkSession
+    if plan_fits_broadcast(df):
+        n_slices = max(n_replicas, spark.sparkContext.defaultParallelism)
+        reps = spark.sql(
+            f"SELECT explode(sequence(0, {n_replicas - 1})) AS `{id_col}`"
+        ).repartition(n_slices, id_col)
+        with_rep = F.broadcast(df).crossJoin(reps)
+    else:
+        rep = F.explode(F.sequence(F.lit(0), F.lit(n_replicas - 1))).alias(id_col)
+        with_rep = df.select("*", rep)
     cnt = poisson_count_expr(F.col(key_col), F.col(id_col))
     return (
         with_rep.withColumn("_cnt", cnt)

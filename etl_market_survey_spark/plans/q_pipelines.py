@@ -126,9 +126,12 @@ def q38_time_resolution_pipeline(spark, sf_dir):
         .filter(F.col("t1").isNotNull() & F.col("t2").isNotNull())
     )
     resampled = bootstrap_hash(pulses, "l_orderkey", _N_REP)
-    # Δt grid with the replica dimension carried through (the whole
-    # bootstrap x grid x MAD x argmin chain is ONE lazy plan / one shuffle
-    # on (replica, k1, k2)).
+    # Δt grid with the replica dimension carried through: the whole
+    # bootstrap x grid x MAD x argmin chain is ONE lazy plan. When the
+    # pulses fit a broadcast, bootstrap_hash's output is already
+    # hash-partitioned on replica, so the (k1, k2, replica) MAD and the
+    # per-replica window add no exchange; otherwise it is one shuffle on
+    # (k1, k2, replica) plus one on replica.
     ks = F.array([F.lit(k) for k in range(10, 100, 10)])
     dt = (
         resampled.withColumn("k_1 (%)", F.explode(ks))
@@ -147,6 +150,9 @@ def q38_time_resolution_pipeline(spark, sf_dir):
     w = Window.partitionBy("replica").orderBy(
         F.col("MAD(Δt) k_MADstd (s)").asc(), F.col("k_1 (%)"), F.col("k_2 (%)")
     )
+    # One row per replica, sorted in one partition: a global orderBy would
+    # range-sample its input by running the whole fused bootstrap-to-argmin
+    # stage once more when that stage has no exchange.
     return (
         mad.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
@@ -156,5 +162,6 @@ def q38_time_resolution_pipeline(spark, sf_dir):
             "k_2 (%)",
             F.col("MAD(Δt) k_MADstd (s)").alias("kmad"),
         )
-        .orderBy("replica")
+        .repartition(1)
+        .sortWithinPartitions("replica")
     )

@@ -60,6 +60,9 @@ def q26_bootstrap_hash(spark, sf_dir):
         + F.floor(F.col("l_quantity")).cast("bigint"),
     )
     boot = bootstrap_hash(li, "_rowkey", _N_REP)
+    # sorted in one partition: when the grouping needs no exchange (the
+    # replica-partitioned layout), a global orderBy would range-sample its
+    # input by running the bootstrap stage once more
     return (
         boot.groupBy("l_returnflag", "replica")
         .agg(
@@ -69,7 +72,8 @@ def q26_bootstrap_hash(spark, sf_dir):
                 / 1000000.0
             ).alias("sum_qty"),
         )
-        .orderBy("l_returnflag", "replica")
+        .repartition(1)
+        .sortWithinPartitions("l_returnflag", "replica")
     )
 
 

@@ -16,9 +16,11 @@ Run: python examples/beta_scan_pipeline.py [output_dir]
 
 from __future__ import annotations
 
+import statistics
 import sys
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
 
 sys.path.insert(0, __file__.rsplit("/", 2)[0])
@@ -39,7 +41,9 @@ TRUE_JITTER = 40e-12  # per-device; Δt jitter = sqrt(2) * this
 
 def synthesize_measurement(spark, n_triggers: int = 4000, seed: int = 42):
     """FIXTURES §1-shaped frame: one row per (n_trigger, device_name) with
-    Amplitude, Collected charge, Noise and t_10..t_90 CFD times."""
+    Amplitude, Collected charge, Noise and t_10..t_90 CFD times. Built from
+    pandas (columns taken by position) through Arrow: a local relation, so
+    writing it runs no Python-worker tasks."""
     rng = np.random.default_rng(seed)
     rows = []
     for dev, (mpv, xi, sigma_q, t0) in {
@@ -62,7 +66,7 @@ def synthesize_measurement(spark, n_triggers: int = 4000, seed: int = 42):
             )
     tk_fields = ", ".join(f"`t_{k} (s)` double" for k in THRESHOLDS)
     return spark.createDataFrame(
-        rows,
+        pd.DataFrame(rows),
         f"n_trigger long, device_name string, `Amplitude (V)` double, "
         f"`Collected charge (V s)` double, `Noise (V)` double, {tk_fields}",
     )
@@ -96,12 +100,14 @@ def _run(spark, out_dir: str):
 
     @pipe.stage("clean", deps=["measured_data"])
     def clean(s, inputs):
+        # pandas through Arrow plans a local relation: collecting the cuts
+        # runs no job (a Python list plans an RDD scan, one job)
         cuts = s.createDataFrame(
-            [
+            pd.DataFrame([
                 ("Amplitude (V)", "MS07", "lower", 0.05),
                 ("Amplitude (V)", "MS08", "lower", 0.05),
                 ("Noise (V)", "MS07", "higher", 3e-3),
-            ],
+            ]),
             "variable string, device_name string, `cut type` string, `cut value` double",
         )
         accepted = apply_cuts(inputs["measured_data"], cuts)
@@ -118,21 +124,29 @@ def _run(spark, out_dir: str):
 
     @pipe.stage("time_resolution", deps=["clean"])
     def time_resolution(s, inputs):
-        # wide per trigger: t_k columns per device (R1), complete pairs only
+        # wide per trigger: t_k columns per device (R1), complete pairs only.
+        # One groupBy of first(when(device == d, t)) — the shape .pivot()
+        # rewrites to anyway, but .pivot() plans it as two aggregates
+        # (two exchanges) where this plans one.
         tk_cols = [f"t_{k} (s)" for k in THRESHOLDS]
+        dev = F.col("device_name")
         wide = (
             inputs["clean"]
             .filter("accepted")
             .groupBy("n_trigger")
-            .pivot("device_name", ["MS07", "MS08"])
-            .agg(*[F.first(f"`{c}`").alias(c) for c in tk_cols])
+            .agg(*[
+                F.first(F.when(dev == d, F.col(f"`{c}`")), ignorenulls=True).alias(f"{d}_{c}")
+                for d in ("MS07", "MS08")
+                for c in tk_cols
+            ])
             .na.drop()
         )
-        # the grid explode below fans every wide row out 81-162x, so the
-        # explode+partial-MAD map stage inherits the pivot's few shuffle
-        # partitions unless the (tiny) wide frame is sliced first —
-        # measured 2.6x on the whole stage, rows bit-identical
-        wide = wide.repartition(max(32, s.sparkContext.defaultParallelism))
+        # When the wide frame fits a broadcast, as it does at this example's
+        # trigger counts, bootstrap_hash slices the replica ids, not the
+        # data: its output is hash-partitioned on replica into
+        # max(33, defaultParallelism) slices, and the grid explode, MAD
+        # aggregate and per-replica argmin below all run in that one stage
+        # with no exchange (bootstrap module docstring).
         boot = bootstrap_hash(wide, "n_trigger", n_replicas=33)
         # the 81-pair Δt grid (J4): both devices' thresholds live on the
         # SAME wide row, so a threshold->time map + double explode builds
@@ -169,8 +183,10 @@ def _run(spark, out_dir: str):
         w = Window.partitionBy("replica").orderBy(
             F.col("MAD(Δt) k_MADstd (s)").asc(), "k_1 (%)", "k_2 (%)"
         )
+        # 33 rows: one checkpoint file, so the read below is one task
         return (
             mad.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
+            .repartition(1)
         )
 
     charge = pipe.run("collected_charge")
@@ -179,24 +195,24 @@ def _run(spark, out_dir: str):
     write_csv(charge, f"{out_dir}/collected_charge_results")
     write_csv(tr, f"{out_dir}/time_resolution_results")
 
-    # replica spread = the bootstrap error bar (U6). Values are O(1e-11):
-    # plain float aggregates (the deterministic d* kernel truncates at 1e-6
-    # — wrong tool at picosecond scale).
-    row = tr.agg(
-        F.median("`MAD(Δt) k_MADstd (s)`").alias("m"),
-        F.stddev("`MAD(Δt) k_MADstd (s)`").alias("e"),
-    ).collect()[0]
+    # replica spread = the bootstrap error bar (U6). Values are O(1e-11),
+    # below the deterministic d* kernel's 1e-6 resolution, and a Spark
+    # float sum depends on row order. So the 33 values come to the driver
+    # (one job) and statistics' exactly rounded median and sample std run
+    # on the sorted list: the same values give the same bits in any order.
+    mads = sorted(r[0] for r in tr.select("`MAD(Δt) k_MADstd (s)`").collect())
+    m, e = statistics.median(mads), statistics.stdev(mads)
     write_text_sidecar(
         {
-            "time resolution (s)": row["m"] / (2**0.5),
-            "time resolution (s) error": row["e"] / (2**0.5),
+            "time resolution (s)": m / (2**0.5),
+            "time resolution (s) error": e / (2**0.5),
         },
         f"{out_dir}/time_resolution.txt",
     )
     print(f"charge fits:\n{charge.toPandas()}")
-    print(f"time resolution: {row['m'] / 2**0.5:.3e} s ± {row['e'] / 2**0.5:.1e} s "
+    print(f"time resolution: {m / 2**0.5:.3e} s ± {e / 2**0.5:.1e} s "
           f"(true per-device jitter {TRUE_JITTER:.1e} s)")
-    return row["m"] / 2**0.5
+    return m / 2**0.5
 
 
 if __name__ == "__main__":

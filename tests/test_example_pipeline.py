@@ -2,8 +2,10 @@
 recovers the synthesized physics within tolerance."""
 
 import os
+import statistics
 import sys
 
+import pandas as pd
 import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
@@ -30,6 +32,19 @@ def test_beta_scan_example_recovers_jitter(tmp_path, spark):
     # sinks exist: parquet checkpoints + csv + sidecar
     assert os.path.exists(tmp_path / "out" / "clean" / "_SUCCESS")
     assert os.path.exists(tmp_path / "out" / "time_resolution.txt")
+    # the error bar is the exact sample std of the written per-replica
+    # values, whatever order the checkpoint hands them back in
+    res = tmp_path / "out" / "time_resolution_results"
+    mads = pd.concat(
+        pd.read_csv(f, float_precision="round_trip") for f in res.glob("part-*.csv")
+    )["MAD(Δt) k_MADstd (s)"]
+    assert len(mads) == 33
+    sidecar = dict(
+        line.split(" = ") for line in (tmp_path / "out" / "time_resolution.txt").read_text().splitlines()
+    )
+    assert float(sidecar["time resolution (s) error"]) == statistics.stdev(mads.tolist()) / 2**0.5
+    parts = list((tmp_path / "out" / "time_resolution").glob("part-*"))
+    assert len(parts) == 1  # the 33-row checkpoint is one file
     # memoized rerun is cheap and identical
     resolution2 = main(str(tmp_path / "out"))
     assert resolution2 == resolution

@@ -6,6 +6,7 @@ import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from etl_market_survey_spark.fits.grouped import (
     fit_erf_xy,
@@ -13,7 +14,9 @@ from etl_market_survey_spark.fits.grouped import (
     fit_langauss_samples,
 )
 from etl_market_survey_spark.fits.models import erf_model
+from etl_market_survey_spark.operators.autobroadcast import plan_fits_broadcast
 from etl_market_survey_spark.operators.bootstrap import bootstrap_exact, bootstrap_hash
+from etl_market_survey_spark.operators.delta_t import mad_per_threshold_pair
 from etl_market_survey_spark.operators.interpolate import crossing_x
 
 
@@ -99,6 +102,102 @@ def test_bootstrap_hash_is_deterministic_and_poisson_sized(spark):
     assert a == b  # deterministic
     for row in a:  # Poisson(1): replica size ~ n +- few sqrt(n)
         assert row["count"] == pytest.approx(2000, abs=5 * np.sqrt(2000))
+
+
+_THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+
+
+def _q38_chain(spark):
+    """q38's shape: bootstrap -> Δt grid -> MAD per (k1, k2, replica) ->
+    row_number argmin per replica."""
+    pulses = spark.range(0, 300).select(
+        F.col("id").alias("k"),
+        ((F.col("id") * 7919) % 1009 / 10.0).alias("t1"),
+        ((F.col("id") * 104729) % 1013 / 10.0).alias("t2"),
+    )
+    boot = bootstrap_hash(pulses, "k", 7)
+    ks = F.array([F.lit(k) for k in range(10, 100, 10)])
+    dt = (
+        boot.withColumn("k_1 (%)", F.explode(ks))
+        .withColumn("k_2 (%)", F.explode(ks))
+        .select(
+            "replica", "k_1 (%)", "k_2 (%)",
+            (
+                F.col("t1") * F.col("k_1 (%)") / 100.0
+                - F.col("t2") * F.col("k_2 (%)") / 100.0
+            ).alias("Δt (s)"),
+        )
+    )
+    mad = mad_per_threshold_pair(dt, extra_keys=["replica"])
+    w = Window.partitionBy("replica").orderBy(
+        F.col("MAD(Δt) k_MADstd (s)").asc(), "k_1 (%)", "k_2 (%)"
+    )
+    out = mad.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
+    return boot, out
+
+
+def _grid_exchanges(df):
+    """Exchange lines keyed on k_1 (%) or replica above the bootstrap's
+    cross join (the whole plan when there is no cross join)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    above = plan.split("BroadcastNestedLoopJoin")[0]
+    return [
+        line for line in above.splitlines()
+        if "Exchange" in line and ("k_1 (%)" in line or "replica" in line)
+    ]
+
+
+def test_bootstrap_hash_layouts_agree_and_partition_by_replica(spark):
+    old = spark.conf.get(_THRESHOLD)
+    try:
+        runs = {}
+        for thr in ("10MB", "-1"):  # replica-partitioned / explode-on-data
+            spark.conf.set(_THRESHOLD, thr)
+            boot, out = _q38_chain(spark)
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            runs[thr] = (
+                boot.columns,
+                sorted(boot.collect()),
+                out.columns,
+                sorted(out.collect()),
+                "BroadcastNestedLoopJoin" in plan,
+                _grid_exchanges(out),
+                "CartesianProduct" in plan,
+            )
+        bc, shuffled = runs["10MB"], runs["-1"]
+        assert bc[:4] == shuffled[:4]  # same rows, same column order
+        assert len(bc[3]) == 7  # one argmin row per replica
+        assert bc[4] and not shuffled[4]  # each side took its own layout
+        assert bc[5] == []  # MAD aggregate and window need no exchange
+        assert shuffled[5]  # ... which the explode layout does need
+        assert not bc[6] and not shuffled[6]
+    finally:
+        spark.conf.set(_THRESHOLD, old)
+
+
+def test_plan_gate_runs_no_job(spark, tmp_path):
+    path = str(tmp_path / "ids")
+    spark.range(0, 1000).write.parquet(path)
+    df = spark.read.parquet(path).groupBy((F.col("id") % 7).alias("g")).count()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    old = spark.conf.get(_THRESHOLD)
+    sc.setJobGroup("plan-gate", "plan_fits_broadcast")
+    try:
+        spark.conf.set(_THRESHOLD, "10MB")
+        assert plan_fits_broadcast(df)
+        spark.conf.set(_THRESHOLD, "1b")  # the plan is bigger than one byte
+        assert not plan_fits_broadcast(df)
+        spark.conf.set(_THRESHOLD, "-1")  # broadcast disabled
+        assert not plan_fits_broadcast(df)
+        assert list(tracker.getJobIdsForGroup("plan-gate")) == []
+        df.count()  # a job in the group is seen
+        assert list(tracker.getJobIdsForGroup("plan-gate"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+        spark.conf.set(_THRESHOLD, old)
 
 
 def test_bootstrap_exact_preserves_group_sizes(spark):
