@@ -4501,8 +4501,8 @@ def q369_delta_data_skipping(spark, sf_dir):
 # reader that silently resurrected deleted rows (the r5 verdict's
 # failure mode) breaks the hash. Version-0 time travel reads THROUGH
 # the later protocol upgrade back to the undeleted state. Positions are
-# content-derived (rank of k in each sorted file), so the oracle is a
-# plain predicate delete over orders.
+# read off the written files' _metadata.row_index (the rows with
+# k % 7 = 0), so the oracle is a plain predicate delete over orders.
 # ---------------------------------------------------------------------------
 
 _Q370_ORACLE = """
@@ -4526,12 +4526,34 @@ FROM u ORDER BY version_tag, o_orderpriority
 """
 
 
+def _k7_positions(spark, path, rels, k="k"):
+    """``{rel: 0-based row positions of its k % 7 == 0 rows}`` for the
+    table-relative data files ``rels``, read in one scan (one job) off
+    the written files' ``_metadata.row_index`` — the positions do not
+    depend on the files' row order. ``k`` is the file column holding k
+    (its physical name under column mapping); a schema is given, so no
+    inference job runs. The scanned basename is URI-decoded as the
+    Delta reader's DV anti-join decodes it."""
+    from ..sources.deltalog import _scanned_file_name
+
+    rel_of = {os.path.basename(rel): rel for rel in rels}
+    out = {rel: [] for rel in rels}
+    for r in (
+        spark.read.schema(f"`{k}` long")
+        .parquet(*[os.path.join(path, rel) for rel in rels])
+        .filter(F.col(k) % 7 == 0)
+        .select(_scanned_file_name().alias("f"),
+                F.col("_metadata.row_index").alias("p"))
+        .collect()
+    ):
+        out[rel_of[r["f"]]].append(r["p"])
+    return out
+
+
 @register("q370_delta_deletion_vectors", _Q370_ORACLE)
 def q370_delta_deletion_vectors(spark, sf_dir):
     import hashlib
     import shutil
-
-    from pyspark.sql import Window
 
     from ..sources.deltalog import (
         add_deletion_vectors,
@@ -4545,30 +4567,21 @@ def q370_delta_deletion_vectors(spark, sf_dir):
     shutil.rmtree(path, ignore_errors=True)
 
     o = _orders_kpt(spark, sf_dir)  # (k, pr, tp)
-    # two single-file commits, each file sorted by k so row POSITIONS
-    # are the rank of k within its file — content-derived, no RNG
-    write_delta(spark, path, o.filter(F.col("k") % 3 == 0).orderBy("k"),
+    # two single-file commits, each file sorted by k (one sorting
+    # task, no range sort: the writer coalesces to one file anyway)
+    write_delta(spark, path,
+                o.filter(F.col("k") % 3 == 0)
+                .repartition(1).sortWithinPartitions("k"),
                 commit_ts=100, column_mapping=True)
-    write_delta(spark, path, o.filter(F.col("k") % 3 == 1).orderBy("k"),
+    write_delta(spark, path,
+                o.filter(F.col("k") % 3 == 1)
+                .repartition(1).sortWithinPartitions("k"),
                 commit_ts=200)
 
-    # version -> file rel path (v0's file is the older add)
+    # the files carry k under its column-mapped physical name
     snap = load_snapshot(path)
-    rel_of = {}
-    for rel, a in snap.adds.items():
-        rel_of[a["modificationTime"]] = rel
-
-    deletes = {}
-    for ts, residue in ((100, 0), (200, 1)):
-        sub = o.filter(F.col("k") % 3 == residue)
-        w = Window.orderBy("k")
-        pos = [
-            r["p"]
-            for r in sub.select(
-                (F.row_number().over(w) - 1).alias("p"), "k"
-            ).filter(F.col("k") % 7 == 0).select("p").collect()
-        ]
-        deletes[rel_of[ts]] = pos
+    deletes = _k7_positions(spark, path, list(snap.adds),
+                            k=snap.physical_names()["k"])
     add_deletion_vectors(spark, path, deletes, commit_ts=300)
 
     def agg(df, tag_):
@@ -4594,10 +4607,12 @@ def q370_delta_deletion_vectors(spark, sf_dir):
 # contract as q370 but on the Iceberg wire format — a content=1 delete
 # manifest (genuine Avro) pointing at a sorted (file_path, pos) parquet
 # delete file, applied by read_iceberg's (file, _metadata.row_index)
-# anti-join. Two sorted single-file append snapshots, positions derived
-# from the rank of k within each file (content-determined), snapshot-id
-# time travel back to the undeleted state. Same oracle family as
-# q356/q366/q370, so all four lakehouse gates share one algebra.
+# anti-join. Two sorted single-file append snapshots; the positions of
+# the k % 7 = 0 rows are read off both data files' _metadata.row_index
+# in one scan (not ranked from the sort order), the delete file is
+# written on the driver, and snapshot-id time travel goes back to the
+# undeleted state. Same oracle family as q356/q366/q370, so all four
+# lakehouse gates share one algebra.
 # ---------------------------------------------------------------------------
 
 _Q371_ORACLE = _Q370_ORACLE  # identical logical content, by design
@@ -4607,8 +4622,6 @@ _Q371_ORACLE = _Q370_ORACLE  # identical logical content, by design
 def q371_iceberg_position_deletes(spark, sf_dir):
     import hashlib
     import shutil
-
-    from pyspark.sql import Window
 
     from ..sources.iceberg import (
         delete_rows_iceberg,
@@ -4622,26 +4635,17 @@ def q371_iceberg_position_deletes(spark, sf_dir):
     shutil.rmtree(path, ignore_errors=True)
 
     o = _orders_kpt(spark, sf_dir)  # (k, pr, tp)
-    s1 = write_iceberg(spark, path, o.filter(F.col("k") % 3 == 0).orderBy("k"),
-                       commit_ts=100)
-    first = {f["file_path"] for f in snapshot_files(path, snapshot_id=s1)}
-    s2 = write_iceberg(spark, path, o.filter(F.col("k") % 3 == 1).orderBy("k"),
+    write_iceberg(spark, path,
+                  o.filter(F.col("k") % 3 == 0)
+                  .repartition(1).sortWithinPartitions("k"),
+                  commit_ts=100)
+    s2 = write_iceberg(spark, path,
+                       o.filter(F.col("k") % 3 == 1)
+                       .repartition(1).sortWithinPartitions("k"),
                        commit_ts=200)
-    second = {
-        f["file_path"] for f in snapshot_files(path, snapshot_id=s2)
-    } - first
 
-    deletes = {}
-    for rel_set, residue in ((first, 0), (second, 1)):
-        sub = o.filter(F.col("k") % 3 == residue)
-        w = Window.orderBy("k")
-        pos = [
-            r["p"]
-            for r in sub.select(
-                (F.row_number().over(w) - 1).alias("p"), "k"
-            ).filter(F.col("k") % 7 == 0).select("p").collect()
-        ]
-        deletes[next(iter(rel_set))] = pos
+    deletes = _k7_positions(
+        spark, path, [f["file_path"] for f in snapshot_files(path)])
     delete_rows_iceberg(spark, path, deletes, commit_ts=300)
 
     def agg(df, tag_):
@@ -4715,7 +4719,8 @@ def q373_iceberg_equality_deletes(spark, sf_dir):
     shutil.rmtree(path, ignore_errors=True)
 
     o = _orders_kpt(spark, sf_dir).filter(F.col("k") % 3 == 0)
-    s1 = write_iceberg(spark, path, o.orderBy("k"), commit_ts=100)
+    s1 = write_iceberg(spark, path, o.repartition(1).sortWithinPartitions("k"),
+                       commit_ts=100)
     # delete by ROW IDENTITY (k), not position: k % 21 == 0
     # (k % 3 == 0 and k % 7 == 0)
     delete_rows_equality(
@@ -4798,9 +4803,13 @@ def q375_delta_merge(spark, sf_dir):
     shutil.rmtree(path, ignore_errors=True)
 
     o = _orders_kpt(spark, sf_dir)  # (k, pr, tp)
-    write_delta(spark, path, o.filter(F.col("k") % 3 == 0).orderBy("k"),
+    write_delta(spark, path,
+                o.filter(F.col("k") % 3 == 0)
+                .repartition(1).sortWithinPartitions("k"),
                 commit_ts=100)
-    write_delta(spark, path, o.filter(F.col("k") % 3 == 1).orderBy("k"),
+    write_delta(spark, path,
+                o.filter(F.col("k") % 3 == 1)
+                .repartition(1).sortWithinPartitions("k"),
                 commit_ts=200)
 
     src = o.filter(F.col("k") % 5 == 0).select(
@@ -4848,10 +4857,13 @@ def q376_iceberg_upsert(spark, sf_dir):
     shutil.rmtree(path, ignore_errors=True)
 
     o = _orders_kpt(spark, sf_dir)  # (k, pr, tp)
-    write_iceberg(spark, path, o.filter(F.col("k") % 3 == 0).orderBy("k"),
+    write_iceberg(spark, path,
+                  o.filter(F.col("k") % 3 == 0)
+                  .repartition(1).sortWithinPartitions("k"),
                   commit_ts=100)
     s2 = write_iceberg(spark, path,
-                       o.filter(F.col("k") % 3 == 1).orderBy("k"),
+                       o.filter(F.col("k") % 3 == 1)
+                       .repartition(1).sortWithinPartitions("k"),
                        commit_ts=200)
 
     src = o.filter(F.col("k") % 5 == 0).select(
@@ -4878,8 +4890,8 @@ def q376_iceberg_upsert(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # q377 — Delta CHANGE DATA FEED (sources/deltalog.read_delta_changes):
-# the log-derived feed between versions. v0 appends k%3==0 (sorted, so
-# row positions are content-derived ranks), v1 marks k%21==0 deleted
+# the log-derived feed between versions. v0 appends k%3==0, v1 marks
+# k%21==0 (positions read off the file's _metadata.row_index) deleted
 # via DELETION VECTORS — the feed is ROW-exact there (the bitmap's
 # position delta, not file-granular) — and v2 appends k%3==1 as plain
 # inserts. The gate aggregates (_commit_version, _change_type,
@@ -4927,19 +4939,13 @@ def q377_delta_change_feed(spark, sf_dir):
 
     o = _orders_kpt(spark, sf_dir)  # (k, pr, tp)
     sub = o.filter(F.col("k") % 3 == 0)
-    write_delta(spark, path, sub.orderBy("k"), commit_ts=100)       # v0
-    rel = next(iter(load_snapshot(path).adds))
+    write_delta(spark, path, sub.repartition(1).sortWithinPartitions("k"),
+                commit_ts=100)                                      # v0
     # positions read straight off the written file's
-    # _metadata.row_index — distributed, no global window sort (the
-    # file holds sub in k order, so row_index == the k-rank the old
-    # row_number fixture computed; hash-identical)
-    pos = [
-        r["p"]
-        for r in spark.read.parquet(os.path.join(path, rel))
-        .select(F.col("_metadata.row_index").alias("p"), "k")
-        .filter(F.col("k") % 7 == 0).select("p").collect()
-    ]
-    add_deletion_vectors(spark, path, {rel: pos}, commit_ts=200)    # v1
+    # _metadata.row_index — no global window sort
+    rels = list(load_snapshot(path).adds)
+    add_deletion_vectors(spark, path, _k7_positions(spark, path, rels),
+                         commit_ts=200)                             # v1
     write_delta(spark, path, o.filter(F.col("k") % 3 == 1),
                 commit_ts=300)                                      # v2
 
@@ -4990,19 +4996,15 @@ def q378_iceberg_changelog(spark, sf_dir):
 
     o = _orders_kpt(spark, sf_dir)  # (k, pr, tp)
     sub = o.filter(F.col("k") % 3 == 0)
-    s1 = write_iceberg(spark, path, sub.orderBy("k"), commit_ts=100)
-    rel = snapshot_files(path)[0]["file_path"]
+    s1 = write_iceberg(spark, path,
+                       sub.repartition(1).sortWithinPartitions("k"),
+                       commit_ts=100)
     # positions read straight off the written file's
-    # _metadata.row_index — distributed, no global window sort (the
-    # file holds sub in k order, so row_index == the k-rank the old
-    # row_number fixture computed; hash-identical)
-    pos = [
-        r["p"]
-        for r in spark.read.parquet(os.path.join(path, rel))
-        .select(F.col("_metadata.row_index").alias("p"), "k")
-        .filter(F.col("k") % 7 == 0).select("p").collect()
-    ]
-    delete_rows_iceberg(spark, path, {rel: pos}, commit_ts=200)
+    # _metadata.row_index — no global window sort
+    delete_rows_iceberg(
+        spark, path,
+        _k7_positions(spark, path, [snapshot_files(path)[0]["file_path"]]),
+        commit_ts=200)
     write_iceberg(spark, path, o.filter(F.col("k") % 3 == 1), commit_ts=300)
 
     feed = read_iceberg_changes(spark, path, from_snapshot_id=s1)
@@ -5161,7 +5163,8 @@ def q380_iceberg_lite_datasource(spark, sf_dir):
     shutil.rmtree(path, ignore_errors=True)
 
     o = _orders_kpt(spark, sf_dir).filter(F.col("k") % 3 == 0)
-    write_iceberg(spark, path, o.orderBy("k"), commit_ts=100)
+    write_iceberg(spark, path, o.repartition(1).sortWithinPartitions("k"),
+                  commit_ts=100)
     rel = snapshot_files(path)[0]["file_path"]
     delete_rows_iceberg(spark, path, {rel: [0, 1]}, commit_ts=200)
     delete_rows_equality(
@@ -5242,7 +5245,8 @@ def q381_delta_zorder(spark, sf_dir):
         F.col("o_custkey").alias("c"),
         F.col("o_totalprice").alias("tp"),
     )
-    write_delta(spark, path, o.orderBy("k"), commit_ts=100)
+    write_delta(spark, path, o.repartition(1).sortWithinPartitions("k"),
+                commit_ts=100)
     optimize_zorder(spark, path, ["k", "c"], n_files=16, commit_ts=200)
 
     b = o.agg(F.min("k"), F.max("k"), F.min("c"), F.max("c")).first()
@@ -5471,7 +5475,8 @@ def q384_delta_zorder3(spark, sf_dir):
         F.col("o_custkey").alias("c"),
         F.col("o_totalprice").alias("tp"),
     )
-    write_delta(spark, path, o.orderBy("k"), commit_ts=100)
+    write_delta(spark, path, o.repartition(1).sortWithinPartitions("k"),
+                commit_ts=100)
     optimize_zorder(spark, path, ["k", "c", "tp"], n_files=16,
                     commit_ts=200)
 
@@ -5966,19 +5971,15 @@ def q391_iceberg_changelog_stream(spark, sf_dir):
 
     o = _orders_kpt(spark, sf_dir)  # (k, pr, tp)
     sub = o.filter(F.col("k") % 3 == 0)
-    s1 = write_iceberg(spark, path, sub.orderBy("k"), commit_ts=100)
-    rel = snapshot_files(path)[0]["file_path"]
+    s1 = write_iceberg(spark, path,
+                       sub.repartition(1).sortWithinPartitions("k"),
+                       commit_ts=100)
     # positions read straight off the written file's
-    # _metadata.row_index — distributed, no global window sort (the
-    # file holds sub in k order, so row_index == the k-rank the old
-    # row_number fixture computed; hash-identical)
-    pos = [
-        r["p"]
-        for r in spark.read.parquet(os.path.join(path, rel))
-        .select(F.col("_metadata.row_index").alias("p"), "k")
-        .filter(F.col("k") % 7 == 0).select("p").collect()
-    ]
-    delete_rows_iceberg(spark, path, {rel: pos}, commit_ts=200)
+    # _metadata.row_index — no global window sort
+    delete_rows_iceberg(
+        spark, path,
+        _k7_positions(spark, path, [snapshot_files(path)[0]["file_path"]]),
+        commit_ts=200)
     write_iceberg(spark, path, o.filter(F.col("k") % 3 == 1),
                   commit_ts=300)
 
@@ -6153,10 +6154,13 @@ def q394_iceberg_merge(spark, sf_dir):
     shutil.rmtree(path, ignore_errors=True)
 
     o = _orders_kpt(spark, sf_dir)  # (k, pr, tp)
-    write_iceberg(spark, path, o.filter(F.col("k") % 3 == 0).orderBy("k"),
+    write_iceberg(spark, path,
+                  o.filter(F.col("k") % 3 == 0)
+                  .repartition(1).sortWithinPartitions("k"),
                   commit_ts=100)
     s2 = write_iceberg(spark, path,
-                       o.filter(F.col("k") % 3 == 1).orderBy("k"),
+                       o.filter(F.col("k") % 3 == 1)
+                       .repartition(1).sortWithinPartitions("k"),
                        commit_ts=200)
 
     src = o.filter(F.col("k") % 5 == 0).select(
@@ -6900,7 +6904,8 @@ def q408_iceberg_zorder(spark, sf_dir):
         F.col("o_custkey").alias("c"),
         F.col("o_totalprice").alias("tp"),
     )
-    write_iceberg(spark, path, o.orderBy("k"), commit_ts=100)
+    write_iceberg(spark, path, o.repartition(1).sortWithinPartitions("k"),
+                  commit_ts=100)
     rewrite_data_files(spark, path, zorder_by=["k", "c"], n_files=16,
                        commit_ts=200)
 
@@ -7180,7 +7185,9 @@ def q412_delta_zorder_incremental(spark, sf_dir):
         F.col("o_custkey").alias("c"),
         F.col("o_totalprice").alias("tp"),
     )
-    write_delta(spark, path, o.filter(F.col("k") % 2 == 0).orderBy("k"),
+    write_delta(spark, path,
+                o.filter(F.col("k") % 2 == 0)
+                .repartition(1).sortWithinPartitions("k"),
                 commit_ts=100)
     optimize_zorder(spark, path, ["k", "c"], n_files=12, commit_ts=200)
     write_delta(spark, path, o.filter(F.col("k") % 2 == 1),

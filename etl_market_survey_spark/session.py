@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import SparkSession
 
 
@@ -16,6 +17,15 @@ def get_spark(
     app_name: str = "etl-market-survey-spark",
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
+    """The running session, unchanged, or a new one built with this
+    engine's conf. A running session keeps the confs it was built with:
+    ``getOrCreate`` would rewrite its runtime confs (partition count,
+    Arrow, ...), so its behaviour would depend on who called this
+    first."""
+    try:
+        return SparkSession.active()
+    except PySparkRuntimeError:
+        pass  # no session yet
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle = shuffle_partitions or cpus
     builder = (

@@ -1054,29 +1054,6 @@ def delta_history(path: str) -> list[dict]:
 # ---------------------------------------------------------------------------
 
 
-def _file_stats_json(spark: SparkSession, fpath: str, schema) -> str:
-    from pyspark.sql import functions as F
-
-    df = spark.read.schema(schema).parquet(fpath)
-    aggs = [F.count("*").alias("_n")]
-    for f in schema.fields:
-        aggs += [
-            F.min(f.name).alias(f"mn_{f.name}"),
-            F.max(f.name).alias(f"mx_{f.name}"),
-            F.sum(F.col(f.name).isNull().cast("long")).alias(f"nc_{f.name}"),
-        ]
-    row = df.agg(*aggs).collect()[0].asDict()
-    return json.dumps(
-        {
-            "numRecords": row["_n"],
-            "minValues": {f.name: row[f"mn_{f.name}"] for f in schema.fields},
-            "maxValues": {f.name: row[f"mx_{f.name}"] for f in schema.fields},
-            "nullCount": {f.name: row[f"nc_{f.name}"] for f in schema.fields},
-        },
-        default=str,
-    )
-
-
 def write_delta(
     spark: SparkSession,
     path: str,
@@ -2202,9 +2179,9 @@ def _write_single_parquet_with_stats(df: DataFrame, dest: str, schema) -> str:
     """Single-file staged write + per-file stats in ONE Spark job.
 
     The unpartitioned stage is ``coalesce(1)`` — the whole frame IS the
-    file — so global ``observe`` aggregates equal the per-file stats
-    :func:`_file_stats_json` would compute by re-reading the written
-    file (same Spark min/max/count semantics over the same rows). That
+    file — so global ``observe`` aggregates equal the per-file stats a
+    re-read of the written file would compute (same Spark
+    min/max/count semantics over the same rows). That
     re-read was a second full-scan job paid at every commit; folding it
     into the write halves the job count of every unpartitioned
     write/MERGE/DELETE/compact commit."""
@@ -3652,7 +3629,8 @@ def _stage_partitioned(
 
 def _batch_stats(spark: SparkSession, files: list[str], schema) -> dict:
     """Per-file stats for MANY files in one aggregate job, keyed by
-    ``input_file_name`` — same JSON shape as :func:`_file_stats_json`."""
+    ``input_file_name`` — same JSON shape as
+    :func:`_write_single_parquet_with_stats`."""
 
     from pyspark.sql import functions as F
 

@@ -784,9 +784,9 @@ class _DeltaLiteWriter(DataSourceArrowWriter):
     ``pyarrow.parquet.ParquetWriter`` per (task, partition value) —
     rows never buffer beyond parquet's own row-group accumulation —
     while min/max/nullCount/numRecords fold incrementally per batch, so
-    the add actions carry the same stats JSON :func:`deltalog
-    ._file_stats_json` computes without a second read of the staged
-    files. ``commit`` assembles the Delta actions and publishes through
+    the add actions carry the same stats JSON as :func:`deltalog
+    ._write_single_parquet_with_stats`, without a second read of the
+    staged files. ``commit`` assembles the Delta actions and publishes through
     the put-if-absent commit (:func:`deltalog._write_commit`): plain
     appends rebase onto the winner after a lost race exactly like
     :func:`deltalog.write_delta`; creation and overwrite conflicts

@@ -241,6 +241,59 @@ class TestExpireSnapshots:
         assert read_iceberg(spark, root).count() == 10
 
 
+def _jobs_in(spark, group, fn):
+    """``(fn(), number of Spark jobs it ran)``, counted in a job group
+    through the status tracker."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestSortedOneFileCommit:
+    """A k-sorted one-file commit written as
+    ``repartition(1).sortWithinPartitions`` leaves the same sorted file
+    as a global ``orderBy`` with one job fewer: the writers coalesce to
+    one file, so the range sort's sampling job buys nothing."""
+
+    @pytest.mark.parametrize("fmt", ["iceberg", "delta"])
+    def test_sorted_file_and_job_count(self, spark, tmp_path, fmt):
+        import pyarrow.parquet as pq
+
+        from etl_market_survey_spark.sources.deltalog import (
+            load_snapshot, write_delta,
+        )
+
+        # a permutation of 0..999 over 4 partitions
+        df = spark.range(0, 1000, numPartitions=4).select(
+            ((F.col("id") * 37) % 1000).alias("k"))
+        shapes = {
+            "sort_within": df.repartition(1).sortWithinPartitions("k"),
+            "order_by": df.orderBy("k"),
+        }
+        writer = write_iceberg if fmt == "iceberg" else write_delta
+        jobs = {}
+        for name, shaped in shapes.items():
+            path = str(tmp_path / name)
+            _, jobs[name] = _jobs_in(
+                spark, f"sorted-{fmt}-{name}-{tmp_path.name}",
+                lambda: writer(spark, path, shaped, commit_ts=100))
+            rels = (
+                [f["file_path"] for f in snapshot_files(path)]
+                if fmt == "iceberg" else list(load_snapshot(path).adds)
+            )
+            assert len(rels) == 1
+            ks = pq.read_table(os.path.join(path, rels[0])).column(
+                "k").to_pylist()
+            assert ks == list(range(1000))
+        assert jobs == {"sort_within": 2, "order_by": 3}
+
+
 class TestPositionDeletes:
     """v2 merge-on-read: content=1 delete manifests + (file_path, pos)
     parquet delete files, applied via the row_index anti-join."""
@@ -292,24 +345,47 @@ class TestPositionDeletes:
         assert read_iceberg(spark, path).count() == 30
 
     def test_delete_file_is_sorted_parquet(self, spark, tmp_path):
-        import glob
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
         from etl_market_survey_spark.sources.iceberg import (
-            delete_rows_iceberg, snapshot_delete_files,
+            delete_rows_iceberg, read_iceberg_changes,
+            snapshot_delete_files,
+        )
+        from etl_market_survey_spark.sources.pyds_iceberg import (
+            IcebergLiteDataSource,
         )
 
         path = str(tmp_path / "icedel2")
-        _, f1, f2 = self._two_file_table(spark, path)
-        delete_rows_iceberg(spark, path, {f2: [3, 1], f1: [2, 0]},
-                            commit_ts=300)
+        s2, f1, f2 = self._two_file_table(spark, path)
+        # the pairs are a driver-side dict: the delete file is written
+        # on the driver, so the commit runs no Spark job
+        s3, n_jobs = _jobs_in(
+            spark, f"icedel2-{tmp_path.name}",
+            lambda: delete_rows_iceberg(
+                spark, path, {f2: [3, 1], f1: [2, 0]}, commit_ts=300),
+        )
+        assert n_jobs == 0
         dels = snapshot_delete_files(path)
         assert len(dels) == 1 and dels[0]["content"] == 1
         assert dels[0]["record_count"] == 4
-        pdf = spark.read.parquet(
-            os.path.join(path, dels[0]["file_path"])
-        ).toPandas()
-        pairs = list(zip(pdf["file_path"], pdf["pos"]))
-        assert pairs == sorted(pairs)  # spec: sorted by (path, pos)
+        t = pq.read_table(os.path.join(path, dels[0]["file_path"]))
+        assert t.schema.names == ["file_path", "pos"]
+        assert t.schema.types == [pa.string(), pa.int64()]
+        pairs = list(zip(*t.to_pydict().values()))
+        # spec: sorted by (path, pos)
+        assert pairs == sorted([(f2, 3), (f2, 1), (f1, 2), (f1, 0)])
+        # every reader applies it: positions 0, 2 of d1 and 1, 3 of d2
+        gone = {0, 2, 101, 103}
+        want = (set(range(50)) | set(range(100, 150))) - gone
+        assert {r["k"] for r in read_iceberg(spark, path).collect()} == want
+        spark.dataSource.register(IcebergLiteDataSource)
+        via_ds = spark.read.format("iceberg_lite").load(path)
+        assert sorted(r["k"] for r in via_ds.collect()) == sorted(want)
+        feed = read_iceberg_changes(spark, path, from_snapshot_id=s2)
+        assert sorted((r["_snapshot_id"], r["_change_type"], r["k"])
+                      for r in feed.collect()) == [
+            (s3, "delete", k) for k in sorted(gone)]
 
     def test_unknown_file_rejected(self, spark, tmp_path):
         from etl_market_survey_spark.sources.iceberg import (

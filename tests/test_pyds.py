@@ -846,7 +846,8 @@ class TestDeltaLiteWriter:
         # library read path agrees (same log, same files)
         assert sorted(map(tuple, read_delta(spark, path).collect())) \
             == sorted(map(tuple, d.collect()))
-        # the log carries per-file stats in _file_stats_json's shape
+        # the log carries per-file stats in
+        # _write_single_parquet_with_stats' shape
         import json as _json
 
         snap = load_snapshot(path)
