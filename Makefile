@@ -7,7 +7,7 @@ benchtest:
 	python -m pytest perfbench/tests -q
 
 gate:
-	python tools/oracle_check.py
+	SPARK_GRAFT_CPUS=8 SPARK_GRAFT_DRIVER_MEM=2g python tools/oracle_check.py
 
 audit:
 	python tools/plan_audit.py

@@ -41,9 +41,14 @@ order; it picks one from the input's size, with no option:
   chain once more; sort the small result in one partition instead
   (``repartition(1).sortWithinPartitions``, as q26 and q38 do).
 - **explode-on-data** (input too big, or broadcast disabled): every input
-  row explodes into its replicas in place (row blowup = n_replicas on
-  average) and keeps the input's partitioning; the downstream grouped
-  aggregation shuffles on its keys.
+  row explodes into its replicas (row blowup = n_replicas on average),
+  and the exploded rows are hash-partitioned on the replica column into
+  the same ``max(n_replicas, defaultParallelism)`` slices. That shuffle
+  runs before the Poisson and downstream explodes, and its slicing comes
+  from the replica count, not from the input's partitioning: a small
+  input shuffle that AQE coalesces to one partition would otherwise run
+  the whole explode and the partial MAD in one task. Downstream
+  clusterings on the replica key reuse the partitioning, as above.
 
 At 100 TB the explode layout is the one that runs: no per-group Python
 and no driver loop (the reference's 33-iteration loop becomes a replica
@@ -119,15 +124,15 @@ def bootstrap_hash(
     count(key, replica) times in each replica. Replica-partitioned when
     ``df`` fits a broadcast (module docstring)."""
     spark = df.sparkSession
+    n_slices = max(n_replicas, spark.sparkContext.defaultParallelism)
     if plan_fits_broadcast(df):
-        n_slices = max(n_replicas, spark.sparkContext.defaultParallelism)
         reps = spark.sql(
             f"SELECT explode(sequence(0, {n_replicas - 1})) AS `{id_col}`"
         ).repartition(n_slices, id_col)
         with_rep = F.broadcast(df).crossJoin(reps)
     else:
         rep = F.explode(F.sequence(F.lit(0), F.lit(n_replicas - 1))).alias(id_col)
-        with_rep = df.select("*", rep)
+        with_rep = df.select("*", rep).repartition(n_slices, id_col)
     cnt = poisson_count_expr(F.col(key_col), F.col(id_col))
     return (
         with_rep.withColumn("_cnt", cnt)

@@ -8,6 +8,11 @@ checkpoint + a marker file; a completed stage is skipped unless
 ``force``. Within a stage everything stays one lazy Spark plan —
 checkpoints exist only at user-visible stage boundaries (SURVEY §3's
 "where the DAG lives" guidance).
+
+The marker is JSON and holds the schema the stage wrote, so a checkpoint
+is read back with that schema and Spark runs no job to infer it from the
+Parquet footers. A marker without a schema does not count as done: the
+stage re-runs, which is always correct.
 """
 
 from __future__ import annotations
@@ -19,6 +24,7 @@ from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MARKER = ".stage_successfully_applied"
 
@@ -48,14 +54,22 @@ class Pipeline:
     def _dir(self, name: str) -> str:
         return os.path.join(self.root, name)
 
+    def _schema(self, name: str) -> StructType | None:
+        """The schema recorded in ``name``'s marker; None without one."""
+        try:
+            with open(os.path.join(self._dir(name), MARKER)) as f:
+                schema = json.load(f).get("schema")
+        except (OSError, ValueError):
+            return None
+        return StructType.fromJson(schema) if schema else None
+
     def is_done(self, name: str) -> bool:
-        d = self._dir(name)
-        return os.path.exists(os.path.join(d, MARKER)) and os.path.exists(
-            os.path.join(d, "_SUCCESS")
+        return self._schema(name) is not None and os.path.exists(
+            os.path.join(self._dir(name), "_SUCCESS")
         )
 
     def output(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self._dir(name))
+        return self.spark.read.schema(self._schema(name)).parquet(self._dir(name))
 
     # -- execution ----------------------------------------------------------
 
@@ -69,5 +83,8 @@ class Pipeline:
         out = self._dir(name)
         df.write.mode("overwrite").parquet(out)
         with open(os.path.join(out, MARKER), "w") as f:
-            json.dump({"stage": name, "completed_at": time.time()}, f)
+            json.dump(
+                {"stage": name, "completed_at": time.time(), "schema": df.schema.jsonValue()},
+                f,
+            )
         return self.output(name)

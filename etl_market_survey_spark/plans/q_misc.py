@@ -2404,6 +2404,23 @@ FROM u ORDER BY version_tag, o_orderpriority
 """
 
 
+def _tagged_totals(parts):
+    """Row count and floored-cent ``tp`` total per ``o_orderpriority`` of
+    each ``(df, version_tag)`` in ``parts``, unioned and sorted by (tag,
+    priority). The result has a few rows, so it is sorted in one partition:
+    a global ``orderBy`` would only add a range-sample job."""
+    out = None
+    for df, tag_ in parts:
+        t = df.groupBy(F.col("pr").alias("o_orderpriority")).agg(
+            F.count("*").cast("bigint").alias("n_rows"),
+            F.sum(F.floor(F.col("tp") * 100.0).cast("decimal(38,0)"))
+            .cast("bigint")
+            .alias("total_cents"),
+        ).select(F.lit(tag_).alias("version_tag"), "*")
+        out = t if out is None else out.unionByName(t)
+    return out.repartition(1).sortWithinPartitions("version_tag", "o_orderpriority")
+
+
 @register("q257_lakehouse_time_travel", _Q257_ORACLE)
 def q257_lakehouse_time_travel(spark, sf_dir):
     import hashlib
@@ -2423,23 +2440,10 @@ def q257_lakehouse_time_travel(spark, sf_dir):
                 partition_col="pr", commit_ts=200)
     delete_where(spark, path, partition_values=["1-URGENT"], commit_ts=300)
 
-    def agg(df, tag_):
-        return df.groupBy(F.col("pr").alias("o_orderpriority")).agg(
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.sum(F.floor(F.col("tp") * 100.0).cast("decimal(38,0)"))
-            .cast("bigint")
-            .alias("total_cents"),
-        ).select(F.lit(tag_).alias("version_tag"), "*")
-
     v1 = read_delta(spark, path, version=0)
     v2 = read_delta(spark, path, timestamp=250)  # newest commit_ts <= 250
     v3 = read_delta(spark, path, partition_filter={"pr": ["2-HIGH", "5-LOW"]})
-    return (
-        agg(v1, "v1")
-        .unionByName(agg(v2, "v2_asof"))
-        .unionByName(agg(v3, "v3_pruned"))
-        .orderBy("version_tag", "o_orderpriority")
-    )
+    return _tagged_totals([(v1, "v1"), (v2, "v2_asof"), (v3, "v3_pruned")])
 
 
 # ---------------------------------------------------------------------------
@@ -4065,23 +4069,10 @@ def q356_delta_log_protocol(spark, sf_dir):
     write_checkpoint(spark, path)  # v1 — later reads fold cp + JSON tail
     delete_where(spark, path, partition_values=["1-URGENT"], commit_ts=300)
 
-    def agg(df, tag_):
-        return df.groupBy(F.col("pr").alias("o_orderpriority")).agg(
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.sum(F.floor(F.col("tp") * 100.0).cast("decimal(38,0)"))
-            .cast("bigint")
-            .alias("total_cents"),
-        ).select(F.lit(tag_).alias("version_tag"), "*")
-
     v0 = read_delta(spark, path, version=0)
     v1 = read_delta(spark, path, timestamp=250)  # newest commit_ts <= 250
     v2 = read_delta(spark, path, partition_filter={"pr": ["2-HIGH", "5-LOW"]})
-    return (
-        agg(v0, "v0")
-        .unionByName(agg(v1, "v1_asof"))
-        .unionByName(agg(v2, "v2_pruned"))
-        .orderBy("version_tag", "o_orderpriority")
-    )
+    return _tagged_totals([(v0, "v0"), (v1, "v1_asof"), (v2, "v2_pruned")])
 
 
 # ---------------------------------------------------------------------------
@@ -4414,23 +4405,10 @@ def q366_iceberg_protocol(spark, sf_dir):
     )
     delete_partitions(spark, path, ["1-URGENT"], commit_ts=300)
 
-    def agg(df, tag_):
-        return df.groupBy(F.col("pr").alias("o_orderpriority")).agg(
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.sum(F.floor(F.col("tp") * 100.0).cast("decimal(38,0)"))
-            .cast("bigint")
-            .alias("total_cents"),
-        ).select(F.lit(tag_).alias("version_tag"), "*")
-
     v1 = read_iceberg(spark, path, snapshot_id=s1)
     v2 = read_iceberg(spark, path, as_of_ms=250)
     v3 = read_iceberg(spark, path, partition_filter={"pr": ["2-HIGH", "5-LOW"]})
-    return (
-        agg(v1, "v1")
-        .unionByName(agg(v2, "v2_asof"))
-        .unionByName(agg(v3, "v3_pruned"))
-        .orderBy("version_tag", "o_orderpriority")
-    )
+    return _tagged_totals([(v1, "v1"), (v2, "v2_asof"), (v3, "v3_pruned")])
 
 
 # ---------------------------------------------------------------------------
@@ -4584,21 +4562,9 @@ def q370_delta_deletion_vectors(spark, sf_dir):
                             k=snap.physical_names()["k"])
     add_deletion_vectors(spark, path, deletes, commit_ts=300)
 
-    def agg(df, tag_):
-        return df.groupBy(F.col("pr").alias("o_orderpriority")).agg(
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.sum(F.floor(F.col("tp") * 100.0).cast("decimal(38,0)"))
-            .cast("bigint")
-            .alias("total_cents"),
-        ).select(F.lit(tag_).alias("version_tag"), "*")
-
     v0 = read_delta(spark, path, version=1)  # both files, pre-DV
     cur = read_delta(spark, path)            # deletion vectors applied
-    return (
-        agg(v0, "v0_undeleted")
-        .unionByName(agg(cur, "v2_mor"))
-        .orderBy("version_tag", "o_orderpriority")
-    )
+    return _tagged_totals([(v0, "v0_undeleted"), (cur, "v2_mor")])
 
 
 # ---------------------------------------------------------------------------
@@ -4648,21 +4614,9 @@ def q371_iceberg_position_deletes(spark, sf_dir):
         spark, path, [f["file_path"] for f in snapshot_files(path)])
     delete_rows_iceberg(spark, path, deletes, commit_ts=300)
 
-    def agg(df, tag_):
-        return df.groupBy(F.col("pr").alias("o_orderpriority")).agg(
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.sum(F.floor(F.col("tp") * 100.0).cast("decimal(38,0)"))
-            .cast("bigint")
-            .alias("total_cents"),
-        ).select(F.lit(tag_).alias("version_tag"), "*")
-
     v0 = read_iceberg(spark, path, snapshot_id=s2)  # both files, pre-delete
     cur = read_iceberg(spark, path)                 # deletes applied
-    return (
-        agg(v0, "v0_undeleted")
-        .unionByName(agg(cur, "v2_mor"))
-        .orderBy("version_tag", "o_orderpriority")
-    )
+    return _tagged_totals([(v0, "v0_undeleted"), (cur, "v2_mor")])
 
 
 # ---------------------------------------------------------------------------
@@ -4734,21 +4688,9 @@ def q373_iceberg_equality_deletes(spark, sf_dir):
     )
     write_iceberg(spark, path, reborn, commit_ts=300)
 
-    def agg(df, tag_):
-        return df.groupBy(F.col("pr").alias("o_orderpriority")).agg(
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.sum(F.floor(F.col("tp") * 100.0).cast("decimal(38,0)"))
-            .cast("bigint")
-            .alias("total_cents"),
-        ).select(F.lit(tag_).alias("version_tag"), "*")
-
     v0 = read_iceberg(spark, path, snapshot_id=s1)  # pre-delete
     cur = read_iceberg(spark, path)                 # delete + rebirth
-    return (
-        agg(v0, "v0_predelete")
-        .unionByName(agg(cur, "v2_eq_mor"))
-        .orderBy("version_tag", "o_orderpriority")
-    )
+    return _tagged_totals([(v0, "v0_predelete"), (cur, "v2_eq_mor")])
 
 
 # ---------------------------------------------------------------------------
@@ -4817,21 +4759,9 @@ def q375_delta_merge(spark, sf_dir):
     )
     v = merge_delta(spark, path, src, on=["k"], commit_ts=300)
 
-    def agg(df, tag_):
-        return df.groupBy(F.col("pr").alias("o_orderpriority")).agg(
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.sum(F.floor(F.col("tp") * 100.0).cast("decimal(38,0)"))
-            .cast("bigint")
-            .alias("total_cents"),
-        ).select(F.lit(tag_).alias("version_tag"), "*")
-
     pre = read_delta(spark, path, version=v - 1)
     cur = read_delta(spark, path)
-    return (
-        agg(pre, "v_premerge")
-        .unionByName(agg(cur, "v_merged"))
-        .orderBy("version_tag", "o_orderpriority")
-    )
+    return _tagged_totals([(pre, "v_premerge"), (cur, "v_merged")])
 
 
 # ---------------------------------------------------------------------------
@@ -4871,21 +4801,9 @@ def q376_iceberg_upsert(spark, sf_dir):
     )
     upsert_iceberg(spark, path, src, on=["k"], commit_ts=300)
 
-    def agg(df, tag_):
-        return df.groupBy(F.col("pr").alias("o_orderpriority")).agg(
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.sum(F.floor(F.col("tp") * 100.0).cast("decimal(38,0)"))
-            .cast("bigint")
-            .alias("total_cents"),
-        ).select(F.lit(tag_).alias("version_tag"), "*")
-
     pre = read_iceberg(spark, path, snapshot_id=s2)
     cur = read_iceberg(spark, path)
-    return (
-        agg(pre, "v_premerge")
-        .unionByName(agg(cur, "v_merged"))
-        .orderBy("version_tag", "o_orderpriority")
-    )
+    return _tagged_totals([(pre, "v_premerge"), (cur, "v_merged")])
 
 
 # ---------------------------------------------------------------------------
@@ -6168,21 +6086,9 @@ def q394_iceberg_merge(spark, sf_dir):
     )
     merge_iceberg(spark, path, src, on=["k"], commit_ts=300)
 
-    def agg(df, tag_):
-        return df.groupBy(F.col("pr").alias("o_orderpriority")).agg(
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.sum(F.floor(F.col("tp") * 100.0).cast("decimal(38,0)"))
-            .cast("bigint")
-            .alias("total_cents"),
-        ).select(F.lit(tag_).alias("version_tag"), "*")
-
     pre = read_iceberg(spark, path, snapshot_id=s2)
     cur = read_iceberg(spark, path)
-    return (
-        agg(pre, "v_premerge")
-        .unionByName(agg(cur, "v_merged"))
-        .orderBy("version_tag", "o_orderpriority")
-    )
+    return _tagged_totals([(pre, "v_premerge"), (cur, "v_merged")])
 
 
 # ---------------------------------------------------------------------------

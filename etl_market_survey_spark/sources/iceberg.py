@@ -842,11 +842,6 @@ def _apply_equality_deletes(
     deletes never apply forward to files committed at or after them."""
     from pyspark.sql import functions as F
 
-    schema_fields = (
-        meta.get("schema") or (meta.get("schemas") or [{}])[0]
-    ).get("fields", [])
-    id_to_name = {f["id"]: f["name"] for f in schema_fields}
-
     cols = df.columns
     seq_rows = [
         (os.path.basename(f["file_path"]), int(f.get("_seq") or 0))
@@ -858,27 +853,44 @@ def _apply_equality_deletes(
     by_ids: dict[tuple, list[dict]] = {}
     for d in eq_deletes:
         by_ids.setdefault(tuple(d.get("equality_ids") or ()), []).append(d)
-    for ids, dels in sorted(by_ids.items()):
-        names = [id_to_name[i] for i in ids]
-        if not names:
-            raise ValueError("equality delete file without equality_ids")
-        parts = [
-            spark.read.parquet(os.path.join(path, d["file_path"]))
-            .select(*names)
-            .withColumn("_dseq", F.lit(int(d.get("_seq") or 0)))
-            for d in dels
-        ]
-        del_df = parts[0]
-        for p in parts[1:]:
-            del_df = del_df.unionByName(p)
-        del_df = del_df.select(
-            *[F.col(c).alias(f"_d_{c}") for c in names], "_dseq"
-        )
-        cond = F.col("_seq") < F.col("_dseq")
-        for c in names:
-            cond = cond & F.col(c).eqNullSafe(F.col(f"_d_{c}"))
-        df = df.join(del_df, cond, "left_anti")
+    for _, dels in sorted(by_ids.items()):
+        keyed = [_equality_delete_keys(spark, path, d, meta) for d in dels]
+        del_df = keyed[0][0]
+        for keys, _ in keyed[1:]:
+            del_df = del_df.unionByName(keys)
+        df = df.join(del_df, keyed[0][1], "left_anti")
     return df.select(*cols)
+
+
+def _equality_delete_keys(spark, path: str, d: dict, meta: dict):
+    """One equality-delete file's rows as ``_d_<col>`` key columns plus its
+    sequence number ``_dseq``, and the null-safe match against data rows
+    carrying ``_seq`` (only rows of files committed before the delete).
+    The keys are read with the table schema's types for ``equality_ids``,
+    so Spark runs no job to infer the file's schema."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    schema = _spark_schema(meta)
+    id_to_name = {
+        f["id"]: f["name"]
+        for f in (meta.get("schema") or (meta.get("schemas") or [{}])[0]).get(
+            "fields", []
+        )
+    }
+    names = [id_to_name[i] for i in (d.get("equality_ids") or [])]
+    if not names:
+        raise ValueError("equality delete file without equality_ids")
+    keys = (
+        spark.read.schema(StructType([schema[c] for c in names]))
+        .parquet(os.path.join(path, d["file_path"]))
+        .select(*[F.col(c).alias(f"_d_{c}") for c in names])
+        .withColumn("_dseq", F.lit(int(d.get("_seq") or 0)))
+    )
+    cond = F.col("_seq") < F.col("_dseq")
+    for c in names:
+        cond = cond & F.col(c).eqNullSafe(F.col(f"_d_{c}"))
+    return keys, cond
 
 
 def read_iceberg_changes(
@@ -914,12 +926,6 @@ def read_iceberg_changes(
     end = len(ids) - 1 if to_snapshot_id is None else ids.index(to_snapshot_id)
     schema = _spark_schema(meta)
     cols = [f.name for f in schema.fields]
-    id_to_name = {
-        f["id"]: f["name"]
-        for f in (meta.get("schema") or (meta.get("schemas") or [{}])[0]).get(
-            "fields", []
-        )
-    }
 
     def scan(entries, keep_pos=False, keep_seq=False):
         if not entries:
@@ -1006,21 +1012,7 @@ def read_iceberg_changes(
                 )
                 df = df.join(pd_df, ["_file", "_pos"], "left_anti")
             for d in old_eq:
-                names = [
-                    id_to_name[i_] for i_ in (d.get("equality_ids") or [])
-                ]
-                if not names:
-                    raise ValueError(
-                        "equality delete file without equality_ids"
-                    )
-                keys = (
-                    spark.read.parquet(os.path.join(path, d["file_path"]))
-                    .select(*[F.col(c).alias(f"_d_{c}") for c in names])
-                    .withColumn("_dseq", F.lit(int(d.get("_seq") or 0)))
-                )
-                cond = F.col("_seq") < F.col("_dseq")
-                for c in names:
-                    cond = cond & F.col(c).eqNullSafe(F.col(f"_d_{c}"))
+                keys, cond = _equality_delete_keys(spark, path, d, meta)
                 df = df.join(keys, cond, "left_anti")
             df = df.drop("_file", "_pos")
             if old_eq:
@@ -1052,22 +1044,10 @@ def read_iceberg_changes(
                     )
                 )
         for d in eq_new:
-            names = [id_to_name[i_] for i_ in (d.get("equality_ids") or [])]
-            if not names:
-                raise ValueError("equality delete file without equality_ids")
-            keys = (
-                spark.read.parquet(os.path.join(path, d["file_path"]))
-                .select(
-                    *[F.col(c).alias(f"_d_{c}") for c in names]
-                )
-                .withColumn("_dseq", F.lit(int(d.get("_seq") or 0)))
-            )
+            keys, cond = _equality_delete_keys(spark, path, d, meta)
             base = scan(list(prev_files.values()), keep_seq=True)
             if base is None:
                 continue
-            cond = F.col("_seq") < F.col("_dseq")
-            for c in names:
-                cond = cond & F.col(c).eqNullSafe(F.col(f"_d_{c}"))
             pieces.append(
                 tag(
                     base.join(keys, cond).select(*cols),

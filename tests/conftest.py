@@ -28,3 +28,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture
+def jobs_in(spark):
+    """``jobs_in(group, fn)`` -> ``(fn(), number of Spark jobs it ran)``,
+    counted in a job group through the status tracker once the listener
+    bus has drained."""
+
+    def count(group, fn):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            sc.setLocalProperty("spark.job.interruptOnCancel", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

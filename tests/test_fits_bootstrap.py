@@ -169,7 +169,10 @@ def test_bootstrap_hash_layouts_agree_and_partition_by_replica(spark):
         assert len(bc[3]) == 7  # one argmin row per replica
         assert bc[4] and not shuffled[4]  # each side took its own layout
         assert bc[5] == []  # MAD aggregate and window need no exchange
-        assert shuffled[5]  # ... which the explode layout does need
+        # the explode layout's one exchange on replica is its own slicing,
+        # below the explodes; the MAD aggregate and window reuse it
+        assert shuffled[5]
+        assert all("REPARTITION_BY_NUM" in line for line in shuffled[5])
         assert not bc[6] and not shuffled[6]
     finally:
         spark.conf.set(_THRESHOLD, old)

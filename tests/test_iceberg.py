@@ -241,20 +241,6 @@ class TestExpireSnapshots:
         assert read_iceberg(spark, root).count() == 10
 
 
-def _jobs_in(spark, group, fn):
-    """``(fn(), number of Spark jobs it ran)``, counted in a job group
-    through the status tracker."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        sc.setLocalProperty("spark.job.interruptOnCancel", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 class TestSortedOneFileCommit:
     """A k-sorted one-file commit written as
     ``repartition(1).sortWithinPartitions`` leaves the same sorted file
@@ -262,7 +248,7 @@ class TestSortedOneFileCommit:
     one file, so the range sort's sampling job buys nothing."""
 
     @pytest.mark.parametrize("fmt", ["iceberg", "delta"])
-    def test_sorted_file_and_job_count(self, spark, tmp_path, fmt):
+    def test_sorted_file_and_job_count(self, spark, tmp_path, fmt, jobs_in):
         import pyarrow.parquet as pq
 
         from etl_market_survey_spark.sources.deltalog import (
@@ -280,8 +266,8 @@ class TestSortedOneFileCommit:
         jobs = {}
         for name, shaped in shapes.items():
             path = str(tmp_path / name)
-            _, jobs[name] = _jobs_in(
-                spark, f"sorted-{fmt}-{name}-{tmp_path.name}",
+            _, jobs[name] = jobs_in(
+                f"sorted-{fmt}-{name}-{tmp_path.name}",
                 lambda: writer(spark, path, shaped, commit_ts=100))
             rels = (
                 [f["file_path"] for f in snapshot_files(path)]
@@ -344,7 +330,7 @@ class TestPositionDeletes:
         assert snapshot_delete_files(path) == []
         assert read_iceberg(spark, path).count() == 30
 
-    def test_delete_file_is_sorted_parquet(self, spark, tmp_path):
+    def test_delete_file_is_sorted_parquet(self, spark, tmp_path, jobs_in):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -360,8 +346,8 @@ class TestPositionDeletes:
         s2, f1, f2 = self._two_file_table(spark, path)
         # the pairs are a driver-side dict: the delete file is written
         # on the driver, so the commit runs no Spark job
-        s3, n_jobs = _jobs_in(
-            spark, f"icedel2-{tmp_path.name}",
+        s3, n_jobs = jobs_in(
+            f"icedel2-{tmp_path.name}",
             lambda: delete_rows_iceberg(
                 spark, path, {f2: [3, 1], f1: [2, 0]}, commit_ts=300),
         )
@@ -425,7 +411,7 @@ class TestEqualityDeletes:
         )
         return write_iceberg(spark, path, df, commit_ts=100)
 
-    def test_basic_equality_delete(self, spark, tmp_path):
+    def test_basic_equality_delete(self, spark, tmp_path, jobs_in):
         from etl_market_survey_spark.sources.iceberg import (
             delete_rows_equality, read_iceberg,
         )
@@ -435,7 +421,12 @@ class TestEqualityDeletes:
         delete_rows_equality(
             spark, path, [{"k": 3}, {"k": 7}], cols=["k"], commit_ts=200
         )
-        got = {r["k"] for r in read_iceberg(spark, path).collect()}
+        # the delete file is read with the table schema's key type: no
+        # inference job while the scan is built
+        df, jobs = jobs_in(f"eq-read-{tmp_path.name}",
+                           lambda: read_iceberg(spark, path))
+        assert jobs == 0
+        got = {r["k"] for r in df.collect()}
         assert got == set(range(20)) - {3, 7}
 
     def test_sequence_scoping_reborn_key(self, spark, tmp_path):

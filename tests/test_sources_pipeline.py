@@ -1,6 +1,7 @@
 """Catalog/name-grammar, sinks, multimodal plumbing, streaming parity and
 pipeline memoization tests."""
 
+import json
 import os
 
 import pytest
@@ -18,8 +19,9 @@ from etl_market_survey_spark.operators.multimodal import (
     sample_frames,
     FEATURE_DIM,
 )
-from etl_market_survey_spark.pipeline import Pipeline
+from etl_market_survey_spark.pipeline import MARKER, Pipeline
 from etl_market_survey_spark.sources.catalog import build_catalog
+from etl_market_survey_spark.sources.readers import read_parquet
 from etl_market_survey_spark.sources.writers import write_csv, write_parquet, write_text_sidecar
 from etl_market_survey_spark.streaming.events import (
     read_event_stream,
@@ -153,7 +155,7 @@ def test_streaming_matches_batch(spark, sf_dir):
     assert s == b and len(s) > 0
 
 
-def test_pipeline_memoization(spark, tmp_path):
+def test_pipeline_memoization(spark, tmp_path, jobs_in):
     pipe = Pipeline(spark, str(tmp_path))
     calls = {"clean": 0, "agg": 0}
 
@@ -174,6 +176,56 @@ def test_pipeline_memoization(spark, tmp_path):
     assert calls == {"clean": 1, "agg": 1}
     pipe.run("agg", force=True)  # force reruns the stage, deps stay memoized
     assert calls == {"clean": 1, "agg": 2}
+
+    # the marker's schema is the one inference gives, and reading the
+    # checkpoint back with it runs no job
+    for name in ("clean", "agg"):
+        out, jobs = jobs_in(f"pipeline-output-{name}-{tmp_path.name}",
+                             lambda: pipe.output(name).schema)
+        assert jobs == 0
+        assert out == spark.read.parquet(str(tmp_path / name)).schema
+    assert sorted(pipe.run("clean").collect()) == spark.range(10).withColumn(
+        "x", F.col("id") * 2).collect()
+
+    # a marker without a schema (written before markers held one) does
+    # not count as done: the stage runs again
+    marker = tmp_path / "agg" / MARKER
+    marker.write_text(json.dumps({"stage": "agg", "completed_at": 0.0}))
+    assert not pipe.is_done("agg")
+    assert pipe.run("agg").collect()[0]["total"] == 90
+    assert calls == {"clean": 1, "agg": 3}
+    assert "schema" in json.loads(marker.read_text())
+    pipe.run("agg")
+    assert calls == {"clean": 1, "agg": 3}
+
+
+def test_read_parquet_remembers_inferred_schema(spark, tmp_path, jobs_in):
+    path = str(tmp_path / "t.parquet")
+    spark.range(5).withColumn("x", F.col("id") * 2).coalesce(1).write.parquet(path)
+    first, jobs = jobs_in(f"read-1-{tmp_path.name}",
+                           lambda: read_parquet(spark, path).schema)
+    assert jobs >= 1  # inference ran
+    again, jobs = jobs_in(f"read-2-{tmp_path.name}",
+                           lambda: read_parquet(spark, path))
+    assert jobs == 0
+    assert again.schema == first == spark.read.parquet(path).schema
+    assert sorted(r["x"] for r in again.collect()) == [0, 2, 4, 6, 8]
+
+    # a rewrite with another schema changes the listing: inferred anew
+    spark.range(3).select(F.col("id").cast("string").alias("s")).coalesce(
+        1).write.mode("overwrite").parquet(path)
+    df = read_parquet(spark, path)
+    assert df.schema == spark.read.parquet(path).schema
+    assert df.columns == ["s"]
+    assert sorted(r["s"] for r in df.collect()) == ["0", "1", "2"]
+
+
+def test_read_parquet_missing_path_raises(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    for _ in range(2):  # nothing is remembered for a path that is not there
+        with pytest.raises(AnalysisException):
+            read_parquet(spark, str(tmp_path / "absent.parquet"))
 
 
 def test_multimodal_real_pil_roundtrip(spark):

@@ -5,6 +5,10 @@ at sf0.01 (override with SPARK_GRAFT_SF_DIR), sorts columns by name and
 rows by all columns, then compares exactly — floats must match bit-for-bit
 (we mimic a value-hash, so "close" is not good enough).
 
+Queries run in the engine's own session (``session.get_spark``, 8 shuffle
+partitions), so every conf the engine sets is oracle-checked too.
+``make gate`` runs it on ``local[8]`` (``SPARK_GRAFT_CPUS=8``).
+
 Usage: python tools/oracle_check.py [query_name ...]
 """
 
@@ -73,15 +77,9 @@ def main() -> int:
     only = set(sys.argv[1:])
 
     import __spark_entry__ as ent
-    from pyspark.sql import SparkSession
+    from etl_market_survey_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .appName("oracle-check")
-        .getOrCreate()
-    )
+    spark = get_spark("oracle-check", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
