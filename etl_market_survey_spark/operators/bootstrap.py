@@ -40,15 +40,15 @@ order; it picks one from the input's size, with no option:
   such an exchange-free chain range-samples it by running the whole
   chain once more; sort the small result in one partition instead
   (``repartition(1).sortWithinPartitions``, as q26 and q38 do).
-- **explode-on-data** (input too big, or broadcast disabled): every input
-  row explodes into its replicas (row blowup = n_replicas on average),
-  and the exploded rows are hash-partitioned on the replica column into
-  the same ``max(n_replicas, defaultParallelism)`` slices. That shuffle
-  runs before the Poisson and downstream explodes, and its slicing comes
-  from the replica count, not from the input's partitioning: a small
-  input shuffle that AQE coalesces to one partition would otherwise run
-  the whole explode and the partial MAD in one task. Downstream
-  clusterings on the replica key reuse the partitioning, as above.
+- **explode-on-data** (input too big, or broadcast disabled): the input
+  rows are hash-partitioned on the row key into the same
+  ``max(n_replicas, defaultParallelism)`` slices, and every row then
+  explodes into its replicas in place (row blowup = n_replicas on
+  average); the downstream grouped aggregation shuffles its partial
+  aggregates on its keys. The shuffle moves each input row once, before
+  the explode. Without it the explode and the partial aggregation keep
+  the input's partitioning, and a small input shuffle that AQE coalesces
+  to one partition runs them in one task.
 
 At 100 TB the explode layout is the one that runs: no per-group Python
 and no driver loop (the reference's 33-iteration loop becomes a replica
@@ -132,7 +132,7 @@ def bootstrap_hash(
         with_rep = F.broadcast(df).crossJoin(reps)
     else:
         rep = F.explode(F.sequence(F.lit(0), F.lit(n_replicas - 1))).alias(id_col)
-        with_rep = df.select("*", rep).repartition(n_slices, id_col)
+        with_rep = df.repartition(n_slices, key_col).select("*", rep)
     cnt = poisson_count_expr(F.col(key_col), F.col(id_col))
     return (
         with_rep.withColumn("_cnt", cnt)

@@ -130,7 +130,8 @@ def q38_time_resolution_pipeline(spark, sf_dir):
     # bootstrap x grid x MAD x argmin chain is ONE lazy plan. When the
     # pulses fit a broadcast, bootstrap_hash's output is already
     # hash-partitioned on replica, so the (k1, k2, replica) MAD and the
-    # per-replica window add no exchange; otherwise it is one shuffle on
+    # per-replica window add no exchange; otherwise the pulses are sliced
+    # on l_orderkey before the explode, and the grid takes one shuffle on
     # (k1, k2, replica) plus one on replica.
     ks = F.array([F.lit(k) for k in range(10, 100, 10)])
     dt = (

@@ -20,35 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
-# inferred Parquet schemas by _schema_key: repeated reads of an unchanged
-# file pass the schema and run no inference job
-_SCHEMAS: dict[tuple, object] = {}
-
-
-def _schema_key(spark: SparkSession, path: str) -> tuple | None:
-    """(absolute path, (path, size, mtime_ns) of each file, nanosAsLong),
-    or None for what cannot be stat'ed locally (URI schemes, globs,
-    missing paths). A directory keys on its sorted file listing."""
-    if "://" in path or any(ch in path for ch in "*?[{"):
-        return None
-    path = os.path.abspath(path)
-    try:
-        if os.path.isdir(path):
-            files = []
-            for root, dirs, names in os.walk(path):
-                dirs.sort()
-                for n in sorted(names):
-                    st = os.stat(os.path.join(root, n))
-                    files.append((os.path.join(root, n), st.st_size, st.st_mtime_ns))
-        else:
-            st = os.stat(path)
-            files = [(path, st.st_size, st.st_mtime_ns)]
-    except OSError:
-        return None
-    return path, tuple(files), spark.conf.get(_NANOS_CONF, "false")
-
-
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """S1 — primary columnar scan.
 
@@ -60,29 +31,16 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     Files that carry ``ts`` as a parquet timestamp (µs precision) are
     normalized at the scan via :func:`ts_to_ns`, so downstream integer
     time arithmetic (`ts div 1000` → µs) is format-independent.
-
-    The inferred schema is remembered per process, keyed on the absolute
-    path, each file's size and ``st_mtime_ns`` (a directory keys on its
-    sorted file listing) and the ``nanosAsLong`` conf it was inferred
-    under. A later read of the unchanged file passes that schema, so Spark
-    runs no job to infer it again. Paths that cannot be stat'ed (URI
-    schemes, globs, missing paths) are inferred on every read.
     """
-    key = _schema_key(spark, path)
-    if key in _SCHEMAS:
-        return ts_to_ns(spark.read.schema(_SCHEMAS[key]).parquet(path))
     try:
         df = spark.read.parquet(path)
         df.schema  # force analysis to surface PARQUET_TYPE_ILLEGAL
+        return ts_to_ns(df)
     except Exception as e:  # noqa: BLE001 — analysis error type varies
-        if "NANOS" not in str(e):
-            raise
-        spark.conf.set(_NANOS_CONF, "true")
-        key = _schema_key(spark, path)
-        df = spark.read.parquet(path)
-    if key is not None:
-        _SCHEMAS[key] = df.schema
-    return ts_to_ns(df)
+        if "NANOS" in str(e):
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            return ts_to_ns(spark.read.parquet(path))
+        raise
 
 
 def ts_to_ns(df: DataFrame, col: str = "ts") -> DataFrame:

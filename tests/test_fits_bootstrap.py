@@ -163,16 +163,18 @@ def test_bootstrap_hash_layouts_agree_and_partition_by_replica(spark):
                 "BroadcastNestedLoopJoin" in plan,
                 _grid_exchanges(out),
                 "CartesianProduct" in plan,
+                [line for line in plan.splitlines() if "REPARTITION_BY_NUM" in line],
             )
         bc, shuffled = runs["10MB"], runs["-1"]
         assert bc[:4] == shuffled[:4]  # same rows, same column order
         assert len(bc[3]) == 7  # one argmin row per replica
         assert bc[4] and not shuffled[4]  # each side took its own layout
         assert bc[5] == []  # MAD aggregate and window need no exchange
-        # the explode layout's one exchange on replica is its own slicing,
-        # below the explodes; the MAD aggregate and window reuse it
-        assert shuffled[5]
-        assert all("REPARTITION_BY_NUM" in line for line in shuffled[5])
+        assert shuffled[5]  # ... which the explode layout does need
+        # the explode layout slices its input rows on the row key, once,
+        # below the explode (the broadcast layout slices the replica ids)
+        assert len(shuffled[7]) == 1 and "hashpartitioning(k#" in shuffled[7][0]
+        assert len(bc[7]) == 1 and "hashpartitioning(replica#" in bc[7][0]
         assert not bc[6] and not shuffled[6]
     finally:
         spark.conf.set(_THRESHOLD, old)

@@ -199,33 +199,11 @@ def test_pipeline_memoization(spark, tmp_path, jobs_in):
     assert calls == {"clean": 1, "agg": 3}
 
 
-def test_read_parquet_remembers_inferred_schema(spark, tmp_path, jobs_in):
-    path = str(tmp_path / "t.parquet")
-    spark.range(5).withColumn("x", F.col("id") * 2).coalesce(1).write.parquet(path)
-    first, jobs = jobs_in(f"read-1-{tmp_path.name}",
-                           lambda: read_parquet(spark, path).schema)
-    assert jobs >= 1  # inference ran
-    again, jobs = jobs_in(f"read-2-{tmp_path.name}",
-                           lambda: read_parquet(spark, path))
-    assert jobs == 0
-    assert again.schema == first == spark.read.parquet(path).schema
-    assert sorted(r["x"] for r in again.collect()) == [0, 2, 4, 6, 8]
-
-    # a rewrite with another schema changes the listing: inferred anew
-    spark.range(3).select(F.col("id").cast("string").alias("s")).coalesce(
-        1).write.mode("overwrite").parquet(path)
-    df = read_parquet(spark, path)
-    assert df.schema == spark.read.parquet(path).schema
-    assert df.columns == ["s"]
-    assert sorted(r["s"] for r in df.collect()) == ["0", "1", "2"]
-
-
 def test_read_parquet_missing_path_raises(spark, tmp_path):
     from pyspark.errors import AnalysisException
 
-    for _ in range(2):  # nothing is remembered for a path that is not there
-        with pytest.raises(AnalysisException):
-            read_parquet(spark, str(tmp_path / "absent.parquet"))
+    with pytest.raises(AnalysisException):
+        read_parquet(spark, str(tmp_path / "absent.parquet"))
 
 
 def test_multimodal_real_pil_roundtrip(spark):
