@@ -1,7 +1,7 @@
 .PHONY: test benchtest gate audit bench all
 
 test:
-	python -m pytest tests/ -q
+	python -m pytest tests/ -q --durations=25
 
 benchtest:
 	python -m pytest perfbench/tests -q

@@ -1660,172 +1660,173 @@ def delete_rows_where(
     if prior_dead_df is not None:
         rows = rows.join(prior_dead_df, ["_file", "_pos"], "left_anti")
     rows = rows.cache()
-    matched = rows.filter(predicate)
+    try:
+        matched = rows.filter(predicate)
 
-    counts = {
-        r["_file"]: r["n"]
-        for r in matched.groupBy("_file").agg(F.count("*").alias("n"))
-        .collect()
-    }
-    if not counts:
-        rows.unpersist()
-        return snap.version  # no-op: nothing matched
-
-    def file_rows(rel, a):
-        st = a.get("stats")
-        if st:
-            try:
-                return int(json.loads(st).get("numRecords") or 0)
-            except (TypeError, ValueError):
-                pass
-        return None
-
-    dv_files, rewrite_files = [], []
-    for rel, a in adds_all:
-        n = counts.get(os.path.basename(rel))
-        if not n:
-            continue
-        total = file_rows(rel, a)
-        if n > dv_row_limit or (
-            total and n / total > rewrite_fraction
-        ):
-            rewrite_files.append(rel)
-        else:
-            dv_files.append(rel)
-
-    cdf_on = (
-        (snap.metadata.get("configuration") or {})
-        .get("delta.enableChangeDataFeed") == "true"
-    )
-    new_version = snap.version + 1
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": commit_ts,
-                "operation": "DELETE",
-                "operationParameters": {"predicate": predicate},
-            }
+        counts = {
+            r["_file"]: r["n"]
+            for r in matched.groupBy("_file").agg(F.count("*").alias("n"))
+            .collect()
         }
-    ]
+        if not counts:
+            return snap.version  # no-op: nothing matched
 
-    # merge-on-read half: fold matched positions into DVs (serialized
-    # executor-side; only per-file blobs reach the driver)
-    if dv_files:
-        dv_bases = [os.path.basename(r) for r in dv_files]
-        merged = _merged_dv_blobs(
-            matched.filter(F.col("_file").isin(dv_bases))
-            .select("_file", "_pos"),
-            prior_dead_df, dv_bases,
-        )
-        u = uuid.uuid4()
-        frames = write_dv_file(
-            os.path.join(path, dv_file_name(u)),
-            [blob for _, blob, _ in merged],
-        )
-        feats = {"deletionVectors"}
-        if snap.column_mapping_mode != "none":
-            feats.add("columnMapping")
-        actions.append(
-            {
-                "protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": sorted(feats),
-                    "writerFeatures": sorted(feats),
-                }
-            }
-        )
-        for (b, _, card), frame in zip(merged, frames):
-            rel = by_base[b]
-            old = snap.adds[rel]
-            actions.append(
-                {"remove": {"path": rel, "deletionTimestamp": commit_ts,
-                            "dataChange": True}}
-            )
-            new_add = dict(old)
-            new_add["dataChange"] = True
-            new_add["modificationTime"] = commit_ts
-            new_add["deletionVector"] = {
-                "storageType": "u",
-                "pathOrInlineDv": encode_dv_path(u),
-                "offset": frame["offset"],
-                "sizeInBytes": frame["sizeInBytes"],
-                "cardinality": card,
-            }
-            actions.append({"add": new_add})
+        def file_rows(rel, a):
+            st = a.get("stats")
+            if st:
+                try:
+                    return int(json.loads(st).get("numRecords") or 0)
+                except (TypeError, ValueError):
+                    pass
+            return None
 
-    # copy-on-write half: restage survivors of heavily-matched files
-    if rewrite_files:
-        bases = [os.path.basename(r) for r in rewrite_files]
-        survivors = (
-            rows.filter(F.col("_file").isin(bases))
-            .filter(f"NOT ({predicate})")
-            .select(*cols)
-        )
-        stage_df = survivors.select(
-            *_phys_cols(cols, phys, snap.field_ids())
-        )
-        data_schema = StructType(
-            [StructField(phys[f.name], f.dataType, f.nullable)
-             for f in schema.fields if f.name not in pcols]
-        )
-        if pcols:
-            staged = _stage_partitioned(
-                spark, path, stage_df, phys.get(pcols[0], pcols[0]),
-                new_version, data_schema, True,
-            )
-        else:
-            rel = f"part-{new_version:05d}-{uuid.uuid4().hex}.parquet"
-            stats = _write_single_parquet_with_stats(
-                stage_df, os.path.join(path, rel), data_schema
-            )
-            staged = [(rel, {}, stats)]
-        for rel in sorted(rewrite_files):
-            actions.append(
-                {"remove": {"path": rel, "deletionTimestamp": commit_ts,
-                            "dataChange": True}}
-            )
-        for rel, pv, stats in staged:
-            if stats and json.loads(stats).get("numRecords") == 0:
-                os.remove(os.path.join(path, rel))
+        dv_files, rewrite_files = [], []
+        for rel, a in adds_all:
+            n = counts.get(os.path.basename(rel))
+            if not n:
                 continue
-            actions.append(
-                {
-                    "add": {
-                        "path": rel,
-                        "partitionValues": pv,
-                        "size": os.path.getsize(os.path.join(path, rel)),
-                        "modificationTime": commit_ts,
-                        "dataChange": True,
-                        "stats": stats,
-                    }
-                }
-            )
+            total = file_rows(rel, a)
+            if n > dv_row_limit or (
+                total and n / total > rewrite_fraction
+            ):
+                rewrite_files.append(rel)
+            else:
+                dv_files.append(rel)
 
-    if cdf_on:
-        cdc_df = matched.select(*cols).withColumn(
-            "_change_type", F.lit("delete")
+        cdf_on = (
+            (snap.metadata.get("configuration") or {})
+            .get("delta.enableChangeDataFeed") == "true"
         )
-        cdc_stage = cdc_df.select(
-            *_phys_cols(cols, phys, snap.field_ids()), "_change_type",
-        )
-        for rel, pv in _stage_cdc(
-            spark, path, cdc_stage,
-            phys.get(pcols[0], pcols[0]) if pcols else None, new_version,
-        ):
+        new_version = snap.version + 1
+        actions: list[dict] = [
+            {
+                "commitInfo": {
+                    "timestamp": commit_ts,
+                    "operation": "DELETE",
+                    "operationParameters": {"predicate": predicate},
+                }
+            }
+        ]
+
+        # merge-on-read half: fold matched positions into DVs (serialized
+        # executor-side; only per-file blobs reach the driver)
+        if dv_files:
+            dv_bases = [os.path.basename(r) for r in dv_files]
+            merged = _merged_dv_blobs(
+                matched.filter(F.col("_file").isin(dv_bases))
+                .select("_file", "_pos"),
+                prior_dead_df, dv_bases,
+            )
+            u = uuid.uuid4()
+            frames = write_dv_file(
+                os.path.join(path, dv_file_name(u)),
+                [blob for _, blob, _ in merged],
+            )
+            feats = {"deletionVectors"}
+            if snap.column_mapping_mode != "none":
+                feats.add("columnMapping")
             actions.append(
                 {
-                    "cdc": {
-                        "path": rel,
-                        "partitionValues": pv,
-                        "size": os.path.getsize(os.path.join(path, rel)),
-                        "dataChange": False,
+                    "protocol": {
+                        "minReaderVersion": 3,
+                        "minWriterVersion": 7,
+                        "readerFeatures": sorted(feats),
+                        "writerFeatures": sorted(feats),
                     }
                 }
             )
-    rows.unpersist()
-    _write_commit(path, new_version, actions)
-    return new_version
+            for (b, _, card), frame in zip(merged, frames):
+                rel = by_base[b]
+                old = snap.adds[rel]
+                actions.append(
+                    {"remove": {"path": rel, "deletionTimestamp": commit_ts,
+                                "dataChange": True}}
+                )
+                new_add = dict(old)
+                new_add["dataChange"] = True
+                new_add["modificationTime"] = commit_ts
+                new_add["deletionVector"] = {
+                    "storageType": "u",
+                    "pathOrInlineDv": encode_dv_path(u),
+                    "offset": frame["offset"],
+                    "sizeInBytes": frame["sizeInBytes"],
+                    "cardinality": card,
+                }
+                actions.append({"add": new_add})
+
+        # copy-on-write half: restage survivors of heavily-matched files
+        if rewrite_files:
+            bases = [os.path.basename(r) for r in rewrite_files]
+            survivors = (
+                rows.filter(F.col("_file").isin(bases))
+                .filter(f"NOT ({predicate})")
+                .select(*cols)
+            )
+            stage_df = survivors.select(
+                *_phys_cols(cols, phys, snap.field_ids())
+            )
+            data_schema = StructType(
+                [StructField(phys[f.name], f.dataType, f.nullable)
+                 for f in schema.fields if f.name not in pcols]
+            )
+            if pcols:
+                staged = _stage_partitioned(
+                    spark, path, stage_df, phys.get(pcols[0], pcols[0]),
+                    new_version, data_schema, True,
+                )
+            else:
+                rel = f"part-{new_version:05d}-{uuid.uuid4().hex}.parquet"
+                stats = _write_single_parquet_with_stats(
+                    stage_df, os.path.join(path, rel), data_schema
+                )
+                staged = [(rel, {}, stats)]
+            for rel in sorted(rewrite_files):
+                actions.append(
+                    {"remove": {"path": rel, "deletionTimestamp": commit_ts,
+                                "dataChange": True}}
+                )
+            for rel, pv, stats in staged:
+                if stats and json.loads(stats).get("numRecords") == 0:
+                    os.remove(os.path.join(path, rel))
+                    continue
+                actions.append(
+                    {
+                        "add": {
+                            "path": rel,
+                            "partitionValues": pv,
+                            "size": os.path.getsize(os.path.join(path, rel)),
+                            "modificationTime": commit_ts,
+                            "dataChange": True,
+                            "stats": stats,
+                        }
+                    }
+                )
+
+        if cdf_on:
+            cdc_df = matched.select(*cols).withColumn(
+                "_change_type", F.lit("delete")
+            )
+            cdc_stage = cdc_df.select(
+                *_phys_cols(cols, phys, snap.field_ids()), "_change_type",
+            )
+            for rel, pv in _stage_cdc(
+                spark, path, cdc_stage,
+                phys.get(pcols[0], pcols[0]) if pcols else None, new_version,
+            ):
+                actions.append(
+                    {
+                        "cdc": {
+                            "path": rel,
+                            "partitionValues": pv,
+                            "size": os.path.getsize(os.path.join(path, rel)),
+                            "dataChange": False,
+                        }
+                    }
+                )
+        _write_commit(path, new_version, actions)
+        return new_version
+    finally:
+        rows.unpersist(True)
 
 
 def update_rows_where(
@@ -1884,178 +1885,179 @@ def update_rows_where(
     if prior_dead_df is not None:
         rows = rows.join(prior_dead_df, ["_file", "_pos"], "left_anti")
     rows = rows.cache()
-    matched = rows.filter(predicate)
-    updated = matched
-    for c, expr in assignments.items():
-        updated = updated.withColumn(c, F.expr(expr))
-    updated = updated.select(*cols)
-    _enforce_constraints(
-        updated, snap.metadata.get("configuration") or {}
-    )
+    try:
+        matched = rows.filter(predicate)
+        updated = matched
+        for c, expr in assignments.items():
+            updated = updated.withColumn(c, F.expr(expr))
+        updated = updated.select(*cols)
+        _enforce_constraints(
+            updated, snap.metadata.get("configuration") or {}
+        )
 
-    counts = {
-        r["_file"]: r["n"]
-        for r in matched.groupBy("_file").agg(F.count("*").alias("n"))
-        .collect()
-    }
-    if not counts:
-        rows.unpersist()
-        return snap.version  # no-op
-
-    def file_rows(a):
-        st = a.get("stats")
-        if st:
-            try:
-                return int(json.loads(st).get("numRecords") or 0)
-            except (TypeError, ValueError):
-                pass
-        return None
-
-    dv_files, rewrite_files = [], []
-    for rel, a in adds_all:
-        n = counts.get(os.path.basename(rel))
-        if not n:
-            continue
-        total = file_rows(a)
-        if n > dv_row_limit or (total and n / total > rewrite_fraction):
-            rewrite_files.append(rel)
-        else:
-            dv_files.append(rel)
-
-    cdf_on = (
-        (snap.metadata.get("configuration") or {})
-        .get("delta.enableChangeDataFeed") == "true"
-    )
-    new_version = snap.version + 1
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": commit_ts,
-                "operation": "UPDATE",
-                "operationParameters": {"predicate": predicate},
-            }
+        counts = {
+            r["_file"]: r["n"]
+            for r in matched.groupBy("_file").agg(F.count("*").alias("n"))
+            .collect()
         }
-    ]
+        if not counts:
+            return snap.version  # no-op
 
-    if dv_files:
-        dv_bases = [os.path.basename(r) for r in dv_files]
-        merged = _merged_dv_blobs(
-            matched.filter(F.col("_file").isin(dv_bases))
-            .select("_file", "_pos"),
-            prior_dead_df, dv_bases,
+        def file_rows(a):
+            st = a.get("stats")
+            if st:
+                try:
+                    return int(json.loads(st).get("numRecords") or 0)
+                except (TypeError, ValueError):
+                    pass
+            return None
+
+        dv_files, rewrite_files = [], []
+        for rel, a in adds_all:
+            n = counts.get(os.path.basename(rel))
+            if not n:
+                continue
+            total = file_rows(a)
+            if n > dv_row_limit or (total and n / total > rewrite_fraction):
+                rewrite_files.append(rel)
+            else:
+                dv_files.append(rel)
+
+        cdf_on = (
+            (snap.metadata.get("configuration") or {})
+            .get("delta.enableChangeDataFeed") == "true"
         )
-        u = uuid.uuid4()
-        frames = write_dv_file(
-            os.path.join(path, dv_file_name(u)),
-            [blob for _, blob, _ in merged],
-        )
-        feats = {"deletionVectors"}
-        if snap.column_mapping_mode != "none":
-            feats.add("columnMapping")
-        actions.append(
+        new_version = snap.version + 1
+        actions: list[dict] = [
             {
-                "protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": sorted(feats),
-                    "writerFeatures": sorted(feats),
+                "commitInfo": {
+                    "timestamp": commit_ts,
+                    "operation": "UPDATE",
+                    "operationParameters": {"predicate": predicate},
                 }
             }
-        )
-        for (b, _, card), frame in zip(merged, frames):
-            rel = by_base[b]
-            old = snap.adds[rel]
-            actions.append(
-                {"remove": {"path": rel, "deletionTimestamp": commit_ts,
-                            "dataChange": True}}
-            )
-            new_add = dict(old)
-            new_add["dataChange"] = True
-            new_add["modificationTime"] = commit_ts
-            new_add["deletionVector"] = {
-                "storageType": "u",
-                "pathOrInlineDv": encode_dv_path(u),
-                "offset": frame["offset"],
-                "sizeInBytes": frame["sizeInBytes"],
-                "cardinality": card,
-            }
-            actions.append({"add": new_add})
+        ]
 
-    # new rows: every matched row's UPDATED values (+ survivors of
-    # rewritten files), one staged append
-    new_rows = updated
-    if rewrite_files:
-        bases = [os.path.basename(r) for r in rewrite_files]
-        survivors = (
-            rows.filter(F.col("_file").isin(bases))
-            .filter(f"NOT ({predicate})")
-            .select(*cols)
-        )
-        new_rows = new_rows.unionByName(survivors)
-        for rel in sorted(rewrite_files):
-            actions.append(
-                {"remove": {"path": rel, "deletionTimestamp": commit_ts,
-                            "dataChange": True}}
+        if dv_files:
+            dv_bases = [os.path.basename(r) for r in dv_files]
+            merged = _merged_dv_blobs(
+                matched.filter(F.col("_file").isin(dv_bases))
+                .select("_file", "_pos"),
+                prior_dead_df, dv_bases,
             )
-    stage_df = new_rows.select(*_phys_cols(cols, phys, snap.field_ids()))
-    data_schema = StructType(
-        [StructField(phys[f.name], f.dataType, f.nullable)
-         for f in schema.fields if f.name not in pcols]
-    )
-    if pcols:
-        staged = _stage_partitioned(
-            spark, path, stage_df, phys.get(pcols[0], pcols[0]),
-            new_version, data_schema, True,
-        )
-    else:
-        rel = f"part-{new_version:05d}-{uuid.uuid4().hex}.parquet"
-        stats = _write_single_parquet_with_stats(
-            stage_df, os.path.join(path, rel), data_schema
-        )
-        staged = [(rel, {}, stats)]
-    for rel, pv, stats in staged:
-        if stats and json.loads(stats).get("numRecords") == 0:
-            os.remove(os.path.join(path, rel))
-            continue
-        actions.append(
-            {
-                "add": {
-                    "path": rel,
-                    "partitionValues": pv,
-                    "size": os.path.getsize(os.path.join(path, rel)),
-                    "modificationTime": commit_ts,
-                    "dataChange": True,
-                    "stats": stats,
-                }
-            }
-        )
-
-    if cdf_on:
-        cdc_df = matched.select(*cols).withColumn(
-            "_change_type", F.lit("update_preimage")
-        ).unionByName(
-            updated.withColumn("_change_type", F.lit("update_postimage"))
-        )
-        cdc_stage = cdc_df.select(
-            *_phys_cols(cols, phys, snap.field_ids()), "_change_type",
-        )
-        for rel, pv in _stage_cdc(
-            spark, path, cdc_stage,
-            phys.get(pcols[0], pcols[0]) if pcols else None, new_version,
-        ):
+            u = uuid.uuid4()
+            frames = write_dv_file(
+                os.path.join(path, dv_file_name(u)),
+                [blob for _, blob, _ in merged],
+            )
+            feats = {"deletionVectors"}
+            if snap.column_mapping_mode != "none":
+                feats.add("columnMapping")
             actions.append(
                 {
-                    "cdc": {
-                        "path": rel,
-                        "partitionValues": pv,
-                        "size": os.path.getsize(os.path.join(path, rel)),
-                        "dataChange": False,
+                    "protocol": {
+                        "minReaderVersion": 3,
+                        "minWriterVersion": 7,
+                        "readerFeatures": sorted(feats),
+                        "writerFeatures": sorted(feats),
                     }
                 }
             )
-    rows.unpersist()
-    _write_commit(path, new_version, actions)
-    return new_version
+            for (b, _, card), frame in zip(merged, frames):
+                rel = by_base[b]
+                old = snap.adds[rel]
+                actions.append(
+                    {"remove": {"path": rel, "deletionTimestamp": commit_ts,
+                                "dataChange": True}}
+                )
+                new_add = dict(old)
+                new_add["dataChange"] = True
+                new_add["modificationTime"] = commit_ts
+                new_add["deletionVector"] = {
+                    "storageType": "u",
+                    "pathOrInlineDv": encode_dv_path(u),
+                    "offset": frame["offset"],
+                    "sizeInBytes": frame["sizeInBytes"],
+                    "cardinality": card,
+                }
+                actions.append({"add": new_add})
+
+        # new rows: every matched row's UPDATED values (+ survivors of
+        # rewritten files), one staged append
+        new_rows = updated
+        if rewrite_files:
+            bases = [os.path.basename(r) for r in rewrite_files]
+            survivors = (
+                rows.filter(F.col("_file").isin(bases))
+                .filter(f"NOT ({predicate})")
+                .select(*cols)
+            )
+            new_rows = new_rows.unionByName(survivors)
+            for rel in sorted(rewrite_files):
+                actions.append(
+                    {"remove": {"path": rel, "deletionTimestamp": commit_ts,
+                                "dataChange": True}}
+                )
+        stage_df = new_rows.select(*_phys_cols(cols, phys, snap.field_ids()))
+        data_schema = StructType(
+            [StructField(phys[f.name], f.dataType, f.nullable)
+             for f in schema.fields if f.name not in pcols]
+        )
+        if pcols:
+            staged = _stage_partitioned(
+                spark, path, stage_df, phys.get(pcols[0], pcols[0]),
+                new_version, data_schema, True,
+            )
+        else:
+            rel = f"part-{new_version:05d}-{uuid.uuid4().hex}.parquet"
+            stats = _write_single_parquet_with_stats(
+                stage_df, os.path.join(path, rel), data_schema
+            )
+            staged = [(rel, {}, stats)]
+        for rel, pv, stats in staged:
+            if stats and json.loads(stats).get("numRecords") == 0:
+                os.remove(os.path.join(path, rel))
+                continue
+            actions.append(
+                {
+                    "add": {
+                        "path": rel,
+                        "partitionValues": pv,
+                        "size": os.path.getsize(os.path.join(path, rel)),
+                        "modificationTime": commit_ts,
+                        "dataChange": True,
+                        "stats": stats,
+                    }
+                }
+            )
+
+        if cdf_on:
+            cdc_df = matched.select(*cols).withColumn(
+                "_change_type", F.lit("update_preimage")
+            ).unionByName(
+                updated.withColumn("_change_type", F.lit("update_postimage"))
+            )
+            cdc_stage = cdc_df.select(
+                *_phys_cols(cols, phys, snap.field_ids()), "_change_type",
+            )
+            for rel, pv in _stage_cdc(
+                spark, path, cdc_stage,
+                phys.get(pcols[0], pcols[0]) if pcols else None, new_version,
+            ):
+                actions.append(
+                    {
+                        "cdc": {
+                            "path": rel,
+                            "partitionValues": pv,
+                            "size": os.path.getsize(os.path.join(path, rel)),
+                            "dataChange": False,
+                        }
+                    }
+                )
+        _write_commit(path, new_version, actions)
+        return new_version
+    finally:
+        rows.unpersist(True)
 
 
 def write_checkpoint(
@@ -2156,11 +2158,21 @@ def _pdf_to_struct_checkpoint(spark: SparkSession, pdf, cp_file: str):
     _write_single_parquet(df.coalesce(1), cp_file)
 
 
-def _write_single_parquet(df: DataFrame, dest: str):
+def _write_single_parquet(df: DataFrame, dest: str, *observed):
     """Spark writes directories; the Delta log references single FILES.
-    Write to a temp dir, move the one part file to ``dest``."""
+    Write to a temp dir, move the one part file to ``dest``.
+
+    ``observed``: aggregate columns folded into the write job through an
+    ``Observation``; returns their row (``None`` when none are given),
+    so a caller that needs the file's row count or bounds pays no
+    second job for them."""
     import shutil
 
+    from pyspark.sql import Observation
+
+    obs = Observation() if observed else None
+    if obs is not None:
+        df = df.observe(obs, *observed)
     tmp = dest + f".__tmp_{uuid.uuid4().hex}"
     with _field_id_write_conf(df):
         df.write.mode("overwrite").parquet(tmp)
@@ -2173,6 +2185,35 @@ def _write_single_parquet(df: DataFrame, dest: str):
     os.makedirs(os.path.dirname(dest), exist_ok=True)
     shutil.move(os.path.join(tmp, part), dest)
     shutil.rmtree(tmp)
+    return obs.get if obs is not None else None
+
+
+@contextlib.contextmanager
+def _materialized(df: DataFrame, *observed):
+    """Evaluate ``df`` ONCE: ``observe`` + eager ``localCheckpoint`` in
+    one job. Yields ``(frame, row)``: the checkpointed frame and the row
+    of the ``observed`` aggregates (``None`` when none are given).
+
+    A row-level writer (MERGE, upsert) reads its source several times —
+    key range, match guard, the kept/updated/inserted joins. Reading
+    one materialized copy scans the source once, and every pass sees
+    the SAME rows even when the source is non-deterministic (Delta
+    Lake's MERGE materializes its source for the same reason). Not
+    ``cache()``: a lost checkpoint block fails the write before its
+    commit instead of silently re-evaluating the source.
+
+    On every exit the checkpoint's blocks are freed, so nothing the
+    writer materialized outlives it."""
+    from pyspark.sql import Observation
+
+    obs = Observation() if observed else None
+    if obs is not None:
+        df = df.observe(obs, *observed)
+    frame = df.localCheckpoint(eager=True)
+    try:
+        yield frame, (obs.get if obs is not None else None)
+    finally:
+        frame._jdf.logicalPlan().rdd().unpersist(True)
 
 
 def _write_single_parquet_with_stats(df: DataFrame, dest: str, schema) -> str:
@@ -2185,7 +2226,6 @@ def _write_single_parquet_with_stats(df: DataFrame, dest: str, schema) -> str:
     re-read was a second full-scan job paid at every commit; folding it
     into the write halves the job count of every unpartitioned
     write/MERGE/DELETE/compact commit."""
-    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     aggs = [F.count(F.lit(1)).alias("_n")]
@@ -2195,9 +2235,7 @@ def _write_single_parquet_with_stats(df: DataFrame, dest: str, schema) -> str:
             F.max(F.col(f.name)).alias(f"mx_{f.name}"),
             F.sum(F.col(f.name).isNull().cast("long")).alias(f"nc_{f.name}"),
         ]
-    obs = Observation()
-    _write_single_parquet(df.observe(obs, *aggs).coalesce(1), dest)
-    row = obs.get
+    row = _write_single_parquet(df.coalesce(1), dest, *aggs)
     return json.dumps(
         {
             "numRecords": row["_n"],
@@ -2894,16 +2932,26 @@ def merge_delta(
     by-source clause, stats pruning is disabled — every file may hold
     by-source rows by definition.
 
-    Scale shape, in order:
+    Scale shape, in order (job counts as Spark runs them under AQE
+    when the source and its keys fit a broadcast, as in q375):
 
-    1. **Stats pruning (driver, zero scan)**: files whose min/max range
+    1. **Materialize the source (one job)**: ``observe`` + local
+       checkpoint (:func:`_materialized`). The same job yields the
+       source's min/max on the first key column. Every later pass
+       reads the checkpoint, so the source is evaluated once and all
+       passes see the same rows; the checkpoint is freed when the
+       MERGE returns or raises.
+    2. **Stats pruning (driver, zero scan)**: files whose min/max range
        on the first key column cannot intersect the source's key range
        are untouched by construction and never scanned.
-    2. **Touched-file discovery (one job)**: candidates scan ⋈ source
-       keys; only the distinct matched file NAMES (metadata-sized, like
-       the log itself) come back to the driver.
-    3. **Rewrite exactly the touched files + insert file (one staged
-       write job)**: untouched candidates keep their add entries
+    3. **Touched-file discovery (5 jobs: the candidate scan's cache,
+       the source keys' shuffle map and broadcast, join with partial
+       aggregate, final aggregate)**: candidates scan ⋈ source keys;
+       only the distinct matched file NAMES (metadata-sized, like the
+       log itself) come back to the driver.
+    4. **Rewrite exactly the touched files + insert file (4 jobs: the
+       broadcasts of the kept, updated and inserted joins, then the
+       staged write)**: untouched candidates keep their add entries
        byte-identical — a MERGE touching 10 of 100k files rewrites 10.
 
     Deletion vectors on touched files are materialized by the rewrite;
@@ -2911,7 +2959,6 @@ def merge_delta(
     changes a row's partition value migrates it naturally (the old
     file is removed, the row is staged into its new partition)."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructField, StructType
 
     if when_matched not in ("update", "delete", None):
         raise ValueError(f"unknown when_matched {when_matched!r}")
@@ -2949,116 +2996,154 @@ def merge_delta(
         raise ValueError(f"source is missing columns: {src_missing}")
     src = source.select(*(cols if need_full else on))
     phys = snap.physical_names()
-    pcols = snap.partition_columns
 
-    # 1. stats pruning on the first key column: source key range
-    # (one tiny agg) vs per-file min/max from the log
+    # 1. materialize the source once; the same job yields its range on
+    # the first key column, and 2. stats pruning sets that range against
+    # the per-file min/max from the log
     adds_all = sorted(snap.adds.items())
     k0 = on[0]
-    if when_not_matched_by_source is not None:
-        # by-source rows are the ones NOT in the source key range —
-        # stats pruning on that range is invalid; every file is a
-        # candidate (the clause's inherent cost, same in real engines)
-        candidates = adds_all
-    else:
-        lo, hi = src.agg(F.min(k0), F.max(k0)).first()
-        candidates = [
-            (rel, a) for rel, a in adds_all
-            if _stats_prune(a, phys.get(k0, k0), lo, hi)
-        ]  # files outside the source key range are untouched by construction
-
-    if has_clauses:
-        return _merge_delta_clauses(
+    with _materialized(
+        src, F.min(k0).alias("lo"), F.max(k0).alias("hi")
+    ) as (src, key_range):
+        if when_not_matched_by_source is not None:
+            # by-source rows are the ones NOT in the source key range —
+            # stats pruning on that range is invalid; every file is a
+            # candidate (the clause's inherent cost, same in real engines)
+            candidates = adds_all
+        else:
+            candidates = [
+                (rel, a) for rel, a in adds_all
+                if _stats_prune(a, phys.get(k0, k0),
+                                key_range["lo"], key_range["hi"])
+            ]  # files outside the source key range are untouched
+        if has_clauses:
+            return _merge_delta_clauses(
+                spark, path, snap, src, on, candidates, adds_all,
+                when_matched=when_matched,
+                when_not_matched=when_not_matched,
+                matched_condition=matched_condition,
+                not_matched_condition=not_matched_condition,
+                when_not_matched_by_source=when_not_matched_by_source,
+                by_source_condition=by_source_condition,
+                commit_ts=commit_ts,
+            )
+        return _merge_delta_plain(
             spark, path, snap, src, on, candidates, adds_all,
             when_matched=when_matched, when_not_matched=when_not_matched,
-            matched_condition=matched_condition,
-            not_matched_condition=not_matched_condition,
-            when_not_matched_by_source=when_not_matched_by_source,
-            by_source_condition=by_source_condition, commit_ts=commit_ts,
+            commit_ts=commit_ts,
         )
 
+
+def _merge_delta_plain(
+    spark: SparkSession,
+    path: str,
+    snap,
+    src: DataFrame,
+    on: list[str],
+    candidates: list,
+    adds_all: list,
+    *,
+    when_matched: str | None,
+    when_not_matched: str | None,
+    commit_ts: int,
+) -> int:
+    """The unconditional MERGE body: key joins against the candidate
+    scan, cached for its several reads and released on every exit (an
+    in-memory columnar cache: its reads prune columns and batches,
+    which a checkpoint's row blocks cannot)."""
+    from pyspark.sql import functions as F
+
+    cols = [f.name for f in snap.schema().fields]
     tgt = _scan_logical_with_file(
         spark, path, snap, [a for _, a in candidates]
     ).cache()
-
-    # 2. touched files + the multiple-source-match guard, ONE job:
-    # only distinct matched file names reach the driver
-    src_keys = src.groupBy(*on).agg(F.count("*").alias("_cnt"))
-    hit = tgt.join(src_keys, on, "inner")
-    row = hit.agg(
-        F.collect_set("_file").alias("fs"), F.max("_cnt").alias("mc")
-    ).first()
-    touched = set(row["fs"] or [])
-    # duplicate source keys only poison MATCHED clauses (an insert-only
-    # MERGE legitimately inserts both copies)
-    if when_matched is not None and row["mc"] is not None and row["mc"] > 1:
-        raise ValueError(
-            "MERGE: a target row matches multiple source rows "
-            "(nondeterministic update/delete)"
-        )
-    if when_matched is None:
-        touched = set()
-
-    # 3. the new row set: surviving rows of touched files (+ updated
-    # values) + not-matched inserts. When the table has
-    # delta.enableChangeDataFeed=true, the SAME frames feed the CDC
-    # sidecar (protocol "Add CDC File"): matched rows pair as
-    # update_preimage/update_postimage — the row-exact pairing the
-    # log-derived feed cannot reconstruct from a copy-on-write rewrite.
-    cdf_on = (
-        (snap.metadata.get("configuration") or {})
-        .get("delta.enableChangeDataFeed") == "true"
-    )
-    parts = []
-    cdc_parts = []
-    if touched:
-        t_rows = tgt.filter(F.col("_file").isin(sorted(touched)))
-        kept = t_rows.join(src.select(*on), on, "left_anti").select(*cols)
-        parts.append(kept)
-        matched_old = (
-            t_rows.join(src.select(*on), on, "left_semi").select(*cols)
-        )
-        if when_matched == "update":
-            updated = (
-                t_rows.select(*on)
-                .join(src, on, "inner")
-                .select(*cols)
+    try:
+        # 3. touched files + the multiple-source-match guard:
+        # only distinct matched file names reach the driver
+        src_keys = src.groupBy(*on).agg(F.count("*").alias("_cnt"))
+        hit = tgt.join(src_keys, on, "inner")
+        row = hit.agg(
+            F.collect_set("_file").alias("fs"), F.max("_cnt").alias("mc")
+        ).first()
+        touched = set(row["fs"] or [])
+        # duplicate source keys only poison MATCHED clauses (an
+        # insert-only MERGE legitimately inserts both copies)
+        mc = row["mc"]
+        if when_matched is not None and mc is not None and mc > 1:
+            raise ValueError(
+                "MERGE: a target row matches multiple source rows "
+                "(nondeterministic update/delete)"
             )
-            parts.append(updated)
+        if when_matched is None:
+            touched = set()
+
+        # 4. the new row set: surviving rows of touched files (+ updated
+        # values) + not-matched inserts. When the table has
+        # delta.enableChangeDataFeed=true, the SAME frames feed the CDC
+        # sidecar (protocol "Add CDC File"): matched rows pair as
+        # update_preimage/update_postimage — the row-exact pairing the
+        # log-derived feed cannot reconstruct from a copy-on-write
+        # rewrite.
+        cdf_on = (
+            (snap.metadata.get("configuration") or {})
+            .get("delta.enableChangeDataFeed") == "true"
+        )
+        parts = []
+        cdc_parts = []
+        if touched:
+            t_rows = tgt.filter(F.col("_file").isin(sorted(touched)))
+            kept = (
+                t_rows.join(src.select(*on), on, "left_anti").select(*cols)
+            )
+            parts.append(kept)
+            matched_old = (
+                t_rows.join(src.select(*on), on, "left_semi").select(*cols)
+            )
+            if when_matched == "update":
+                updated = (
+                    t_rows.select(*on)
+                    .join(src, on, "inner")
+                    .select(*cols)
+                )
+                parts.append(updated)
+                if cdf_on:
+                    cdc_parts.append(
+                        matched_old.withColumn(
+                            "_change_type", F.lit("update_preimage")
+                        )
+                    )
+                    cdc_parts.append(
+                        updated.withColumn(
+                            "_change_type", F.lit("update_postimage")
+                        )
+                    )
+            elif when_matched == "delete" and cdf_on:
+                cdc_parts.append(
+                    matched_old.withColumn("_change_type", F.lit("delete"))
+                )
+        if when_not_matched == "insert":
+            inserted = (
+                src.join(tgt.select(*on), on, "left_anti").select(*cols)
+            )
+            parts.append(inserted)
             if cdf_on:
                 cdc_parts.append(
-                    matched_old.withColumn(
-                        "_change_type", F.lit("update_preimage")
-                    )
+                    inserted.withColumn("_change_type", F.lit("insert"))
                 )
-                cdc_parts.append(
-                    updated.withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                )
-        elif when_matched == "delete" and cdf_on:
-            cdc_parts.append(
-                matched_old.withColumn("_change_type", F.lit("delete"))
-            )
-    if when_not_matched == "insert":
-        inserted = src.join(tgt.select(*on), on, "left_anti").select(*cols)
-        parts.append(inserted)
-        if cdf_on:
-            cdc_parts.append(
-                inserted.withColumn("_change_type", F.lit("insert"))
-            )
-    if not touched and when_not_matched is None:
-        return snap.version  # nothing matched, nothing to insert
+        if not touched and when_not_matched is None:
+            return snap.version  # nothing matched, nothing to insert
 
-    op_params = {
-        "predicate": " AND ".join(f"t.{k} = s.{k}" for k in on),
-        "matched": when_matched,
-        "notMatched": when_not_matched,
-    }
-    return _merge_commit_tail(
-        spark, path, snap, parts, cdc_parts, touched, adds_all,
-        op_params, commit_ts,
-    )
+        op_params = {
+            "predicate": " AND ".join(f"t.{k} = s.{k}" for k in on),
+            "matched": when_matched,
+            "notMatched": when_not_matched,
+        }
+        return _merge_commit_tail(
+            spark, path, snap, parts, cdc_parts, touched, adds_all,
+            op_params, commit_ts,
+        )
+    finally:
+        tgt.unpersist(True)
 
 
 def _merge_commit_tail(
@@ -3210,107 +3295,108 @@ def _merge_delta_clauses(
         .get("delta.enableChangeDataFeed") == "true"
     )
 
-    tgt = (
-        _scan_logical_with_file(spark, path, snap,
-                                [a for _, a in candidates])
-        .withColumn("_rid", F.monotonically_increasing_id())
-        .localCheckpoint()
-    )
+    with contextlib.ExitStack() as held:  # checkpoints freed on exit
+        tgt, _ = held.enter_context(_materialized(
+            _scan_logical_with_file(spark, path, snap,
+                                    [a for _, a in candidates])
+            .withColumn("_rid", F.monotonically_increasing_id())
+        ))
 
-    # nondeterministic-update guard: only matched clauses care
-    if when_matched is not None:
-        src_keys = src.groupBy(*on).agg(F.count("*").alias("_cnt"))
-        mc = tgt.join(src_keys, on, "inner").agg(F.max("_cnt")).first()[0]
-        if mc is not None and mc > 1:
-            raise ValueError(
-                "MERGE: a target row matches multiple source rows "
-                "(nondeterministic update/delete)"
-            )
+        # nondeterministic-update guard: only matched clauses care
+        if when_matched is not None:
+            src_keys = src.groupBy(*on).agg(F.count("*").alias("_cnt"))
+            mc = tgt.join(src_keys, on, "inner").agg(F.max("_cnt")).first()[0]
+            if mc is not None and mc > 1:
+                raise ValueError(
+                    "MERGE: a target row matches multiple source rows "
+                    "(nondeterministic update/delete)"
+                )
 
-    joined = tgt.alias("t").join(src.alias("s"), on, "inner")
-    if matched_condition:
-        joined = joined.filter(F.expr(matched_condition))
-    t_image = [F.col(c) if c in on else F.col(f"t.{c}") for c in cols]
-    s_image = [F.col(c) if c in on else F.col(f"s.{c}") for c in cols]
+        joined = tgt.alias("t").join(src.alias("s"), on, "inner")
+        if matched_condition:
+            joined = joined.filter(F.expr(matched_condition))
+        t_image = [F.col(c) if c in on else F.col(f"t.{c}") for c in cols]
+        s_image = [F.col(c) if c in on else F.col(f"s.{c}") for c in cols]
 
-    dead_parts = []  # (_file, _rid) rows the clauses remove from files
-    parts, cdc_parts = [], []
-    if when_matched in ("update", "delete"):
-        dead_parts.append(joined.select("_file", "_rid"))
-    if when_matched == "update":
-        updated = joined.select(*s_image)
-        parts.append(updated)
-        if cdf_on:
+        dead_parts = []  # (_file, _rid) rows the clauses remove from files
+        parts, cdc_parts = [], []
+        if when_matched in ("update", "delete"):
+            dead_parts.append(joined.select("_file", "_rid"))
+        if when_matched == "update":
+            updated = joined.select(*s_image)
+            parts.append(updated)
+            if cdf_on:
+                cdc_parts.append(
+                    joined.select(*t_image).withColumn(
+                        "_change_type", F.lit("update_preimage")
+                    )
+                )
+                cdc_parts.append(
+                    updated.withColumn(
+                        "_change_type", F.lit("update_postimage")
+                    )
+                )
+        elif when_matched == "delete" and cdf_on:
             cdc_parts.append(
                 joined.select(*t_image).withColumn(
-                    "_change_type", F.lit("update_preimage")
-                )
-            )
-            cdc_parts.append(
-                updated.withColumn(
-                    "_change_type", F.lit("update_postimage")
-                )
-            )
-    elif when_matched == "delete" and cdf_on:
-        cdc_parts.append(
-            joined.select(*t_image).withColumn(
-                "_change_type", F.lit("delete")
-            )
-        )
-    if when_not_matched_by_source == "delete":
-        bysrc = tgt.join(src.select(*on), on, "left_anti")
-        if by_source_condition:
-            bysrc = bysrc.filter(F.expr(by_source_condition))
-        dead_parts.append(bysrc.select("_file", "_rid"))
-        if cdf_on:
-            cdc_parts.append(
-                bysrc.select(*cols).withColumn(
                     "_change_type", F.lit("delete")
                 )
             )
-    if when_not_matched == "insert":
-        inserted = src.join(tgt.select(*on), on, "left_anti")
-        if not_matched_condition:
-            inserted = inserted.filter(F.expr(not_matched_condition))
-        inserted = inserted.select(*cols)
-        parts.append(inserted)
-        if cdf_on:
-            cdc_parts.append(
-                inserted.withColumn("_change_type", F.lit("insert"))
-            )
+        if when_not_matched_by_source == "delete":
+            bysrc = tgt.join(src.select(*on), on, "left_anti")
+            if by_source_condition:
+                bysrc = bysrc.filter(F.expr(by_source_condition))
+            dead_parts.append(bysrc.select("_file", "_rid"))
+            if cdf_on:
+                cdc_parts.append(
+                    bysrc.select(*cols).withColumn(
+                        "_change_type", F.lit("delete")
+                    )
+                )
+        if when_not_matched == "insert":
+            inserted = src.join(tgt.select(*on), on, "left_anti")
+            if not_matched_condition:
+                inserted = inserted.filter(F.expr(not_matched_condition))
+            inserted = inserted.select(*cols)
+            parts.append(inserted)
+            if cdf_on:
+                cdc_parts.append(
+                    inserted.withColumn("_change_type", F.lit("insert"))
+                )
 
-    touched = set()
-    if dead_parts:
-        dead = dead_parts[0]
-        for p in dead_parts[1:]:
-            dead = dead.unionByName(p)
-        dead = dead.localCheckpoint()  # one scan; reused for files + anti
-        touched = {
-            r["_file"] for r in dead.select("_file").distinct().collect()
+        touched = set()
+        if dead_parts:
+            dead = dead_parts[0]
+            for p in dead_parts[1:]:
+                dead = dead.unionByName(p)
+            # one scan; reused for files + anti
+            dead, _ = held.enter_context(_materialized(dead))
+            touched = {
+                r["_file"] for r in dead.select("_file").distinct().collect()
+            }
+            if touched:
+                kept = (
+                    tgt.filter(F.col("_file").isin(sorted(touched)))
+                    .join(dead.select("_rid"), ["_rid"], "left_anti")
+                    .select(*cols)
+                )
+                parts.insert(0, kept)
+        if not touched and when_not_matched is None:
+            return snap.version  # no row removed, nothing to insert
+
+        op_params = {
+            "predicate": " AND ".join(f"t.{k} = s.{k}" for k in on),
+            "matched": when_matched,
+            "matchedCondition": matched_condition,
+            "notMatched": when_not_matched,
+            "notMatchedCondition": not_matched_condition,
+            "notMatchedBySource": when_not_matched_by_source,
+            "notMatchedBySourceCondition": by_source_condition,
         }
-        if touched:
-            kept = (
-                tgt.filter(F.col("_file").isin(sorted(touched)))
-                .join(dead.select("_rid"), ["_rid"], "left_anti")
-                .select(*cols)
-            )
-            parts.insert(0, kept)
-    if not touched and when_not_matched is None:
-        return snap.version  # no row removed, nothing to insert
-
-    op_params = {
-        "predicate": " AND ".join(f"t.{k} = s.{k}" for k in on),
-        "matched": when_matched,
-        "matchedCondition": matched_condition,
-        "notMatched": when_not_matched,
-        "notMatchedCondition": not_matched_condition,
-        "notMatchedBySource": when_not_matched_by_source,
-        "notMatchedBySourceCondition": by_source_condition,
-    }
-    return _merge_commit_tail(
-        spark, path, snap, parts, cdc_parts, touched, adds_all,
-        op_params, commit_ts,
-    )
+        return _merge_commit_tail(
+            spark, path, snap, parts, cdc_parts, touched, adds_all,
+            op_params, commit_ts,
+        )
 
 
 def _stage_cdc(

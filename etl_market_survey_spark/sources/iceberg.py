@@ -40,7 +40,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from .avro import read_avro_records, write_avro_file
-from .deltalog import _write_single_parquet
+from .deltalog import _materialized, _write_single_parquet
 from .iceberg_transforms import (
     parse_transform,
     partition_field_name,
@@ -2025,6 +2025,8 @@ def delete_rows_equality(
     ``values``: list of dicts or a DataFrame holding exactly the
     equality columns. ``cols``: table columns forming the row identity
     (resolved to schema field ids for ``equality_ids``)."""
+    from pyspark.sql import functions as F
+
     cur_v = _current_version(path)
     meta = _load_metadata(path, cur_v)
     schema_fields = (
@@ -2048,9 +2050,11 @@ def delete_rows_equality(
         del_df = spark.createDataFrame(
             [tuple(v.get(c) for c in cols) for v in values], sub
         )
-    n_rows = del_df.count()
     del_rel = f"data/eq-delete-{new_v:05d}-{uuid.uuid4().hex}.parquet"
-    _write_single_parquet(del_df.coalesce(1), os.path.join(path, del_rel))
+    n_rows = _write_single_parquet(
+        del_df.coalesce(1), os.path.join(path, del_rel),
+        F.count(F.lit(1)).alias("n"),
+    )["n"]
 
     _commit_delete_manifest(
         path, meta, new_v, [(del_rel, n_rows)],
@@ -2075,6 +2079,8 @@ def upsert_iceberg(
     re-appended keys are the live ones). Returns the snapshot id.
     Contrast with the copy-on-write MERGE in :mod:`.deltalog` — this is
     the write-cheap/read-deferred half of the same trade."""
+    from pyspark.sql import functions as F
+
     cur_v = _current_version(path)
     meta = _load_metadata(path, cur_v)
     cols = [f.name for f in _spark_schema(meta).fields]
@@ -2095,24 +2101,29 @@ def upsert_iceberg(
         merge_schema=False, allow_spec_evolution=False,
     )
     new_v = plan["new_v"]
-    keys = source.select(*on).dropDuplicates(on)
-    n_keys = keys.count()
-    del_rel = f"data/eq-delete-{new_v:05d}-{uuid.uuid4().hex}.parquet"
-    _write_single_parquet(keys.coalesce(1), os.path.join(path, del_rel))
-
     partition_col = plan["partition_col"]
     pexpr = (
         transform_expr(partition_col, plan["t_kind"], plan["t_param"],
                        plan["src_ice_type"])
         if partition_col else None
     )
-    staged = _stage_iceberg_files(
-        spark, path, source.select(*plan["ordered"]), partition_col,
-        pexpr=pexpr, pfield=plan["pfield"],
-        pv_caster=(
-            _pv_caster_ice(plan["res_ice_type"]) if partition_col else None
-        ),
-    )
+    # the key file and the appended rows read ONE materialized copy of
+    # the source, so they agree on its keys
+    with _materialized(source.select(*cols)) as (src, _):
+        del_rel = f"data/eq-delete-{new_v:05d}-{uuid.uuid4().hex}.parquet"
+        n_keys = _write_single_parquet(
+            src.select(*on).dropDuplicates(on).coalesce(1),
+            os.path.join(path, del_rel),
+            F.count(F.lit(1)).alias("n"),
+        )["n"]
+        staged = _stage_iceberg_files(
+            spark, path, src.select(*plan["ordered"]), partition_col,
+            pexpr=pexpr, pfield=plan["pfield"],
+            pv_caster=(
+                _pv_caster_ice(plan["res_ice_type"]) if partition_col
+                else None
+            ),
+        )
     return _commit_planned_iceberg(
         path, plan, staged, mode="append", commit_ts=commit_ts,
         equality_delete_entries=(
@@ -2197,81 +2208,84 @@ def merge_iceberg(
                    if c not in source.columns]
     if src_missing:
         raise ValueError(f"source is missing columns: {src_missing}")
-    src = source.select(*(cols if need_full else on))
     base_sid = _branch_base(meta, branch)
     cur_sid = _select_snapshot(meta, base_sid, None)["snapshot-id"]
 
-    live = _scan_live_with_pos(spark, path, meta, snapshot_id=base_sid)
-    if live is None:
-        # empty table: only the not-matched clause can fire
-        if when_not_matched != "insert":
-            return cur_sid
-        ins = src.select(*cols)
-        if not_matched_condition:
-            ins = ins.filter(not_matched_condition)
-        if ins.limit(1).count() == 0:
-            return cur_sid
-        return write_iceberg(spark, path, ins, commit_ts=commit_ts,
-                             branch=branch)
+    # every pass below reads ONE materialized copy of the source, freed
+    # when the MERGE returns or raises
+    src_cols = cols if need_full else on
+    with _materialized(source.select(*src_cols)) as (src, _):
+        live = _scan_live_with_pos(spark, path, meta, snapshot_id=base_sid)
+        if live is None:
+            # empty table: only the not-matched clause can fire
+            if when_not_matched != "insert":
+                return cur_sid
+            ins = src.select(*cols)
+            if not_matched_condition:
+                ins = ins.filter(not_matched_condition)
+            if ins.limit(1).count() == 0:
+                return cur_sid
+            return write_iceberg(spark, path, ins, commit_ts=commit_ts,
+                                 branch=branch)
 
-    # nondeterministic-update guard: a target row matching >1 source row
-    if when_matched is not None:
-        src_keys = src.groupBy(*on).agg(F.count("*").alias("_cnt"))
-        mc = (
-            live.join(src_keys, on, "inner")
-            .agg(F.max("_cnt")).first()[0]
-        )
-        if mc is not None and mc > 1:
-            raise ValueError(
-                "MERGE: a target row matches multiple source rows "
-                "(nondeterministic update/delete)"
+        # nondeterministic-update guard: a target row matching >1 source row
+        if when_matched is not None:
+            src_keys = src.groupBy(*on).agg(F.count("*").alias("_cnt"))
+            mc = (
+                live.join(src_keys, on, "inner")
+                .agg(F.max("_cnt")).first()[0]
             )
+            if mc is not None and mc > 1:
+                raise ValueError(
+                    "MERGE: a target row matches multiple source rows "
+                    "(nondeterministic update/delete)"
+                )
 
-    joined = live.alias("t").join(src.alias("s"), on, "inner")
-    if matched_condition:
-        joined = joined.filter(F.expr(matched_condition))
+        joined = live.alias("t").join(src.alias("s"), on, "inner")
+        if matched_condition:
+            joined = joined.filter(F.expr(matched_condition))
 
-    del_parts = []
-    append_parts = []
-    if when_matched in ("update", "delete"):
-        del_parts.append(joined.select("_if", "_ip"))
-    if when_matched == "update":
-        append_parts.append(
-            joined.select(
-                *[
-                    F.col(c) if c in on else F.col(f"s.{c}")
-                    for c in cols
-                ]
+        del_parts = []
+        append_parts = []
+        if when_matched in ("update", "delete"):
+            del_parts.append(joined.select("_if", "_ip"))
+        if when_matched == "update":
+            append_parts.append(
+                joined.select(
+                    *[
+                        F.col(c) if c in on else F.col(f"s.{c}")
+                        for c in cols
+                    ]
+                )
             )
-        )
-    if when_not_matched_by_source == "delete":
-        bysrc = live.join(src.select(*on), on, "left_anti")
-        if by_source_condition:
-            bysrc = bysrc.filter(by_source_condition)
-        del_parts.append(bysrc.select("_if", "_ip"))
-    if when_not_matched == "insert":
-        ins = src.join(live.select(*on), on, "left_anti")
-        if not_matched_condition:
-            ins = ins.filter(not_matched_condition)
-        append_parts.append(ins.select(*cols))
+        if when_not_matched_by_source == "delete":
+            bysrc = live.join(src.select(*on), on, "left_anti")
+            if by_source_condition:
+                bysrc = bysrc.filter(by_source_condition)
+            del_parts.append(bysrc.select("_if", "_ip"))
+        if when_not_matched == "insert":
+            ins = src.join(live.select(*on), on, "left_anti")
+            if not_matched_condition:
+                ins = ins.filter(not_matched_condition)
+            append_parts.append(ins.select(*cols))
 
-    appended = None
-    if append_parts:
-        appended = append_parts[0]
-        for p in append_parts[1:]:
-            appended = appended.unionByName(p)
-    dels = None
-    if del_parts:
-        dels = del_parts[0]
-        for p in del_parts[1:]:
-            dels = dels.unionByName(p)
-    # ONE atomic commit for the whole MERGE (real Iceberg behavior —
-    # no intermediate deleted-only snapshot; VERDICT r9 item 4's
-    # update_rows_where fix, shared)
-    return _single_commit_delete_append(
-        spark, path, meta, cur_v, dels, appended, commit_ts=commit_ts,
-        branch=branch,
-    )
+        appended = None
+        if append_parts:
+            appended = append_parts[0]
+            for p in append_parts[1:]:
+                appended = appended.unionByName(p)
+        dels = None
+        if del_parts:
+            dels = del_parts[0]
+            for p in del_parts[1:]:
+                dels = dels.unionByName(p)
+        # ONE atomic commit for the whole MERGE (real Iceberg behavior —
+        # no intermediate deleted-only snapshot; VERDICT r9 item 4's
+        # update_rows_where fix, shared)
+        return _single_commit_delete_append(
+            spark, path, meta, cur_v, dels, appended, commit_ts=commit_ts,
+            branch=branch,
+        )
 
 
 def _single_commit_delete_append(

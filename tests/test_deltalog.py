@@ -822,6 +822,92 @@ class TestMergeDelta:
             merge_delta(spark, path, src.select("k"), on=["k"])
 
 
+
+def _kpt_target(spark, path, n=100):
+    """(k, pr, tp) table with keys 0..n-1 and no '5-LOW' row, so the
+    by-source clause of q395's clause set removes nothing."""
+    prs = ["1-URGENT", "2-HIGH", "3-MEDIUM"]
+    write_delta(
+        spark, path,
+        spark.createDataFrame(
+            [(k, prs[k % 3], float(k)) for k in range(n)],
+            "k long, pr string, tp double",
+        ),
+        commit_ts=100,
+    )
+
+
+def _merge_clauses(kind):
+    from etl_market_survey_spark.plans.q_misc import _MERGE_CLAUSES
+
+    return _MERGE_CLAUSES if kind == "clauses" else {}
+
+
+class TestMergeReadsSourceOnce:
+    """merge_delta materializes its source in one job: the plain path
+    and the clause path read that one copy, so the source is evaluated
+    once per row and a non-deterministic source still commits a
+    consistent table; nothing it cached or checkpointed outlives it."""
+
+    @pytest.mark.parametrize("kind", ["plain", "clauses"])
+    def test_source_evaluated_once(
+        self, spark, tmp_path, kind, merge_source, held_cache
+    ):
+        from etl_market_survey_spark.sources.deltalog import merge_delta
+
+        path = str(tmp_path / "once")
+        _kpt_target(spark, path)
+        src, evals = merge_source(60)  # keys 0, 2, .., 118
+        merge_delta(spark, path, src, on=["k"], commit_ts=200,
+                    **_merge_clauses(kind))
+        assert evals.value == 60
+        assert held_cache() == (True, 0)
+        keys = sorted(r["k"] for r in read_delta(spark, path).collect())
+        assert keys == list(range(100)) + list(range(100, 120, 2))
+
+    @pytest.mark.parametrize("kind", ["plain", "clauses"])
+    def test_nondeterministic_source_commits_consistently(
+        self, spark, tmp_path, kind, merge_source
+    ):
+        from etl_market_survey_spark.sources.deltalog import merge_delta
+
+        path = str(tmp_path / "coin")
+        _kpt_target(spark, path)
+        src, _ = merge_source(50, coin=True)  # one key of each pair
+        merge_delta(spark, path, src, on=["k"], commit_ts=200,
+                    **_merge_clauses(kind))
+        rows = read_delta(spark, path).collect()
+        assert sorted(r["k"] for r in rows) == list(range(100))
+        merged = [r["k"] // 2 for r in rows if r["pr"] == "MERGED"]
+        assert len(merged) == len(set(merged))  # one per key pair
+        if kind == "plain":
+            assert len(merged) == 50
+
+    @pytest.mark.parametrize("kind", ["plain", "clauses"])
+    def test_raise_and_no_op_free_the_cache(
+        self, spark, tmp_path, kind, held_cache
+    ):
+        from etl_market_survey_spark.sources.deltalog import merge_delta
+
+        path = str(tmp_path / "held")
+        _kpt_target(spark, path)
+        dup = spark.createDataFrame(
+            [(3, "X", 1.0), (3, "Y", 2.0)], "k long, pr string, tp double"
+        )
+        with pytest.raises(ValueError, match="multiple source rows"):
+            merge_delta(spark, path, dup, on=["k"], commit_ts=200,
+                        **_merge_clauses(kind))
+        assert held_cache() == (True, 0)
+        v = load_snapshot(path).version
+        miss = spark.createDataFrame(
+            [(500, "X", 1.0)], "k long, pr string, tp double"
+        )
+        assert merge_delta(spark, path, miss, on=["k"], commit_ts=200,
+                           **{**_merge_clauses(kind),
+                              "when_not_matched": None}) == v
+        assert held_cache() == (True, 0)
+
+
 class TestSchemaEvolution:
     """Schema enforcement + merge_schema evolution: mismatched appends
     are rejected instead of silently corrupting the table; widened

@@ -600,6 +600,96 @@ class TestUpsert:
             )
 
 
+
+class TestRowLevelWritersReadSourceOnce:
+    """merge_iceberg and upsert_iceberg materialize their source in one
+    job: the source is evaluated once per row, a non-deterministic
+    source still commits a consistent table, and nothing checkpointed
+    outlives the write. delete_rows_equality counts its keys on the
+    write itself."""
+
+    def _target(self, spark, path, n=100):
+        from etl_market_survey_spark.sources.iceberg import write_iceberg
+
+        write_iceberg(
+            spark, path,
+            spark.createDataFrame(
+                [(k, "ORIG", float(k)) for k in range(n)],
+                "k long, pr string, tp double",
+            ),
+            commit_ts=100,
+        )
+
+    def _write(self, spark, path, writer, src):
+        from etl_market_survey_spark.sources.iceberg import (
+            merge_iceberg, upsert_iceberg,
+        )
+
+        fn = merge_iceberg if writer == "merge" else upsert_iceberg
+        return fn(spark, path, src, ["k"], commit_ts=200)
+
+    @pytest.mark.parametrize("writer", ["merge", "upsert"])
+    def test_source_evaluated_once(
+        self, spark, tmp_path, writer, merge_source, held_cache
+    ):
+        path = str(tmp_path / "once")
+        self._target(spark, path)
+        src, evals = merge_source(60)  # keys 0, 2, .., 118
+        self._write(spark, path, writer, src)
+        assert evals.value == 60
+        assert held_cache() == (True, 0)
+        got = {r["k"]: r["pr"] for r in read_iceberg(spark, path).collect()}
+        assert sorted(got) == list(range(100)) + list(range(100, 120, 2))
+        assert sum(pr == "MERGED" for pr in got.values()) == 60
+
+    @pytest.mark.parametrize("writer", ["merge", "upsert"])
+    def test_nondeterministic_source_commits_consistently(
+        self, spark, tmp_path, writer, merge_source
+    ):
+        path = str(tmp_path / "coin")
+        self._target(spark, path)
+        src, _ = merge_source(50, coin=True)  # one key of each pair
+        self._write(spark, path, writer, src)
+        rows = read_iceberg(spark, path).collect()
+        assert sorted(r["k"] for r in rows) == list(range(100))
+        merged = {r["k"] // 2 for r in rows if r["pr"] == "MERGED"}
+        assert merged == set(range(50))  # exactly one per key pair
+
+    def test_merge_raise_frees_the_checkpoint(
+        self, spark, tmp_path, held_cache
+    ):
+        path = str(tmp_path / "held")
+        self._target(spark, path)
+        dup = spark.createDataFrame(
+            [(3, "X", 1.0), (3, "Y", 2.0)], "k long, pr string, tp double"
+        )
+        with pytest.raises(ValueError, match="multiple source rows"):
+            self._write(spark, path, "merge", dup)
+        assert held_cache() == (True, 0)
+
+    def test_equality_delete_counts_on_the_write(
+        self, spark, tmp_path, jobs_in
+    ):
+        from etl_market_survey_spark.sources.iceberg import (
+            delete_rows_equality, snapshot_delete_files,
+        )
+
+        path = str(tmp_path / "eqn")
+        self._target(spark, path)
+        _, n_jobs = jobs_in(
+            f"eq-count-{tmp_path.name}",
+            lambda: delete_rows_equality(
+                spark, path, [{"k": 4}, {"k": 7}, {"k": 500}], cols=["k"],
+                commit_ts=200,
+            ),
+        )
+        assert n_jobs == 1  # the write; its row count is observed on it
+        (d,) = snapshot_delete_files(path)
+        assert d["record_count"] == 3
+        keys = {r["k"] for r in read_iceberg(spark, path).collect()}
+        assert keys == set(range(100)) - {4, 7}
+
+
 class TestSchemaEvolution:
     """merge_schema evolution with STABLE field ids (equality_ids and
     partition source-ids depend on them); enforcement rejects silent
@@ -1505,7 +1595,7 @@ class TestNamedRefs:
 
 
 class TestCheckConstraints:
-    def test_all_write_paths_enforce(self, spark, tmp_path):
+    def test_all_write_paths_enforce(self, spark, tmp_path, held_cache):
         from etl_market_survey_spark.sources.deltalog import (
             merge_delta, read_delta, update_rows_where, write_delta,
         )
@@ -1528,6 +1618,7 @@ class TestCheckConstraints:
                         spark.createDataFrame([(1, -2)],
                                               "k long, v long"),
                         ["k"], commit_ts=400)
+        assert held_cache() == (True, 0)  # the failed writes freed theirs
         # nothing committed by the failed writes; valid writes pass
         write_delta(spark, path,
                     spark.createDataFrame([(9, 90)], "k long, v long"),
