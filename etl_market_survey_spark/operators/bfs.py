@@ -9,10 +9,10 @@ Scale shape: one equi-join shuffle per level on the frontier (which is
 a tiny fraction of the graph after level 1), with a **visited-set
 anti-join** so a node is expanded exactly once — the textbook
 distributed BFS pruning; without it frontier sizes grow with walk
-counts, not node counts. Each level is eagerly ``localCheckpoint``-ed
-(the repo's iterative-lineage discipline, kcore.py:44) so level N's
-plan never replays levels 1..N-1 and a task retry re-reads
-materialized blocks.
+counts, not node counts. Each level is an observed checkpoint
+(:func:`.checkpoint.checkpoint`): level N's plan never replays levels
+1..N-1, a task retry re-reads materialized blocks, and the level's row
+count comes from the same job.
 
 Exactness: min-hop distances are invariant to the pruning — a DuckDB
 recursive CTE *without* pruning (walk semantics + ``MIN(hop)``) yields
@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .checkpoint import checkpoint
 
 
 def bfs_hops(
@@ -44,7 +46,7 @@ def bfs_hops(
     ``pagerank_fixed_point``'s ``broadcast_ranks``); billion-node
     graphs keep the default shuffle joins. The default ``None``
     auto-gates PER LEVEL on the exact visited-set row count (already
-    known: every level is eagerly checkpointed and counted) vs
+    known: every level's checkpoint job counts its rows) vs
     ``autoBroadcastJoinThreshold`` — a runtime size check, no per-query
     assumption; a frontier wave that outgrows the threshold falls back
     to shuffle joins mid-traversal. Pass True/False to override."""
@@ -68,21 +70,19 @@ def bfs_hops(
         )
         fr_in = F.broadcast(frontier) if bcast else frontier
         vis_in = F.broadcast(visited) if bcast else visited
-        nxt = (
+        # the row count is the emptiness check and the exact visited
+        # size the next level's broadcast gate needs
+        nxt, seen = checkpoint(
             fr_in.join(e, fr_in["node"] == e["_src"])
             .select(F.col("_dst").alias("node"))
             .distinct()
             .join(vis_in, "node", "left_anti")
-            .withColumn("hops", F.lit(i).cast("int"))
-            .localCheckpoint(eager=True)
+            .withColumn("hops", F.lit(i).cast("int")),
+            F.count(F.lit(1)).alias("n"),
         )
-        # count over the just-materialized blocks (no recompute): the
-        # emptiness check take(1) did, plus the exact visited size the
-        # next level's broadcast gate needs
-        n_new = nxt.count()
-        if n_new == 0:
+        if seen["n"] == 0:
             break
-        visited_rows += n_new
+        visited_rows += seen["n"]
         levels.append(nxt)
         frontier = nxt
         # every level is already an eager checkpoint, so the visited

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .checkpoint import checkpoint
 from .components import connected_components
 
 
@@ -83,7 +84,8 @@ def minimum_spanning_forest(
             )
             .filter(F.col("cu") != F.col("cv"))
         )
-        sel = (
+        # consumed 3x below; the emptiness check rides on its job
+        sel, seen = checkpoint(
             el.groupBy("cu")
             .agg(F.min(F.struct("w", "u", "v", "cv")).alias("m"))
             .select(
@@ -92,10 +94,10 @@ def minimum_spanning_forest(
                 F.col("m.u").alias("u"),
                 F.col("m.v").alias("v"),
                 F.col("m.cv").alias("cv"),
-            )
-            .localCheckpoint(eager=True)  # consumed 3x below
+            ),
+            F.count(F.lit(1)).alias("n"),
         )
-        if sel.isEmpty():
+        if seen["n"] == 0:
             break
         # ``sel`` is already checkpointed, so the forest union's lineage
         # is bounded at one select per round — no per-round eager cut
@@ -130,9 +132,3 @@ def minimum_spanning_forest(
             F.col("eu").alias("u"), F.col("ev").alias("v"), "w"
         ).limit(0)
     return forest.distinct()
-
-
-def msf_components(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
-    """Convenience: (node, comp) labels of the forest's components —
-    identical to connected components of the input graph."""
-    return connected_components(edges, src, dst)

@@ -17,7 +17,7 @@ Per merge round, all JVM-side:
 - merge application: a left-to-right greedy fold (``F.aggregate`` with
   an array accumulator) — the exact non-overlapping merge semantics of
   the reference implementation, in whole-stage codegen, no Python;
-- ``localCheckpoint`` per round (the iterative-lineage discipline).
+- ``localCheckpoint`` per round (the lineage discipline of :mod:`.checkpoint`).
 
 The merge sequence is deterministic for a given corpus; units pin it
 against an independent pure-Python BPE, and q217 exact-gates the pair

@@ -29,7 +29,7 @@ twice — and one left join back onto the (always-total) label table
 Iterations are a driver loop with EAGER localCheckpoint cuts every few
 rounds: each round references the label table twice, so the lazy plan
 doubles per round and an uncut loop goes exponential in plan size —
-the cut caps it at 2^checkpoint_every for one tiny nodes-sized
+the cut caps it at 2^CHECKPOINT_EVERY for one tiny nodes-sized
 materialization per cut (the Pregel-as-DataFrame shape shared with
 pagerank/kcore/sssp, with the two-reference caveat called out).
 """
@@ -39,11 +39,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: Rounds between eager cuts of the label table (broadcast mode: 1).
+CHECKPOINT_EVERY = 4
+
 
 def label_propagation(
     edges: DataFrame,
     n_iter: int = 4,
-    checkpoint_every: int = 4,
     broadcast_labels: bool | None = None,
     src_total: bool = False,
 ) -> DataFrame:
@@ -99,8 +101,7 @@ def label_propagation(
         broadcast_labels = multi and rows_fit_broadcast(
             edges.sparkSession, nodes.count()
         )
-    if broadcast_labels:
-        checkpoint_every = 1
+    every = 1 if broadcast_labels else CHECKPOINT_EVERY
     labels = nodes.select("node", F.col("node").alias("label"))
     for i in range(n_iter):
         lab_in = F.broadcast(labels) if broadcast_labels else labels
@@ -125,12 +126,12 @@ def label_propagation(
         labels = labels.join(best_in, "node", "left").select(
             "node", F.coalesce(F.col("_new"), F.col("label")).alias("label")
         )
-        if (i + 1) % checkpoint_every == 0 and i != n_iter - 1:
+        if (i + 1) % every == 0 and i != n_iter - 1:
             # EAGER cut: each round references the label table TWICE
             # (the message join and the keep-old coalesce), so the lazy
             # plan DOUBLES per round — 2^n subtrees by round n. An
             # eager checkpoint every few rounds caps plan size at
-            # 2^checkpoint_every for a tiny nodes-sized materialization.
+            # 2^CHECKPOINT_EVERY for a tiny nodes-sized materialization.
             labels = labels.localCheckpoint(eager=True)
         elif i == n_iter - 1:
             labels = labels.localCheckpoint(eager=False)

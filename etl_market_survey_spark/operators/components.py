@@ -15,8 +15,8 @@ have tiny diameters; pathological chains converge in log rounds thanks
 to the jumping). Per round: two shuffles bounded by |edges| and |nodes|;
 lineage is truncated with an eager localCheckpoint so round N's plan
 does not replay rounds 1..N-1 (iterative-algorithm hygiene on any
-cluster). Convergence is detected by counting changed labels — a
-metadata-sized aggregate, not a collect of the labels.
+cluster). Convergence is detected by counting changed labels on the
+round's checkpoint job (:func:`.checkpoint.checkpoint`).
 
 The result is deterministic (component id = min node id in the
 component) and engine-checkable: the q67 oracle recomputes the closure
@@ -27,8 +27,10 @@ beyond-reference scope.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .checkpoint import checkpoint
 
 
 #: Below this many (deduped, directed) edges the component labels are
@@ -91,18 +93,14 @@ def connected_components(
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     # the size gate rides on the checkpoint's own job (no separate agg)
-    obs = Observation()
-    und = und.observe(
-        obs,
+    und, gate = checkpoint(
+        und,
         F.count(F.lit(1)).alias("n"),
-        F.sum(
-            (F.col("a").isNull() | F.col("b").isNull()).cast("int")
-        ).alias("nulls"),
-    ).localCheckpoint(eager=True)
-    gate = obs.get
+        F.count_if(F.col("a").isNull() | F.col("b").isNull()).alias("nulls"),
+    )
     # null node ids keep the distributed path (they don't order in the
     # driver union-find; join semantics handle them as before)
-    if gate["n"] <= _DRIVER_UF_MAX_EDGES and not (gate["nulls"] or 0):
+    if gate["n"] <= _DRIVER_UF_MAX_EDGES and not gate["nulls"]:
         return _driver_union_find(und)
 
     labels = (
@@ -134,7 +132,7 @@ def connected_components(
             .localCheckpoint(eager=True)  # consumed twice by the self-join
         )
         # pointer jump: comp := comp's comp (halves chain lengths)
-        jumped = (
+        jumped, seen = checkpoint(
             stepped.alias("s")
             .join(
                 stepped.select(
@@ -149,12 +147,11 @@ def connected_components(
                 F.least(F.col("comp"), F.coalesce(F.col("_cc"), F.col("comp"))).alias(
                     "comp"
                 ),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            F.count_if(~F.col("comp").eqNullSafe(F.col("_prev"))).alias("changed"),
         )
-        changed = jumped.filter(F.col("comp") != F.col("_prev")).count()
         labels = jumped.select("node", "comp")
-        if changed == 0:
+        if seen["changed"] == 0:
             return labels
     raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
 

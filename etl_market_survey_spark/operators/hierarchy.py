@@ -11,17 +11,20 @@ does one unit of assembly Y ultimately contain".
 
 Spark-first shape: iterated parent-hops — level k+1 joins level k's
 ancestor against the edge table's child (one equi-join shuffle per
-level, frontier shrinks as paths top out), per-round lineage cuts,
-O(depth) rounds. Quantities multiply in exact int64 (guarded: the
-caller bounds qty^depth; 50^8 still fits). The DuckDB oracle is the
-textbook recursive CTE — paths are unique in a forest, so UNION ALL
-replays the identical row set (q248).
+level, frontier shrinks as paths top out), observed checkpoints
+(:func:`.checkpoint.checkpoint`), O(depth) rounds; a hierarchy deeper
+than ``max_depth`` (or a cycle) raises. Quantities multiply in exact
+int64 (guarded: the caller bounds qty^depth; 50^8 still fits). The
+DuckDB oracle is the textbook recursive CTE — paths are unique in a
+forest, so UNION ALL replays the identical row set (q248).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .checkpoint import checkpoint
 
 
 def weighted_closure(
@@ -32,7 +35,7 @@ def weighted_closure(
     max_depth: int = 32,
 ) -> DataFrame:
     """(descendant, ancestor, total_qty, depth) for every ancestor on
-    each node's root path."""
+    each node's root path; raises past ``max_depth`` levels."""
     e = edges.select(
         F.col(child_col).alias("_c"),
         F.col(parent_col).alias("_p"),
@@ -45,19 +48,23 @@ def weighted_closure(
         F.lit(1).alias("depth"),
     ).localCheckpoint(eager=True)
     out = [level]
-    for d in range(2, max_depth + 1):
-        nxt = (
-            level.join(e, level["ancestor"] == e["_c"])
-            .select(
+    # level max_depth + 1 is run only to prove it empty
+    for d in range(2, max_depth + 2):
+        nxt, seen = checkpoint(
+            level.join(e, level["ancestor"] == e["_c"]).select(
                 "descendant",
                 F.col("_p").alias("ancestor"),
                 (F.col("total_qty") * F.col("_q")).alias("total_qty"),
                 F.lit(d).alias("depth"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            F.count(F.lit(1)).alias("n"),
         )
-        if not nxt.take(1):
+        if seen["n"] == 0:
             break
+        if d > max_depth:
+            raise ValueError(
+                f"weighted_closure: deeper than max_depth={max_depth} (or a cycle)"
+            )
         out.append(nxt)
         level = nxt
     res = out[0]

@@ -6,9 +6,9 @@ under-degree nodes (Matula & Beck 1983). Each peel can cascade — a
 node's removal drops its neighbors' degrees — so this is inherently
 iterative, like the PageRank and connected-components loops here: per
 round one degree aggregation + two semi-joins, lineage truncated with an
-eager localCheckpoint (round N's plan must not replay rounds 1..N-1),
-early exit at the fixpoint. Rounds are bounded by the peel depth
-(diameter-ish in practice, << node count), not by |V|.
+observed checkpoint (:func:`.checkpoint.checkpoint`) that counts the
+surviving edges, exit at the fixpoint. Every other round removes an
+edge; rounds are the peel depth (diameter-ish, << node count).
 
 Exactness: pure integer degree arithmetic — the q122 gate unrolls the
 same peel as SQL CTE stages past the fixpoint (peeling is idempotent
@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .checkpoint import checkpoint
+
 
 def _degrees(edges: DataFrame) -> DataFrame:
     return (
@@ -35,26 +37,24 @@ def _degrees(edges: DataFrame) -> DataFrame:
     )
 
 
-def k_core(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
+def k_core(edges: DataFrame, k: int) -> DataFrame:
     """Surviving ``(node, deg)`` of the k-core of the canonical edge set
     (``a < b`` distinct; see triangles.canonical_edges). Empty result if
     the core is empty. ``deg`` is the node's degree WITHIN the core."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    cur = edges.select("a", "b").localCheckpoint(eager=True)
-    n_edges = cur.count()
-    for _ in range(max_iter):
+    n = F.count(F.lit(1)).alias("n")
+    cur, seen = checkpoint(edges.select("a", "b"), n)
+    n_edges = seen["n"]
+    while n_edges:
         keep = _degrees(cur).filter(F.col("deg") >= k).select("node")
-        nxt = (
+        nxt, seen = checkpoint(
             cur.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
-            .select("a", "b")
-            .localCheckpoint(eager=True)
+            .select("a", "b"),
+            n,
         )
-        n_next = nxt.count()
-        if n_next == n_edges:
+        if seen["n"] == n_edges:
             break
-        cur, n_edges = nxt, n_next
-        if n_edges == 0:
-            break
+        cur, n_edges = nxt, seen["n"]
     return _degrees(cur).filter(F.col("deg") >= k)

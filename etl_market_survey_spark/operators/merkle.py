@@ -12,7 +12,9 @@ lakehouse manifest verification.
 Scale shape: level L has n / fanout^L nodes — one map-side-combined
 aggregation per level on integer bucket keys, no shuffle wider than the
 level itself; the driver loop runs log_fanout(n) rounds on
-geometrically shrinking frames. Order inside a node comes from
+geometrically shrinking frames, each level's node count observed on
+its checkpoint job (:func:`.checkpoint.checkpoint`). Order inside a
+node comes from
 ``array_sort(collect_list(struct(idx, hash)))`` — partition-layout
 independent — and ids map to dense leaf indices via the two-phase
 ``prefix.distributed_rank`` (no single-reducer window). Everything is
@@ -23,6 +25,38 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .checkpoint import checkpoint
+
+
+def _leaf_hash(id_col: str, payload: Column) -> Column:
+    return F.md5(F.concat_ws("|", F.col(id_col).cast("string"), F.md5(payload)))
+
+
+def _parents(level: DataFrame, fanout: int) -> DataFrame:
+    """The level above: each node hashes its children in idx order."""
+    return level.groupBy(F.expr(f"idx div {fanout}").alias("idx")).agg(
+        F.md5(
+            F.array_join(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("idx", "hash"))),
+                    lambda x: x["hash"],
+                ),
+                "",
+            )
+        ).alias("hash")
+    )
+
+
+def _tree(levels: list[DataFrame]) -> DataFrame:
+    out = levels[0]
+    for lv in levels[1:]:
+        out = out.unionByName(lv)
+    return out.select(
+        F.col("level").cast("int").alias("level"),
+        F.col("idx").cast("long").alias("idx"),
+        "hash",
+    )
 
 
 def merkle_tree(
@@ -35,46 +69,21 @@ def merkle_tree(
     ``id_col`` order (dense indices), the top level a single root."""
     from .prefix import distributed_rank
 
-    leaf_hash = F.md5(
-        F.concat_ws("|", F.col(id_col).cast("string"), F.md5(payload))
+    base = df.select(
+        F.col(id_col).alias("_id"), _leaf_hash(id_col, payload).alias("hash")
     )
-    base = df.select(F.col(id_col).alias("_id"), leaf_hash.alias("hash"))
     ranked = distributed_rank(base, "_id", [], out="_rk")
-    cur = ranked.select(
-        (F.col("_rk") - 1).cast("long").alias("idx"), "hash"
-    ).localCheckpoint(eager=True)
-    levels = [cur.withColumn("level", F.lit(0))]
-    n = cur.count()
-    lvl = 0
-    while n > 1:
-        lvl += 1
-        parent = (
-            cur.groupBy(F.expr(f"idx div {fanout}").alias("idx"))
-            .agg(
-                F.md5(
-                    F.array_join(
-                        F.transform(
-                            F.array_sort(
-                                F.collect_list(F.struct("idx", "hash"))
-                            ),
-                            lambda x: x["hash"],
-                        ),
-                        "",
-                    )
-                ).alias("hash")
-            )
-        ).localCheckpoint(eager=True)
-        levels.append(parent.withColumn("level", F.lit(lvl)))
-        cur = parent
-        n = cur.count()
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out.select(
-        F.col("level").cast("int").alias("level"),
-        F.col("idx").cast("long").alias("idx"),
-        "hash",
+    n = F.count(F.lit(1)).alias("n")
+    cur, seen = checkpoint(
+        ranked.select((F.col("_rk") - 1).cast("long").alias("idx"), "hash"), n
     )
+    levels = [cur.withColumn("level", F.lit(0))]
+    lvl = 0
+    while seen["n"] > 1:
+        lvl += 1
+        cur, seen = checkpoint(_parents(cur, fanout), n)
+        levels.append(cur.withColumn("level", F.lit(lvl)))
+    return _tree(levels)
 
 
 def sql_merkle_tree(
@@ -144,10 +153,7 @@ def merkle_update(
     buckets — a join proportional to |touched| * fanout, never n.
     """
     new_leaf = changed.select(
-        F.col(id_col).alias("_cid"),
-        F.md5(
-            F.concat_ws("|", F.col(id_col).cast("string"), F.md5(payload))
-        ).alias("hash"),
+        F.col(id_col).alias("_cid"), _leaf_hash(id_col, payload).alias("hash")
     ).join(
         leaf_idx, F.col("_cid") == F.col(id_col)
     ).select("idx", "hash")
@@ -166,21 +172,7 @@ def merkle_update(
         kids = cur.join(
             touched, F.expr(f"idx div {fanout}") == F.col("_p"), "left_semi"
         )
-        replaced = (
-            kids.groupBy(F.expr(f"idx div {fanout}").alias("idx"))
-            .agg(
-                F.md5(
-                    F.array_join(
-                        F.transform(
-                            F.array_sort(F.collect_list(F.struct("idx", "hash"))),
-                            lambda x: x["hash"],
-                        ),
-                        "",
-                    )
-                ).alias("hash")
-            )
-            .localCheckpoint(eager=True)
-        )
+        replaced = _parents(kids, fanout).localCheckpoint(eager=True)
         lvl_out = (
             old_tree.filter(F.col("level") == lvl)
             .join(
@@ -194,14 +186,7 @@ def merkle_update(
         )
         out.append(lvl_out)
         touched = replaced.select(F.expr(f"idx div {fanout}").alias("_p")).distinct()
-    res = out[0]
-    for lv in out[1:]:
-        res = res.unionByName(lv)
-    return res.select(
-        F.col("level").cast("int").alias("level"),
-        F.col("idx").cast("long").alias("idx"),
-        "hash",
-    )
+    return _tree(out)
 
 
 def merkle_diff(tree_a: DataFrame, tree_b: DataFrame) -> DataFrame:

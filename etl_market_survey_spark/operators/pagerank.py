@@ -29,6 +29,9 @@ from pyspark.sql import functions as F
 
 UNIT = 1_000_000_000_000  # 1e12 fixed-point grid
 
+#: Rounds between eager lineage cuts of the rank table.
+CHECKPOINT_EVERY = 8
+
 
 def undirected_edges(
     pairs: DataFrame, src: str, dst: str, parts_disjoint: bool = False
@@ -67,7 +70,6 @@ def pagerank_fixed_point(
     n_iter: int = 3,
     d_num: int = 85,
     d_den: int = 100,
-    checkpoint_every: int = 8,
     broadcast_ranks: bool | None = None,
 ) -> DataFrame:
     """``(node, pr)`` after ``n_iter`` integer fixed-point iterations over
@@ -75,12 +77,12 @@ def pagerank_fixed_point(
     grid. Every node must have out-degree >= 1 (symmetrize with
     :func:`undirected_edges` for graphs with sinks).
 
-    Lineage: every ``checkpoint_every`` rounds (and after the last) the
+    Lineage: every ``CHECKPOINT_EVERY`` rounds (and after the last) the
     rank table is eagerly ``localCheckpoint``-ed, so plan depth and
-    task-retry replay are bounded by ``checkpoint_every`` rounds at any
+    task-retry replay are bounded by ``CHECKPOINT_EVERY`` rounds at any
     ``n_iter`` — without paying one materialization job per round (the
-    kcore/components per-round cut is free there because those loops
-    already run an action per round; this one doesn't).
+    kcore/components per-round cut is free there because it is the job
+    that yields the round's convergence count; this loop reads none).
 
     ``broadcast_ranks`` broadcasts the nodes-sized per-source
     contribution table into the edges join (and the contribution sums
@@ -157,7 +159,7 @@ def pagerank_fixed_point(
             .cast("long")
             .alias("pr"),
         )
-        if (it + 1) % checkpoint_every == 0 and it + 1 < n_iter:
+        if (it + 1) % CHECKPOINT_EVERY == 0 and it + 1 < n_iter:
             pr = pr.localCheckpoint(eager=True)
     # loop constants stay cached for the life of the returned frame
     # (bench/clients clearCache between runs; Spark LRU-evicts under
@@ -172,7 +174,6 @@ def personalized_pagerank(
     n_iter: int = 3,
     d_num: int = 85,
     d_den: int = 100,
-    checkpoint_every: int = 8,
     broadcast_ranks: bool | None = None,
     return_deg: bool = False,
 ) -> DataFrame:
@@ -268,7 +269,7 @@ def personalized_pagerank(
             .cast("long")
             .alias("pr"),
         )
-        if (it + 1) % checkpoint_every == 0 and it + 1 < n_iter:
+        if (it + 1) % CHECKPOINT_EVERY == 0 and it + 1 < n_iter:
             pr = pr.localCheckpoint(eager=True)
     return pr.select("node", "deg", "pr") if return_deg else pr.select("node", "pr")
 
@@ -278,7 +279,6 @@ def weighted_pagerank(
     n_iter: int = 3,
     d_num: int = 85,
     d_den: int = 100,
-    checkpoint_every: int = 8,
     broadcast_ranks: bool | None = None,
 ) -> DataFrame:
     """Edge-weighted PageRank: contributions split proportionally to
@@ -341,6 +341,6 @@ def weighted_pagerank(
             .cast("long")
             .alias("pr"),
         )
-        if (it + 1) % checkpoint_every == 0 and it + 1 < n_iter:
+        if (it + 1) % CHECKPOINT_EVERY == 0 and it + 1 < n_iter:
             pr = pr.localCheckpoint(eager=True)
     return pr.select("node", "pr")

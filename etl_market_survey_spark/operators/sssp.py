@@ -13,8 +13,9 @@ enumeration + MIN per node) replays the result bit-for-bit (q234).
 Scale shape: cost per round is one join proportional to |frontier
 out-edges| (only nodes improved last round are re-relaxed — the delta
 frontier, not the whole distance table), for at most |V|-1 rounds but
-in practice graph-diameter rounds. Per-round ``localCheckpoint`` cuts
-the iterative lineage (the repo's discipline). Negative weights are
+in practice graph-diameter rounds (distances only fall, so the loop
+ends). Per-round observed checkpoints (:func:`.checkpoint.checkpoint`)
+cut the lineage and count the improved rows. Negative weights are
 rejected (Bellman-Ford would need the full |V|-1 rounds plus a
 negative-cycle check; the engine's workloads — latency graphs, hop
 costs, trade volumes — are non-negative).
@@ -25,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .checkpoint import checkpoint
+
 
 def sssp(
     edges: DataFrame,
@@ -32,30 +35,27 @@ def sssp(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str = "w",
-    max_rounds: int | None = None,
 ) -> DataFrame:
     """Exact shortest-distance table ``(node, dist)`` for every node
     reachable from ``source``. ``edges`` is directed with non-negative
     integer weights (asserted); pass both orientations for undirected
     graphs."""
     spark = edges.sparkSession
-    e = edges.select(
-        F.col(src_col).alias("_src"),
-        F.col(dst_col).alias("_dst"),
-        F.col(weight_col).cast("long").alias("_w"),
-    ).localCheckpoint(eager=True)
-    neg = e.filter(F.col("_w") < 0).take(1)
-    if neg:
+    e, seen = checkpoint(
+        edges.select(
+            F.col(src_col).alias("_src"),
+            F.col(dst_col).alias("_dst"),
+            F.col(weight_col).cast("long").alias("_w"),
+        ),
+        F.count_if(F.col("_w") < 0).alias("neg"),
+    )
+    if seen["neg"]:
         raise ValueError("sssp requires non-negative weights")
 
     dist = spark.createDataFrame([(source, 0)], "node long, dist long")
     dist = dist.localCheckpoint(eager=True)
     frontier = dist  # nodes improved last round
-    rounds = 0
     while True:
-        rounds += 1
-        if max_rounds is not None and rounds > max_rounds:
-            break
         cand = (
             frontier.join(e, frontier["node"] == e["_src"])
             .select(
@@ -66,17 +66,17 @@ def sssp(
             .agg(F.min("dist").alias("dist"))
         )
         # keep candidates that beat (or first-reach) the current table
-        improved = (
+        improved, seen = checkpoint(
             cand.join(
                 dist.select(F.col("node").alias("_n"), F.col("dist").alias("_d")),
                 cand["node"] == F.col("_n"),
                 "left",
             )
             .filter(F.col("_d").isNull() | (F.col("dist") < F.col("_d")))
-            .select("node", "dist")
-            .localCheckpoint(eager=True)
+            .select("node", "dist"),
+            F.count(F.lit(1)).alias("n"),
         )
-        if not improved.take(1):
+        if seen["n"] == 0:
             break
         dist = (
             dist.join(improved.select(F.col("node").alias("_in")),

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .checkpoint import checkpoint
+
 
 #: Documents longer than this auto-route to the window-free global
 #: re-ranking (one giant document would otherwise serialize into a single
@@ -53,10 +55,11 @@ def suffix_ranks(
         F.posexplode(F.split(F.col(text_col), "(?!^)")).alias("pos", "_c"),
     ).filter(F.col("_c") != "")  # the zero-width split emits one trailing ""
     w = Window.partitionBy(id_col).orderBy("_r", "_rn")
-    cur = chars.select(
-        id_col, "pos", F.ascii("_c").cast("long").alias("_r")
-    ).localCheckpoint(eager=True)
-    n_total = cur.count()
+    cur, seen = checkpoint(
+        chars.select(id_col, "pos", F.ascii("_c").cast("long").alias("_r")),
+        F.count(F.lit(1)).alias("n"),
+    )
+    n_total = seen["n"]
     k = 1
     while k < (lens or 1):
         nxt = cur.select(
@@ -176,15 +179,14 @@ def suffix_ranks_global(
     didx = distributed_rank(
         docs.select(id_col).distinct(), id_col, [], out="_didx"
     )
-    cur = (
-        chars.join(didx, id_col)
-        .select(
+    cur, seen = checkpoint(
+        chars.join(didx, id_col).select(
             id_col, "_didx", "pos", F.ascii("_c").cast("long").alias("_r")
-        )
-        .localCheckpoint(eager=True)
+        ),
+        F.count(F.lit(1)).alias("n"),
     )
     lens = docs.select(F.length(text_col).alias("_l")).agg(F.max("_l")).first()[0]
-    n_total = cur.count()
+    n_total = seen["n"]
     n_docs = docs.count()
     span_r = max((lens or 0) + 2, 1 << 22)
     span_tot = n_total + 2

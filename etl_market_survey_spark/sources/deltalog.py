@@ -56,6 +56,8 @@ from urllib.parse import quote, unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.checkpoint import _materialized
+
 _LOG_DIR = "_delta_log"
 _LAST_CHECKPOINT = "_last_checkpoint"
 
@@ -2186,34 +2188,6 @@ def _write_single_parquet(df: DataFrame, dest: str, *observed):
     shutil.move(os.path.join(tmp, part), dest)
     shutil.rmtree(tmp)
     return obs.get if obs is not None else None
-
-
-@contextlib.contextmanager
-def _materialized(df: DataFrame, *observed):
-    """Evaluate ``df`` ONCE: ``observe`` + eager ``localCheckpoint`` in
-    one job. Yields ``(frame, row)``: the checkpointed frame and the row
-    of the ``observed`` aggregates (``None`` when none are given).
-
-    A row-level writer (MERGE, upsert) reads its source several times —
-    key range, match guard, the kept/updated/inserted joins. Reading
-    one materialized copy scans the source once, and every pass sees
-    the SAME rows even when the source is non-deterministic (Delta
-    Lake's MERGE materializes its source for the same reason). Not
-    ``cache()``: a lost checkpoint block fails the write before its
-    commit instead of silently re-evaluating the source.
-
-    On every exit the checkpoint's blocks are freed, so nothing the
-    writer materialized outlives it."""
-    from pyspark.sql import Observation
-
-    obs = Observation() if observed else None
-    if obs is not None:
-        df = df.observe(obs, *observed)
-    frame = df.localCheckpoint(eager=True)
-    try:
-        yield frame, (obs.get if obs is not None else None)
-    finally:
-        frame._jdf.logicalPlan().rdd().unpersist(True)
 
 
 def _write_single_parquet_with_stats(df: DataFrame, dest: str, schema) -> str:

@@ -39,8 +39,9 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.checkpoint import _materialized
 from .avro import read_avro_records, write_avro_file
-from .deltalog import _materialized, _write_single_parquet
+from .deltalog import _write_single_parquet
 from .iceberg_transforms import (
     parse_transform,
     partition_field_name,

@@ -213,3 +213,17 @@ def test_weighted_closure_hand_tree(spark):
     assert out[(4, 2)] == (5, 1)
     assert out[(4, 1)] == (15, 2)  # 5 per level-2 x 3 per level-1
     assert len(out) == 4
+
+
+def test_weighted_closure_deeper_than_max_depth_raises(spark):
+    import pytest
+
+    from etl_market_survey_spark.operators.hierarchy import weighted_closure
+
+    # a 5-link chain has paths of 5 edges: max_depth=3 cannot hold them
+    chain = spark.createDataFrame(
+        [(i + 1, i, 1) for i in range(5)], "child long, parent long, qty long"
+    )
+    with pytest.raises(ValueError, match="max_depth=3"):
+        weighted_closure(chain, max_depth=3)
+    assert weighted_closure(chain, max_depth=5).count() == 15

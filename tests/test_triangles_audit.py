@@ -114,6 +114,11 @@ def test_kcore_cascade(spark):
     df2 = canonical_edges(_edges_df(spark, cycle), "a", "b")
     core = {r.node: r.deg for r in k_core(df2, 2).collect()}
     assert core == {n: 2 for n in range(13)}
+    # a 104-node path peels two edges a round: past 50 rounds, so a
+    # round cap would leave a stub of the path standing
+    long_path = [(i, i + 1) for i in range(103)]
+    df3 = canonical_edges(_edges_df(spark, long_path), "a", "b")
+    assert k_core(df3, 2).count() == 0
 
 
 def test_kcore_matches_brute_force(spark):
