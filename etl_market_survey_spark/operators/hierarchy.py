@@ -46,7 +46,7 @@ def weighted_closure(
         F.col("_p").alias("ancestor"),
         F.col("_q").alias("total_qty"),
         F.lit(1).alias("depth"),
-    ).localCheckpoint(eager=True)
+    )  # a projection of the checkpointed ``e``: nothing to re-copy
     out = [level]
     # level max_depth + 1 is run only to prove it empty
     for d in range(2, max_depth + 2):

@@ -27,6 +27,8 @@ reads single- or multi-part checkpoints with pyarrow, and
 :func:`_fold_log` folds the two. ``read_delta``, ``read_delta_pruned``
 (checkpoint projected to metaData/protocol) and the ``delta_lite``
 source (:mod:`.pyds`, which plans inside Python workers) all use it.
+The change feed has ONE walk too, :func:`_change_walk`, which the batch
+feed and the ``delta_lite`` change-feed stream both plan from.
 Log cleanup deletes the commits behind a checkpoint; a version the
 remaining commits cannot rebuild raises rather than folding a partial
 history.
@@ -52,6 +54,7 @@ import itertools
 import json
 import os
 import uuid
+from typing import NamedTuple
 from urllib.parse import quote, unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -378,6 +381,89 @@ def load_snapshot(
     checkpoint plus the JSON tail past it, exactly Delta's cold-start
     path through ``_last_checkpoint``. Needs no SparkSession."""
     return _fold_log(path, version, timestamp)
+
+
+def _require_commits(path: str, first: int, last: int) -> None:
+    """Raise unless every commit ``first..last`` is in the log. A reader
+    that walks commit by commit and skipped a missing one would silently
+    drop that commit's changes."""
+    have = set(_list_commit_versions(path))
+    missing = [v for v in range(first, last + 1) if v not in have]
+    if missing:
+        raise ValueError(
+            f"commits [{first}, {last}] of {path} cannot be read: commit "
+            f"{missing[0]} is missing from {_LOG_DIR} (log cleanup deletes "
+            "the commits behind a checkpoint)"
+        )
+
+
+class _CommitChanges(NamedTuple):
+    """What one commit changed, as :func:`_change_walk` reports it.
+    ``cdc`` is set alone (the protocol rule: a commit's cdc sidecars ARE
+    its change set); otherwise ``inserts`` are add entries live after
+    the commit and not before, ``deletes`` the previous entries of files
+    a dataChange remove took out of the live set, and ``dv_deltas``
+    ``(entry without its DV, 'delete' | 'insert', sorted positions)``
+    for files whose deletion vector the commit grew or shrank."""
+
+    version: int
+    timestamp: int
+    cdc: list
+    inserts: list
+    deletes: list
+    dv_deltas: list
+
+
+def _change_walk(path: str, first: int, last: int) -> list[_CommitChanges]:
+    """THE change-feed walk: one :class:`_CommitChanges` per commit
+    ``first..last``, folded from the live set at ``first - 1`` through
+    each commit's own actions. Log metadata and KB-scale DV bitmaps
+    only, no SparkSession; ``read_delta_changes`` scans its records,
+    the ``delta_lite`` change-feed stream maps them to partitions."""
+    _require_commits(path, first, last)
+    live = dict(load_snapshot(path, first - 1).adds) if first > 0 else {}
+    out = []
+    for v in range(first, last + 1):
+        acts = _read_actions(path, v)
+        cdc = [a["cdc"] for a in acts if "cdc" in a]
+        before: dict[str, dict | None] = {}
+        removed = set()
+        for a in acts:
+            entry = a.get("add") or a.get("remove")
+            if entry is None:
+                continue
+            rel = entry["path"]
+            before.setdefault(rel, live.get(rel))
+            if "add" in a:
+                live[rel] = entry
+            else:
+                live.pop(rel, None)
+                if entry.get("dataChange", True):
+                    removed.add(rel)
+        inserts, deletes, dv_deltas = [], [], []
+        for rel, old in ([] if cdc else before.items()):
+            new = live.get(rel)
+            if old is None:
+                if new is not None and new.get("dataChange", True):
+                    inserts.append(new)
+            elif new is None:
+                if rel in removed:
+                    deletes.append(old)
+            elif new != old:
+                old_pos = set(_dv_rows(path, old.get("deletionVector")))
+                new_pos = set(_dv_rows(path, new.get("deletionVector")))
+                bare = {k: x for k, x in new.items() if k != "deletionVector"}
+                dv_deltas += [
+                    (bare, ct, delta)
+                    for delta, ct in ((sorted(new_pos - old_pos), "delete"),
+                                      (sorted(old_pos - new_pos), "insert"))
+                    if delta
+                ]
+        out.append(_CommitChanges(
+            v, _commit_timestamp(path, v, acts), cdc, inserts, deletes,
+            dv_deltas,
+        ))
+    return out
 
 
 def _phys_cols(cols_logical, phys: dict, ids: dict | None):
@@ -927,6 +1013,16 @@ def _dv_location(table_path: str, dvd: dict) -> tuple[str, int, int]:
             f"deletionVector storageType {st!r} (inline) not supported"
         )
     return dv_path, int(dvd.get("offset", 1)), int(dvd["sizeInBytes"])
+
+
+def _dv_rows(table_path: str, dvd: dict | None) -> list[int]:
+    """The row positions a deletionVector descriptor deletes (none for
+    None), decoded on the caller's side: a DV is KB-scale."""
+    if not dvd:
+        return []
+    from .dvbitmap import deserialize_rbm64, read_dv_blob
+
+    return deserialize_rbm64(read_dv_blob(*_dv_location(table_path, dvd)))
 
 
 def _dv_positions_df(spark: SparkSession, table_path: str, adds: list[dict]):
@@ -1508,13 +1604,7 @@ def add_deletion_vectors(
 
     merged: dict[str, list[int]] = {}
     for rel, poss in deletes.items():
-        existing: list[int] = []
-        prior_dv = snap.adds[rel].get("deletionVector")
-        if prior_dv:
-            from .dvbitmap import deserialize_rbm64, read_dv_blob
-
-            dv_path, off, size = _dv_location(path, prior_dv)
-            existing = deserialize_rbm64(read_dv_blob(dv_path, off, size))
+        existing = _dv_rows(path, snap.adds[rel].get("deletionVector"))
         merged[rel] = sorted(set(existing) | {int(p) for p in poss})
 
     u = uuid.uuid4()
@@ -2725,136 +2815,53 @@ def read_delta_changes(
     file by ``_metadata.row_index``. dataChange=false commits
     (OPTIMIZE/compaction) contribute nothing, per the protocol.
 
-    Scale shape: the per-version diff is log metadata (driver-side,
-    KB); row materialization is pruned parquet scans of exactly the
-    changed files. DV bitmaps decode driver-side — they are KB-scale
-    by design (same budget as :func:`add_deletion_vectors`)."""
+    Scale shape: the per-commit diff is :func:`_change_walk`, the one
+    walk the ``delta_lite`` change-feed stream plans from too (log
+    metadata and KB-scale DV bitmaps, driver-side, no Spark job); row
+    materialization is pruned parquet scans of exactly the changed
+    files."""
     from pyspark.sql import functions as F
 
     versions = _list_commit_versions(path)
     end = versions[-1] if ending_version is None else ending_version
-    wanted = list(range(starting_version, end + 1))
-    if not wanted:
+    if end < starting_version:
         raise ValueError(
             f"no commits in [{starting_version}, {end}] (have {versions})"
         )
-    # every commit in the range feeds the change set; a missing one (log
-    # cleanup) would silently drop its rows, so refuse like _log_segment
-    missing = sorted(set(wanted) - set(versions))
-    if missing:
-        raise ValueError(
-            f"change feed [{starting_version}, {end}] of {path} cannot be "
-            f"built: commit {missing[0]} is missing from {_LOG_DIR}"
-        )
+    commits = _change_walk(path, starting_version, end)
     snap_end = load_snapshot(path, version=end)
     snap_end.check_reader_support()
     cols = [f.name for f in snap_end.schema().fields]
 
-    def tag(df, ct, v, ts):
-        return df.drop("_file").select(
+    def tag(df, ct, c: _CommitChanges):
+        return df.select(
             *cols,
             F.lit(ct).alias("_change_type"),
-            F.lit(v).cast("long").alias("_commit_version"),
-            F.lit(ts).cast("long").alias("_commit_timestamp"),
+            F.lit(c.version).cast("long").alias("_commit_version"),
+            F.lit(c.timestamp).cast("long").alias("_commit_timestamp"),
         )
 
-    def dv_positions(entry) -> set[int]:
-        dvd = (entry or {}).get("deletionVector")
-        if not dvd:
-            return set()
-        from .dvbitmap import deserialize_rbm64, read_dv_blob
-
-        dv_path, off, size = _dv_location(path, dvd)
-        return set(deserialize_rbm64(read_dv_blob(dv_path, off, size)))
+    def scan(entries, **kw):
+        return _scan_logical_with_file(spark, path, snap_end, entries, **kw)
 
     pieces = []
-    # ONE incremental fold over the whole range (re-folding the log per
-    # version would be O(V^2) in commit count — a real cost on tables
-    # with long histories); prev/cur states evolve action by action
-    prev_adds: dict[str, dict] = (
-        load_snapshot(path, version=wanted[0] - 1).adds
-        if wanted[0] > 0
-        else {}
-    )
-    actions_of = {v: _read_actions(path, v) for v in wanted}
-    cur_state = dict(prev_adds)
-    for v in wanted:
-        for a in actions_of[v]:
-            if "add" in a:
-                cur_state[a["add"]["path"]] = a["add"]
-            elif "remove" in a:
-                cur_state.pop(a["remove"]["path"], None)
-        cur_adds = dict(cur_state)
-        ts = _commit_timestamp(path, v, actions_of[v])
-        cdc_entries = [a["cdc"] for a in actions_of[v] if "cdc" in a]
-        if cdc_entries:
-            # protocol rule: when a commit has cdc actions, its changes
-            # come ONLY from the sidecar files (adds/removes of the same
-            # commit describe the rewrite, not the logical delta)
-            rows = _scan_cdc(spark, path, snap_end, cdc_entries)
-            pieces.append(
-                rows.select(
-                    *cols,
-                    F.col("_change_type"),
-                    F.lit(v).cast("long").alias("_commit_version"),
-                    F.lit(ts).cast("long").alias("_commit_timestamp"),
-                )
+    for c in commits:
+        if c.cdc:
+            pieces.append(tag(_scan_cdc(spark, path, snap_end, c.cdc),
+                              F.col("_change_type"), c))
+        for entries, ct in ((c.inserts, "insert"), (c.deletes, "delete")):
+            if entries:
+                pieces.append(tag(scan(entries), ct, c))
+        for entry, ct, delta in c.dv_deltas:
+            pos_df = spark.createDataFrame(
+                [(os.path.basename(entry["path"]), p) for p in delta],
+                "_file string, _pos long",
             )
-            prev_adds = cur_adds
-            continue
-        ins_entries = [
-            a for rel, a in cur_adds.items()
-            if rel not in prev_adds and a.get("dataChange", True)
-        ]
-        # removed files: only dataChange removes count (compaction's
-        # dataChange=false de-references are not logical changes)
-        dc_removes = {
-            a["remove"]["path"]
-            for a in actions_of[v]
-            if "remove" in a and a["remove"].get("dataChange", True)
-        }
-        del_entries = [
-            a for rel, a in prev_adds.items()
-            if rel not in cur_adds and rel in dc_removes
-        ]
-        if ins_entries:
-            pieces.append(
-                tag(_scan_logical_with_file(spark, path, snap_end,
-                                            ins_entries),
-                    "insert", v, ts)
-            )
-        if del_entries:
-            pieces.append(
-                tag(_scan_logical_with_file(spark, path, snap_end,
-                                            del_entries),
-                    "delete", v, ts)
-            )
-        # DV delta on files live in both states: row-exact changes
-        for rel, a in cur_adds.items():
-            old = prev_adds.get(rel)
-            if old is None or old == a:
-                continue
-            old_pos, new_pos = dv_positions(old), dv_positions(a)
-            stripped = {k: x for k, x in a.items() if k != "deletionVector"}
-            for delta, ct in ((sorted(new_pos - old_pos), "delete"),
-                              (sorted(old_pos - new_pos), "insert")):
-                if not delta:
-                    continue
-                rows = _scan_logical_with_file(
-                    spark, path, snap_end, [stripped], keep_pos=True
-                )
-                pos_df = spark.createDataFrame(
-                    [(os.path.basename(rel), int(p)) for p in delta],
-                    "_file string, _pos long",
-                )
-                pieces.append(
-                    tag(
-                        rows.join(F.broadcast(pos_df), ["_file", "_pos"])
-                        .drop("_pos"),
-                        ct, v, ts,
-                    )
-                )
-        prev_adds = cur_adds
+            pieces.append(tag(
+                scan([entry], keep_pos=True)
+                .join(F.broadcast(pos_df), ["_file", "_pos"]),
+                ct, c,
+            ))
 
     if not pieces:
         empty = spark.createDataFrame([], snap_end.schema()).select(*cols)

@@ -36,6 +36,7 @@ import json
 import os
 import time
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -166,9 +167,7 @@ def _pf_meta_for_keys(meta: dict, keys: frozenset) -> tuple[list, int]:
     (spec evolution: entries keep their original tuple shape)."""
     from .iceberg_transforms import parse_transform, result_ice_type
 
-    schema_fields = (
-        meta.get("schema") or (meta.get("schemas") or [{}])[0]
-    ).get("fields", [])
+    schema_fields = _current_schema(meta).get("fields", [])
     by_id = {f["id"]: f for f in schema_fields}
     for spec in meta.get("partition-specs") or []:
         names = {f["name"] for f in spec.get("fields", [])}
@@ -199,7 +198,7 @@ _SPARK_TO_ICE = {
     "timestamp": "timestamp",
 }
 _ICE_TO_SPARK = {
-    "long": "long", "int": "int", "string": "string", "double": "double",
+    "long": "long", "int": "integer", "string": "string", "double": "double",
     "float": "float", "boolean": "boolean", "binary": "binary",
     "date": "date", "timestamp": "timestamp", "timestamptz": "timestamp",
 }
@@ -315,18 +314,36 @@ def _select_snapshot(
     return next(s for s in snaps if s["snapshot-id"] == cur)
 
 
-def _spark_schema(meta: dict):
-    from pyspark.sql.types import StructField, StructType, _parse_datatype_string
+def _current_schema(meta: dict) -> dict:
+    """The table's current schema: the ``schemas`` entry that
+    ``current-schema-id`` names (format v2, as other writers lay it
+    out), else the single ``schema`` this engine writes."""
+    sid = meta.get("current-schema-id")
+    for schema in meta.get("schemas") or []:
+        if sid is not None and schema.get("schema-id") == sid:
+            return schema
+    if meta.get("schema"):
+        return meta["schema"]
+    raise ValueError(
+        f"table metadata has no current schema (current-schema-id {sid})"
+    )
 
-    schema = meta.get("schema") or (meta.get("schemas") or [{}])[0]
+
+def _spark_schema(meta: dict):
+    """The current schema as a ``StructType``, built in plain Python:
+    the ``iceberg_lite`` source plans where no JVM runs."""
+    from pyspark.sql.types import (
+        StructField, StructType, _parse_datatype_json_value,
+    )
+
     fields = []
-    for f in schema.get("fields", []):
+    for f in _current_schema(meta).get("fields", []):
         t = f["type"]
         if not isinstance(t, str) or t not in _ICE_TO_SPARK:
             raise ValueError(f"unsupported Iceberg type {t!r}")
         fields.append(
             StructField(
-                f["name"], _parse_datatype_string(_ICE_TO_SPARK[t]),
+                f["name"], _parse_datatype_json_value(_ICE_TO_SPARK[t]),
                 not f.get("required", False),
             )
         )
@@ -639,9 +656,7 @@ def read_iceberg_pruned(
                 | matched
             )
     if stats_filter:
-        sfields = (
-            meta.get("schema") or (meta.get("schemas") or [{}])[0]
-        ).get("fields", [])
+        sfields = _current_schema(meta).get("fields", [])
         dtypes = {
             f["name"]: _ICE_TO_SPARK.get(f["type"], "string")
             for f in sfields
@@ -702,9 +717,7 @@ def _partition_result_types(meta: dict) -> dict[str, str]:
     too. Date/timestamp tuples are physically stored as strings in
     this engine's manifests (``_pv_caster_ice``), which cast cleanly
     through their Spark type — the typed compare is storage-agnostic."""
-    sfields = (
-        meta.get("schema") or (meta.get("schemas") or [{}])[0]
-    ).get("fields", [])
+    sfields = _current_schema(meta).get("fields", [])
     id2type = {f["id"]: f["type"] for f in sfields}
     out: dict[str, str] = {}
     for sp in meta.get("partition-specs") or []:
@@ -729,9 +742,7 @@ def _resolve_partition_filter(
         f for sp in (meta.get("partition-specs") or [{}])
         for f in sp.get("fields", [])
     ]
-    sfields = (
-        meta.get("schema") or (meta.get("schemas") or [{}])[0]
-    ).get("fields", [])
+    sfields = _current_schema(meta).get("fields", [])
     id2name = {f["id"]: f["name"] for f in sfields}
     id2type = {f["id"]: f["type"] for f in sfields}
     resolved: dict[str, set] = {}
@@ -854,8 +865,12 @@ def _apply_equality_deletes(
     by_ids: dict[tuple, list[dict]] = {}
     for d in eq_deletes:
         by_ids.setdefault(tuple(d.get("equality_ids") or ()), []).append(d)
+    schema = _spark_schema(meta)
     for _, dels in sorted(by_ids.items()):
-        keyed = [_equality_delete_keys(spark, path, d, meta) for d in dels]
+        keyed = [
+            _equality_delete_keys(spark, path, _eq_delete(meta, d), schema)
+            for d in dels
+        ]
         del_df = keyed[0][0]
         for keys, _ in keyed[1:]:
             del_df = del_df.unionByName(keys)
@@ -863,35 +878,123 @@ def _apply_equality_deletes(
     return df.select(*cols)
 
 
-def _equality_delete_keys(spark, path: str, d: dict, meta: dict):
-    """One equality-delete file's rows as ``_d_<col>`` key columns plus its
-    sequence number ``_dseq``, and the null-safe match against data rows
-    carrying ``_seq`` (only rows of files committed before the delete).
-    The keys are read with the table schema's types for ``equality_ids``,
-    so Spark runs no job to infer the file's schema."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
-    schema = _spark_schema(meta)
+def _eq_delete(meta: dict, d: dict) -> tuple[str, int, list[str]]:
+    """An equality-delete file entry as ``(file path, data sequence
+    number, column names)``, its ``equality_ids`` resolved against the
+    current schema."""
     id_to_name = {
-        f["id"]: f["name"]
-        for f in (meta.get("schema") or (meta.get("schemas") or [{}])[0]).get(
-            "fields", []
-        )
+        f["id"]: f["name"] for f in _current_schema(meta).get("fields", [])
     }
     names = [id_to_name[i] for i in (d.get("equality_ids") or [])]
     if not names:
         raise ValueError("equality delete file without equality_ids")
+    return d["file_path"], int(d.get("_seq") or 0), names
+
+
+def _equality_delete_keys(spark, path: str, eq: tuple, schema):
+    """One equality delete ``(file, seq, columns)`` (:func:`_eq_delete`)
+    as ``_d_<col>`` key columns plus its sequence number ``_dseq``, and
+    the null-safe match against data rows carrying ``_seq`` (only rows
+    of files committed before the delete). The keys are read with the
+    table schema's types, so Spark runs no job to infer the file's
+    schema."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    rel, dseq, names = eq
     keys = (
         spark.read.schema(StructType([schema[c] for c in names]))
-        .parquet(os.path.join(path, d["file_path"]))
+        .parquet(os.path.join(path, rel))
         .select(*[F.col(c).alias(f"_d_{c}") for c in names])
-        .withColumn("_dseq", F.lit(int(d.get("_seq") or 0)))
+        .withColumn("_dseq", F.lit(dseq))
     )
     cond = F.col("_seq") < F.col("_dseq")
     for c in names:
         cond = cond & F.col(c).eqNullSafe(F.col(f"_d_{c}"))
     return keys, cond
+
+
+class _SnapshotChanges(NamedTuple):
+    """What one snapshot changed, as :func:`_change_walk` reports it.
+    Data-file entries are sorted by path. ``dropped`` rows are emitted
+    as they were live at the previous snapshot, so ``dropped_pos`` /
+    ``dropped_eq`` carry that snapshot's position / equality deletes
+    (its delete set is authoritative: an overwrite drops delete
+    manifests along with data files). New position deletes
+    (``pos_deletes``) name positions in ``live_before`` files; each new
+    equality delete is ``(file, seq, columns, the live_before files
+    with a smaller sequence number)``, the only ones it applies to."""
+
+    snapshot_id: int
+    timestamp: int
+    added: list
+    dropped: list
+    dropped_pos: list
+    dropped_eq: list
+    live_before: list
+    pos_deletes: list
+    eq_deletes: list
+
+
+def _change_walk(
+    path: str,
+    from_snapshot_id: int | None = None,
+    to_snapshot_id: int | None = None,
+) -> list[_SnapshotChanges]:
+    """THE changelog walk: one :class:`_SnapshotChanges` per main-lineage
+    snapshot after ``from_snapshot_id`` (exclusive; None = before the
+    first) up to ``to_snapshot_id`` (inclusive; None = the latest),
+    diffed from the live data and delete files of consecutive
+    snapshots. Metadata JSON and Avro manifests only, no SparkSession;
+    ``read_iceberg_changes`` scans its records, the ``iceberg_lite``
+    stream maps them to partitions."""
+    meta = _load_metadata(path)
+    snaps = _main_lineage(meta)  # staged WAP branches never hit changelogs
+    if not snaps:
+        raise ValueError("table has no snapshots")
+    ids = [s["snapshot-id"] for s in snaps]
+    for sid in (from_snapshot_id, to_snapshot_id):
+        if sid is not None and sid not in ids:
+            raise ValueError(
+                f"snapshot {sid} is not in the table history (expired?)"
+            )
+    start = 0 if from_snapshot_id is None else ids.index(from_snapshot_id) + 1
+    end = len(ids) - 1 if to_snapshot_id is None else ids.index(to_snapshot_id)
+
+    def live(sid):
+        if sid is None:
+            return {}, {}
+        return (
+            {f["file_path"]: f for f in snapshot_files(path, snapshot_id=sid)},
+            {d["file_path"]: d
+             for d in snapshot_delete_files(path, snapshot_id=sid)},
+        )
+
+    files, dels = live(ids[start - 1] if start > 0 else None)
+    out = []
+    for snap in snaps[start:end + 1]:
+        cur_files, cur_dels = live(snap["snapshot-id"])
+        before = [f for _, f in sorted(files.items())]
+        dropped = [f for f in before if f["file_path"] not in cur_files]
+        new_dels = [d for p, d in sorted(cur_dels.items()) if p not in dels]
+        old_dels = list(dels.values()) if dropped else []
+        out.append(_SnapshotChanges(
+            snap["snapshot-id"], snap["timestamp-ms"],
+            added=[f for p, f in sorted(cur_files.items()) if p not in files],
+            dropped=dropped,
+            dropped_pos=[d for d in old_dels if d.get("content") == 1],
+            dropped_eq=[_eq_delete(meta, d) for d in old_dels
+                        if d.get("content") == 2],
+            live_before=before,
+            pos_deletes=[d for d in new_dels if d.get("content") == 1],
+            eq_deletes=[
+                (*eq, [f for f in before if int(f.get("_seq") or 0) < eq[1]])
+                for eq in (_eq_delete(meta, d) for d in new_dels
+                           if d.get("content") == 2)
+            ],
+        ))
+        files, dels = cur_files, cur_dels
+    return out
 
 
 def read_iceberg_changes(
@@ -908,29 +1011,25 @@ def read_iceberg_changes(
 
     Per snapshot: newly added data files contribute inserts; data files
     dropped from the live set (overwrite / partition delete) contribute
-    deletes; NEW position-delete files contribute ROW-exact deletes
-    (join on ``(file, _metadata.row_index)``); NEW equality-delete
-    files contribute key-matched deletes scoped to data files with a
-    smaller sequence number — the same algebra :func:`read_iceberg`
-    applies, replayed per commit. Metadata diffs are driver-side;
-    row materialization scans only the files each commit touched
-    (plus, for position deletes, the prior live set the join prunes
-    logically — a production scan would prune via delete-file stats)."""
+    their rows still live at the previous snapshot as deletes; NEW
+    position-delete files contribute ROW-exact deletes (join on
+    ``(file, _metadata.row_index)``); NEW equality-delete files
+    contribute key-matched deletes of data files with a smaller
+    sequence number — the rules :func:`read_iceberg` applies.
+
+    Scale shape: the per-snapshot diff is :func:`_change_walk`, the one
+    walk the ``iceberg_lite`` changelog stream plans from too (metadata
+    and manifests, driver-side, no Spark job); row materialization
+    scans only the files each snapshot touched (plus, for position
+    deletes, the prior live set the join prunes logically — a
+    production scan would prune via delete-file stats)."""
     from pyspark.sql import functions as F
 
-    meta = _load_metadata(path)
-    snaps = _main_lineage(meta)  # staged WAP branches never hit changelogs
-    if not snaps:
-        raise ValueError("table has no snapshots")
-    ids = [s["snapshot-id"] for s in snaps]
-    start = 0 if from_snapshot_id is None else ids.index(from_snapshot_id) + 1
-    end = len(ids) - 1 if to_snapshot_id is None else ids.index(to_snapshot_id)
-    schema = _spark_schema(meta)
+    commits = _change_walk(path, from_snapshot_id, to_snapshot_id)
+    schema = _spark_schema(_load_metadata(path))
     cols = [f.name for f in schema.fields]
 
     def scan(entries, keep_pos=False, keep_seq=False):
-        if not entries:
-            return None
         df = spark.read.schema(schema).parquet(
             *[os.path.join(path, e["file_path"]) for e in entries]
         )
@@ -951,111 +1050,52 @@ def read_iceberg_changes(
             df = df.join(F.broadcast(seq_df), "_file")
         return df
 
-    def tag(df, ct, sid, ts):
+    def positions(pos_deletes):
+        return (
+            spark.read.schema("file_path string, pos long")
+            .parquet(*[os.path.join(path, d["file_path"])
+                       for d in pos_deletes])
+            .select(
+                F.element_at(F.split("file_path", "/"), -1).alias("_file"),
+                F.col("pos").alias("_pos"),
+            )
+        )
+
+    def tag(df, ct, c: _SnapshotChanges):
         return df.select(
             *cols,
             F.lit(ct).alias("_change_type"),
-            F.lit(sid).cast("long").alias("_snapshot_id"),
-            F.lit(ts).cast("long").alias("_commit_timestamp"),
+            F.lit(c.snapshot_id).cast("long").alias("_snapshot_id"),
+            F.lit(c.timestamp).cast("long").alias("_commit_timestamp"),
         )
 
     pieces = []
-    prev_files: dict[str, dict] = {}
-    prev_dels: dict[str, dict] = {}
-    if start > 0:
-        prev_files = {
-            f["file_path"]: f
-            for f in snapshot_files(path, snapshot_id=ids[start - 1])
-        }
-        prev_dels = {
-            d["file_path"]: d
-            for d in snapshot_delete_files(path, snapshot_id=ids[start - 1])
-        }
-    for i in range(start, end + 1):
-        sid, ts = ids[i], snaps[i]["timestamp-ms"]
-        cur_files = {
-            f["file_path"]: f for f in snapshot_files(path, snapshot_id=sid)
-        }
-        cur_dels = {
-            d["file_path"]: d
-            for d in snapshot_delete_files(path, snapshot_id=sid)
-        }
-        added = [f for p, f in cur_files.items() if p not in prev_files]
-        dropped = [f for p, f in prev_files.items() if p not in cur_files]
-        if added:
-            pieces.append(tag(scan(added), "insert", sid, ts))
-        if dropped:
-            # rows live at the PREVIOUS snapshot: apply the position
-            # AND equality deletes that already covered them — a row
-            # already logically deleted before this commit must not be
-            # re-emitted as a 'delete' change when its file drops. The
-            # PREVIOUS snapshot's delete set is authoritative (an
-            # overwrite drops delete manifests along with data files,
-            # so intersecting with the current set would miss them)
-            old_eq = [
-                d for d in prev_dels.values() if d.get("content") == 2
-            ]
-            df = scan(dropped, keep_pos=True, keep_seq=bool(old_eq))
-            old_pos = [
-                d for d in prev_dels.values() if d.get("content") == 1
-            ]
-            if old_pos:
-                pd_df = (
-                    spark.read.schema("file_path string, pos long")
-                    .parquet(*[os.path.join(path, d["file_path"])
-                               for d in old_pos])
-                    .select(
-                        F.element_at(
-                            F.split("file_path", "/"), -1
-                        ).alias("_file"),
-                        F.col("pos").alias("_pos"),
-                    )
-                )
-                df = df.join(pd_df, ["_file", "_pos"], "left_anti")
-            for d in old_eq:
-                keys, cond = _equality_delete_keys(spark, path, d, meta)
+    for c in commits:
+        if c.added:
+            pieces.append(tag(scan(c.added), "insert", c))
+        if c.dropped:
+            # rows already deleted before this snapshot are not deleted
+            # again when their file drops
+            df = scan(c.dropped, keep_pos=True, keep_seq=bool(c.dropped_eq))
+            if c.dropped_pos:
+                df = df.join(positions(c.dropped_pos), ["_file", "_pos"],
+                             "left_anti")
+            for eq in c.dropped_eq:
+                keys, cond = _equality_delete_keys(spark, path, eq, schema)
                 df = df.join(keys, cond, "left_anti")
-            df = df.drop("_file", "_pos")
-            if old_eq:
-                df = df.drop("_seq")
-            pieces.append(tag(df, "delete", sid, ts))
-        new_dels = [d for p, d in cur_dels.items() if p not in prev_dels]
-        pos_new = [d for d in new_dels if d.get("content") == 1]
-        eq_new = [d for d in new_dels if d.get("content") == 2]
-        if pos_new:
-            # row-exact: the (file, pos) pairs of the new delete files
-            pd_df = (
-                spark.read.schema("file_path string, pos long")
-                .parquet(*[os.path.join(path, d["file_path"])
-                           for d in pos_new])
-                .select(
-                    F.element_at(
-                        F.split("file_path", "/"), -1
-                    ).alias("_file"),
-                    F.col("pos").alias("_pos"),
-                )
-            )
-            base = scan(list(prev_files.values()), keep_pos=True)
-            if base is not None:
-                pieces.append(
-                    tag(
-                        base.join(pd_df, ["_file", "_pos"])
-                        .drop("_file", "_pos"),
-                        "delete", sid, ts,
-                    )
-                )
-        for d in eq_new:
-            keys, cond = _equality_delete_keys(spark, path, d, meta)
-            base = scan(list(prev_files.values()), keep_seq=True)
-            if base is None:
-                continue
-            pieces.append(
-                tag(
-                    base.join(keys, cond).select(*cols),
-                    "delete", sid, ts,
-                )
-            )
-        prev_files, prev_dels = cur_files, dict(cur_dels)
+            pieces.append(tag(df, "delete", c))
+        if c.pos_deletes and c.live_before:
+            pieces.append(tag(
+                scan(c.live_before, keep_pos=True)
+                .join(positions(c.pos_deletes), ["_file", "_pos"]),
+                "delete", c,
+            ))
+        for *eq, older in c.eq_deletes:
+            if older:
+                keys, cond = _equality_delete_keys(spark, path, eq, schema)
+                pieces.append(tag(
+                    scan(older, keep_seq=True).join(keys, cond), "delete", c
+                ))
 
     if not pieces:
         empty = spark.createDataFrame([], schema).select(*cols)
@@ -1221,9 +1261,7 @@ def _plan_write_iceberg(
                 # inherit the table's spec: source column via source-id
                 pf = prev_fields[0]
                 t_kind, t_param = parse_transform(pf["transform"])
-                sfields = (
-                    meta.get("schema") or (meta.get("schemas") or [{}])[0]
-                ).get("fields", [])
+                sfields = _current_schema(meta).get("fields", [])
                 partition_col = next(
                     f["name"] for f in sfields
                     if f["id"] == pf["source-id"]
@@ -1250,9 +1288,7 @@ def _plan_write_iceberg(
 
     # schema enforcement + evolution with STABLE field ids
     prior_fields = (
-        (meta.get("schema") or (meta.get("schemas") or [{}])[0]).get(
-            "fields", []
-        )
+        _current_schema(meta).get("fields", [])
         if meta is not None
         else []
     )
@@ -2030,9 +2066,7 @@ def delete_rows_equality(
 
     cur_v = _current_version(path)
     meta = _load_metadata(path, cur_v)
-    schema_fields = (
-        meta.get("schema") or (meta.get("schemas") or [{}])[0]
-    ).get("fields", [])
+    schema_fields = _current_schema(meta).get("fields", [])
     name_to_id = {f["name"]: f["id"] for f in schema_fields}
     missing = [c for c in cols if c not in name_to_id]
     if missing:
@@ -2088,9 +2122,7 @@ def upsert_iceberg(
     missing = [c for c in cols if c not in source.columns]
     if missing:
         raise ValueError(f"source is missing columns: {missing}")
-    schema_fields = (
-        meta.get("schema") or (meta.get("schemas") or [{}])[0]
-    ).get("fields", [])
+    schema_fields = _current_schema(meta).get("fields", [])
     name_to_id = {f["name"]: f["id"] for f in schema_fields}
     bad = [c for c in on if c not in name_to_id]
     if bad:

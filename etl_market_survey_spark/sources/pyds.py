@@ -60,11 +60,12 @@ from pyspark.sql.datasource import (
 
 from .deltalog import (
     DeltaConcurrentWriteError,
-    _commit_timestamp,
-    _dv_location,
+    _change_walk,
+    _dv_rows,
     _list_commit_versions,
     _log_dir,
     _read_actions,
+    _require_commits,
     _version_at_timestamp,
     _write_commit,
     last_txn_version,
@@ -216,10 +217,7 @@ def _read_file_partition(p: _FilePartition):
         else:
             tbl = pf.read_row_groups(list(range(lo, hi)), columns=cols)
     if p.dv:
-        from .dvbitmap import deserialize_rbm64, read_dv_blob
-
-        dv_path, off, size = _dv_location(p.table_path, p.dv)
-        dead = deserialize_rbm64(read_dv_blob(dv_path, off, size))
+        dead = _dv_rows(p.table_path, p.dv)
         mask = np.ones(tbl.num_rows, dtype=bool)
         dead_arr = np.asarray(dead, dtype=np.int64) - row_offset
         dead_arr = dead_arr[(dead_arr >= 0) & (dead_arr < tbl.num_rows)]
@@ -388,9 +386,11 @@ class _DeltaLiteReader(_DeltaLitePlainReader):
 
 
 class _CdfPartition(InputPartition):
-    """One change-feed unit: a data file read as insert/delete rows, a
-    POSITION-subset of a file (deletion-vector delta), or a cdc sidecar
-    file carrying its own ``_change_type`` column."""
+    """One change-feed unit, mapped from one entry of a
+    :func:`.deltalog._change_walk` record: a data file read as
+    insert/delete rows, a POSITION-subset of a file (deletion-vector
+    delta), or a cdc sidecar file carrying its own ``_change_type``
+    column."""
 
     def __init__(self, kind, table_path, rel, partition_values, dv,
                  fields, phys, pcols, version, ts, positions=None,
@@ -599,18 +599,10 @@ class _DeltaLiteStreamReader(DataSourceStreamReader):
         snap.check_reader_support()
         fields, phys, pcols, ids = _columns(snap)
         fields = self.pinned_fields or fields
-        deleted = set(range(lo + 1, hi + 1)) - set(
-            _list_commit_versions(self.path)
-        )
-        if deleted:
-            raise ValueError(
-                f"commits {sorted(deleted)} of {self.path} are gone (log "
-                "cleanup); the stream cannot replay them — restart it "
-                f"with startingVersion > {max(deleted)}"
-            )
         if self.read_change_feed:
             return self._cdf_partitions(lo, hi, fields, phys, pcols,
                                         ids=ids)
+        _require_commits(self.path, lo + 1, hi)
         parts = []
         for v in range(lo + 1, hi + 1):
             acts = _read_actions(self.path, v)
@@ -640,14 +632,10 @@ class _DeltaLiteStreamReader(DataSourceStreamReader):
 
     def _cdf_partitions(self, lo: int, hi: int, fields, phys, pcols,
                         ids=None):
-        """Streaming CHANGE DATA FEED planning — the batch
-        read_delta_changes algebra, partition-planned: commits with cdc
-        actions contribute their sidecar files EXCLUSIVELY; otherwise
-        dataChange adds are inserts, dataChange removes of previously-
-        live files are deletes (rows as of the PREVIOUS state, old DV
-        applied), and a changed deletion vector on a live file yields
-        ROW-exact position-delta partitions. Driver work is log
-        metadata + KB-scale DV bitmaps; row scans happen in
+        """Streaming CHANGE DATA FEED planning: the records of
+        :func:`.deltalog._change_walk` (the walk ``read_delta_changes``
+        scans too), one partition per cdc sidecar, inserted or deleted
+        file, and deletion-vector position delta. Rows are read in
         executors."""
         # CDF meta columns are pinned by the stream's schema; the
         # fields list carries only TABLE columns
@@ -655,75 +643,24 @@ class _DeltaLiteStreamReader(DataSourceStreamReader):
                    if f[0] not in ("_change_type", "_commit_version",
                                    "_commit_timestamp")]
 
-        def dv_positions(entry) -> set:
-            dvd = (entry or {}).get("deletionVector")
-            if not dvd:
-                return set()
-            from .dvbitmap import deserialize_rbm64, read_dv_blob
+        def part(kind, entry, c, positions=None):
+            return _CdfPartition(
+                kind, self.path, entry["path"], entry.get("partitionValues"),
+                entry.get("deletionVector"), tfields, phys, pcols, c.version,
+                c.timestamp, positions=positions, ids=ids,
+            )
 
-            dv_path, off, size = _dv_location(self.path, dvd)
-            return set(deserialize_rbm64(read_dv_blob(dv_path, off, size)))
-
-        state = dict(load_snapshot(self.path, lo).adds) if lo >= 0 else {}
-        parts = []
-        for v in range(lo + 1, hi + 1):
-            acts = _read_actions(self.path, v)
-            ts = _commit_timestamp(self.path, v, acts)
-            prev = dict(state)
-            for a in acts:
-                if "add" in a:
-                    state[a["add"]["path"]] = a["add"]
-                elif "remove" in a:
-                    state.pop(a["remove"]["path"], None)
-            cdc_entries = [a["cdc"] for a in acts if "cdc" in a]
-            if cdc_entries:
-                for e in cdc_entries:
-                    parts.append(_CdfPartition(
-                        "cdc", self.path, e["path"],
-                        e.get("partitionValues"), None, tfields, phys,
-                        pcols, v, ts, ids=ids,
-                    ))
-                continue
-            dc_removed = {
-                a["remove"]["path"] for a in acts
-                if "remove" in a and a["remove"].get("dataChange", True)
-            }
-            for rel in sorted(dc_removed):
-                old = prev.get(rel)
-                if old is None or rel in state:
-                    continue  # re-added same-commit or never live
-                parts.append(_CdfPartition(
-                    "delete", self.path, rel, old.get("partitionValues"),
-                    old.get("deletionVector"), tfields, phys, pcols,
-                    v, ts, ids=ids,
-                ))
-            for a in acts:
-                add = a.get("add")
-                if not add or not add.get("dataChange", True):
-                    continue
-                rel = add["path"]
-                old = prev.get(rel)
-                if old is None:
-                    parts.append(_CdfPartition(
-                        "insert", self.path, rel,
-                        add.get("partitionValues"),
-                        add.get("deletionVector"), tfields, phys, pcols,
-                        v, ts, ids=ids,
-                    ))
-                elif old != add:
-                    old_pos, new_pos = dv_positions(old), dv_positions(add)
-                    for delta, ct in (
-                        (sorted(new_pos - old_pos), "delete"),
-                        (sorted(old_pos - new_pos), "insert"),
-                    ):
-                        if delta:
-                            parts.append(_CdfPartition(
-                                "pos", self.path, rel,
-                                add.get("partitionValues"), None,
-                                tfields, phys, pcols, v, ts,
-                                positions=(ct, delta), ids=ids,
-                            ))
-        return parts
+        return [
+            p
+            for c in _change_walk(self.path, lo + 1, hi)
+            for p in (
+                [part("cdc", e, c) for e in c.cdc]
+                + [part("insert", e, c) for e in c.inserts]
+                + [part("delete", e, c) for e in c.deletes]
+                + [part("pos", e, c, (ct, delta))
+                   for e, ct, delta in c.dv_deltas]
+            )
+        ]
 
     def read(self, partition):
         if isinstance(partition, _CdfPartition):

@@ -17,9 +17,10 @@ Merge-on-read inside the reader:
   are re-read per partition — KB-scale metadata by construction here;
   a production reader would push per-file delete spans into the
   partition instead.
-- equality deletes (content=2): pandas anti-join on the equality
-  columns, scoped by data sequence number (rows from files committed
-  at or after the delete survive — the reborn-key rule).
+- equality deletes (content=2): a null-safe Arrow anti-join on the
+  equality columns at their exact types (:func:`_eq_match_rows`),
+  scoped by data sequence number (rows from files committed at or
+  after the delete survive — the reborn-key rule).
 """
 
 from __future__ import annotations
@@ -35,30 +36,24 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from .iceberg import (
+    _change_walk,
+    _current_schema,
+    _eq_delete,
+    _load_metadata,
+    _main_lineage,
+    _spark_schema,
+    snapshot_delete_files,
+    snapshot_files,
+)
 
-def _pure_spark_schema(meta: dict):
-    """Iceberg schema -> StructType WITHOUT an active SparkContext
-    (``iceberg._spark_schema`` parses DDL through the JVM; data-source
-    methods run in plain Python workers where none exists)."""
-    from pyspark.sql import types as T
 
-    m = {
-        "long": T.LongType(), "int": T.IntegerType(),
-        "string": T.StringType(), "double": T.DoubleType(),
-        "float": T.FloatType(), "boolean": T.BooleanType(),
-        "binary": T.BinaryType(), "date": T.DateType(),
-        "timestamp": T.TimestampType(), "timestamptz": T.TimestampType(),
-    }
-    schema = meta.get("schema") or (meta.get("schemas") or [{}])[0]
-    fields = []
-    for f in schema.get("fields", []):
-        t = f["type"]
-        if not isinstance(t, str) or t not in m:
-            raise ValueError(f"unsupported Iceberg type {t!r}")
-        fields.append(
-            T.StructField(f["name"], m[t], not f.get("required", False))
-        )
-    return T.StructType(fields)
+def _fields(meta: dict) -> list:
+    """``[(name, spark type json)]`` of the current schema, in order."""
+    return [
+        (f.name, json.loads(f.dataType.json()))
+        for f in _spark_schema(meta).fields
+    ]
 
 
 class _IceFilePartition(InputPartition):
@@ -149,19 +144,10 @@ def _read_ice_partition(p: _IceFilePartition):
     for rel, dseq, cols in p.eq_deletes:
         if not (p.seq < dseq) or tbl.num_rows == 0:
             continue  # out of scope: this file is newer than the delete
-        keys = pq.read_table(
-            os.path.join(p.table_path, rel), columns=cols
-        ).to_pandas()
-        pdf = tbl.to_pandas()
-        merged = pdf.merge(
-            keys.drop_duplicates(), on=cols, how="left", indicator=True
-        )
-        tbl = pa.Table.from_pandas(
-            merged[merged["_merge"] == "left_only"][
-                [c for c in pdf.columns]
-            ],
-            preserve_index=False,
-        )
+        keys = pq.read_table(os.path.join(p.table_path, rel), columns=cols)
+        mask = np.ones(tbl.num_rows, dtype=bool)
+        mask[_eq_match_rows(tbl, keys, cols)] = False
+        tbl = tbl.filter(pa.array(mask))
 
     yield from _cast_to_fields(tbl, p.fields).to_batches(
         max_chunksize=1 << 16
@@ -181,6 +167,33 @@ def _cast_to_fields(tbl, fields):
         for n, t in fields
     ]
     return pa.table(dict(zip(names, arrays))).select(names)
+
+
+def _eq_match_rows(tbl, keys, cols):
+    """Indexes of the ``tbl`` rows that equal a ``keys`` row on
+    ``cols``, ascending, one per matching key row (a key listed twice
+    matches twice). Null equals null, as in the Spark readers'
+    ``eqNullSafe``, and values compare at their Arrow types: each
+    column is dictionary-encoded over both sides, nulls coded -1, and
+    the codes hash-joined."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = tbl.num_rows
+    left = {"_r": pa.array(np.arange(n, dtype=np.int64))}
+    right = {}
+    for i, c in enumerate(cols):
+        col = tbl.column(c).combine_chunks()
+        both = pa.concat_arrays(
+            [col, keys.column(c).cast(col.type).combine_chunks()]
+        )
+        codes = pc.fill_null(pc.dictionary_encode(both).indices, -1)
+        left[f"_k{i}"], right[f"_k{i}"] = codes[:n], codes[n:]
+    hits = pa.table(left).join(
+        pa.table(right), list(right), join_type="inner"
+    )
+    return np.sort(hits.column("_r").to_numpy())
 
 
 def _load_raw(table_path: str, rel: str, fields):
@@ -286,42 +299,16 @@ class _IcebergLiteReader(DataSourceReader):
         return True
 
     def partitions(self):
-        from .iceberg import (
-            _load_metadata,
-            snapshot_delete_files,
-            snapshot_files,
-        )
-
         meta = _load_metadata(self.path)
-        st = _pure_spark_schema(meta)
-        import json as _json
-
-        fields = [(f.name, _json.loads(f.dataType.json())) for f in st.fields]
-        id_to_name = {
-            f["id"]: f["name"]
-            for f in (
-                meta.get("schema") or (meta.get("schemas") or [{}])[0]
-            ).get("fields", [])
-        }
+        fields = _fields(meta)
+        schema_fields = _current_schema(meta).get("fields", [])
+        id_to_name = {f["id"]: f["name"] for f in schema_fields}
         dels = snapshot_delete_files(self.path, snapshot_id=self.snapshot_id)
         pos_rels = [d["file_path"] for d in dels if d.get("content") == 1]
-        eq = [
-            (
-                d["file_path"],
-                int(d.get("_seq") or 0),
-                [id_to_name[i] for i in (d.get("equality_ids") or [])],
-            )
-            for d in dels
-            if d.get("content") == 2
-        ]
+        eq = [_eq_delete(meta, d) for d in dels if d.get("content") == 2]
         from .iceberg_transforms import parse_transform
 
-        id_types = {
-            f["id"]: f["type"]
-            for f in (
-                meta.get("schema") or (meta.get("schemas") or [{}])[0]
-            ).get("fields", [])
-        }
+        id_types = {f["id"]: f["type"] for f in schema_fields}
         spec_by_src = {}
         for sp in meta.get("partition-specs") or []:
             for f in sp.get("fields", []):
@@ -359,9 +346,9 @@ class _IcebergLitePlainReader(_IcebergLiteReader):
 
 
 class _IceChangePartition(InputPartition):
-    """One streamed CHANGE work item — the partition-planned form of one
-    term in the batch changelog algebra (iceberg.read_iceberg_changes,
-    replayed per commit):
+    """One streamed CHANGE work item, mapped from one entry of a
+    :func:`.iceberg._change_walk` record (the walk
+    ``iceberg.read_iceberg_changes`` scans too):
 
     - kind='insert':   raw rows of a data file newly added at sid
     - kind='dropped':  rows LIVE at the previous snapshot of a data file
@@ -431,17 +418,10 @@ def _read_ice_change_partition(p: _IceChangePartition):
         tbl = _load_raw(p.table_path, p.rel, p.fields)
         keys = pq.read_table(
             os.path.join(p.table_path, p.eq_rel), columns=p.eq_cols
-        ).to_pandas()
-        pdf = tbl.to_pandas()
-        # INNER join (not deduped) — the batch changelog's exact
-        # semantics: a key listed twice deletes-emits twice
-        merged = pdf.merge(keys, on=p.eq_cols, how="inner")
-        tbl = _cast_to_fields(
-            pa.Table.from_pandas(
-                merged[list(pdf.columns)], preserve_index=False
-            ),
-            p.fields,
         )
+        # not deduped — the batch changelog's exact semantics: a key
+        # listed twice deletes-emits twice
+        tbl = tbl.take(pa.array(_eq_match_rows(tbl, keys, p.eq_cols)))
     else:  # pragma: no cover - planner emits only the kinds above
         raise ValueError(f"unknown change kind {p.kind!r}")
     yield from with_meta(tbl).to_batches(max_chunksize=1 << 16)
@@ -460,9 +440,10 @@ class _IcebergLiteStreamReader(DataSourceStreamReader):
     the driver (metadata JSON + Avro manifests + KB-scale delete-file
     parquet); every row scan happens in an executor.
 
-    ``read_changelog=True`` emits the incremental changelog — the same
-    per-commit algebra as iceberg.read_iceberg_changes (inserts for
-    added files, previous-state rows for dropped files, row-exact
+    Planning maps the records of :func:`.iceberg._change_walk`, the
+    per-snapshot walk ``iceberg.read_iceberg_changes`` scans too.
+    ``read_changelog=True`` emits the incremental changelog (inserts
+    for added files, previous-state rows for dropped files, row-exact
     position-delete matches, seq-scoped equality-delete matches) with
     ``_change_type``/``_snapshot_id``/``_commit_timestamp`` columns.
     Plain mode streams appended files only and REFUSES snapshots that
@@ -518,8 +499,6 @@ class _IcebergLiteStreamReader(DataSourceStreamReader):
         return ids.index(sid) if sid in ids else None
 
     def latestOffset(self):
-        from .iceberg import _load_metadata, _main_lineage
-
         snaps = _main_lineage(_load_metadata(self.path))
         if not snaps:
             return {"snapshot_id": -1}
@@ -556,19 +535,13 @@ class _IcebergLiteStreamReader(DataSourceStreamReader):
         return ids.index(sid)
 
     def partitions(self, start: dict, end: dict):
-        import json as _json
-
-        from .iceberg import (
-            _load_metadata,
-            snapshot_delete_files,
-            snapshot_files,
-        )
-
-        meta = _load_metadata(self.path)
-        from .iceberg import _main_lineage
-
-        snaps = _main_lineage(meta)  # staged WAP branches never stream
-        ids = [s["snapshot-id"] for s in snaps]
+        """The records of :func:`.iceberg._change_walk` over (start,
+        end], mapped to partitions: in changelog mode one per added,
+        dropped or position-/equality-matched data file, in plain mode
+        one per added file chunk (refusing any other change)."""
+        ids = [s["snapshot-id"] for s in _main_lineage(
+            _load_metadata(self.path)
+        )]  # staged WAP branches never stream
         if int(end["snapshot_id"]) == -1:
             return []
         lo = self._index(ids, int(start["snapshot_id"]))
@@ -583,122 +556,51 @@ class _IcebergLiteStreamReader(DataSourceStreamReader):
         a = self._idx_of(ids, self._anchor)
         new_a = max(x for x in (a, lo, hi) if x is not None)
         self._anchor = int(ids[new_a]) if new_a >= 0 else -1
-        st = _pure_spark_schema(meta)
-        fields = self.pinned_fields or [
-            (f.name, _json.loads(f.dataType.json())) for f in st.fields
-        ]
-        id_to_name = {
-            f["id"]: f["name"]
-            for f in (
-                meta.get("schema") or (meta.get("schemas") or [{}])[0]
-            ).get("fields", [])
-        }
-
-        prev_files: dict[str, dict] = {}
-        prev_dels: dict[str, dict] = {}
-        if lo >= 0:
-            prev_files = {
-                f["file_path"]: f
-                for f in snapshot_files(self.path, snapshot_id=ids[lo])
-            }
-            prev_dels = {
-                d["file_path"]: d
-                for d in snapshot_delete_files(
-                    self.path, snapshot_id=ids[lo]
-                )
-            }
+        if lo >= hi:
+            return []
+        fields = self.pinned_fields or _fields(_load_metadata(self.path))
         parts: list[InputPartition] = []
-        for i in range(lo + 1, hi + 1):
-            sid, ts = ids[i], snaps[i]["timestamp-ms"]
-            cur_files = {
-                f["file_path"]: f
-                for f in snapshot_files(self.path, snapshot_id=sid)
-            }
-            cur_dels = {
-                d["file_path"]: d
-                for d in snapshot_delete_files(self.path, snapshot_id=sid)
-            }
-            added = [f for pth, f in cur_files.items()
-                     if pth not in prev_files]
-            dropped = [f for pth, f in prev_files.items()
-                       if pth not in cur_files]
-            new_dels = [d for pth, d in cur_dels.items()
-                        if pth not in prev_dels]
+        for c in _change_walk(
+            self.path, ids[lo] if lo >= 0 else None, ids[hi]
+        ):
             if not self.read_changelog:
-                if dropped or new_dels:
+                if c.dropped or c.pos_deletes or c.eq_deletes:
                     raise ValueError(
-                        f"snapshot {sid} drops files or adds delete "
-                        "files; set readChangelog=true to stream the "
-                        "change feed"
+                        f"snapshot {c.snapshot_id} drops files or adds "
+                        "delete files; set readChangelog=true to stream "
+                        "the change feed"
                     )
-                for f in sorted(added, key=lambda x: x["file_path"]):
-                    parts.extend(
-                        _IceFilePartition(
-                            self.path, f["file_path"], f.get("_seq"),
-                            fields, [], [], split=s,
-                        )
-                        for s in _ice_splits(
-                            f.get("record_count"), self.max_rows
-                        )
+                parts += [
+                    _IceFilePartition(
+                        self.path, f["file_path"], f.get("_seq"), fields,
+                        [], [], split=s,
                     )
-                prev_files, prev_dels = cur_files, cur_dels
+                    for f in c.added
+                    for s in _ice_splits(f.get("record_count"),
+                                         self.max_rows)
+                ]
                 continue
 
-            for f in sorted(added, key=lambda x: x["file_path"]):
-                parts.append(_IceChangePartition(
-                    "insert", self.path, f["file_path"], fields, sid, ts,
-                    seq=f.get("_seq"),
-                ))
-            if dropped:
-                old_pos = [d["file_path"] for d in prev_dels.values()
-                           if d.get("content") == 1]
-                old_eq = [
-                    (
-                        d["file_path"],
-                        int(d.get("_seq") or 0),
-                        [id_to_name[i_]
-                         for i_ in (d.get("equality_ids") or [])],
-                    )
-                    for d in prev_dels.values() if d.get("content") == 2
-                ]
-                for f in sorted(dropped, key=lambda x: x["file_path"]):
-                    parts.append(_IceChangePartition(
-                        "dropped", self.path, f["file_path"], fields,
-                        sid, ts, seq=f.get("_seq"),
-                        pos_delete_rels=old_pos, eq_deletes=old_eq,
-                    ))
-            pos_new = [d for d in new_dels if d.get("content") == 1]
-            eq_new = [d for d in new_dels if d.get("content") == 2]
-            if pos_new:
-                by_base = self._positions_by_base(pos_new)
-                for f in sorted(prev_files.values(),
-                                key=lambda x: x["file_path"]):
-                    poss = by_base.get(
-                        os.path.basename(f["file_path"])
-                    )
-                    if poss:
-                        parts.append(_IceChangePartition(
-                            "posmatch", self.path, f["file_path"],
-                            fields, sid, ts, seq=f.get("_seq"),
-                            positions=poss,
-                        ))
-            for d in eq_new:
-                names = [id_to_name[i_]
-                         for i_ in (d.get("equality_ids") or [])]
-                if not names:
-                    raise ValueError(
-                        "equality delete file without equality_ids"
-                    )
-                dseq = int(d.get("_seq") or 0)
-                for f in sorted(prev_files.values(),
-                                key=lambda x: x["file_path"]):
-                    if int(f.get("_seq") or 0) < dseq:
-                        parts.append(_IceChangePartition(
-                            "eqmatch", self.path, f["file_path"],
-                            fields, sid, ts, seq=f.get("_seq"),
-                            eq_rel=d["file_path"], eq_cols=names,
-                        ))
-            prev_files, prev_dels = cur_files, cur_dels
+            def part(kind, f, c=c, **kw):
+                return _IceChangePartition(
+                    kind, self.path, f["file_path"], fields, c.snapshot_id,
+                    c.timestamp, seq=f.get("_seq"), **kw,
+                )
+
+            by_base = self._positions_by_base(c.pos_deletes)
+            parts += (
+                [part("insert", f) for f in c.added]
+                + [part("dropped", f,
+                        pos_delete_rels=[d["file_path"]
+                                         for d in c.dropped_pos],
+                        eq_deletes=c.dropped_eq)
+                   for f in c.dropped]
+                + [part("posmatch", f, positions=by_base[b])
+                   for f in c.live_before
+                   if (b := os.path.basename(f["file_path"])) in by_base]
+                + [part("eqmatch", f, eq_rel=rel, eq_cols=cols)
+                   for rel, _, cols, older in c.eq_deletes for f in older]
+            )
         return parts
 
     def _positions_by_base(self, pos_new: list[dict]) -> dict[str, list]:
@@ -758,9 +660,7 @@ class IcebergLiteDataSource(DataSource):
         return path
 
     def schema(self):
-        from .iceberg import _load_metadata
-
-        st = _pure_spark_schema(_load_metadata(self._path()))
+        st = _spark_schema(_load_metadata(self._path()))
         if str(self.options.get("readchangelog", "false")).lower() \
                 == "true":
             from pyspark.sql.types import (

@@ -20,15 +20,16 @@ proving the copy-on-write and merge-on-read halves of the trade agree:
   5. stream the Delta table through the REGISTERED delta_lite source
      (exactly-once version offsets) into parquet and assert the drained
      rows equal the batch read
-  6. stream the CHANGE FEED itself (readChangeFeed=true — per-version
-     change partitions: cdc sidecars, insert/delete file scans, DV
-     position deltas) and assert the drained feed row-matches the
-     batch read_delta_changes
+  6. stream the CHANGE FEED itself (readChangeFeed=true) and assert
+     the drained feed row-matches the batch read_delta_changes: both
+     plan from the one per-commit walk of the Delta log (cdc sidecars,
+     inserted and deleted files, DV position deltas); the stream maps
+     its records to partitions, the batch feed to parquet scans
   7. stream the Iceberg CHANGELOG through the registered iceberg_lite
-     source (readChangelog=true — snapshot-id offsets, per-snapshot
-     change partitions) and assert the drained feed row-matches the
-     batch read_iceberg_changes — format parity for incremental
-     consumption
+     source (readChangelog=true, snapshot-id offsets) and assert the
+     drained feed row-matches the batch read_iceberg_changes: both
+     plan from the one per-snapshot walk of the manifests — format
+     parity for incremental consumption
 
 Run: python examples/lakehouse_cdc_pipeline.py [sf_dir]
 """

@@ -91,7 +91,7 @@ def _case(spark, name):
         ("bfs_hops", 16),
         ("k_core", 13),
         ("connected_components", 37),
-        ("weighted_closure", 14),
+        ("weighted_closure", 13),
         ("merkle_tree", 11),
     ],
 )

@@ -2,6 +2,7 @@
 batch reads (DVs, column mapping, partitions, time travel) and the
 exactly-once streaming source over the commit log."""
 
+import json
 import os
 import shutil
 
@@ -158,7 +159,7 @@ class TestIcebergLite:
     def test_matches_read_iceberg(self, ice_registered, tmp_path):
         from etl_market_survey_spark.sources.iceberg import (
             delete_rows_equality, delete_rows_iceberg, read_iceberg,
-            snapshot_files, write_iceberg,
+            snapshot_files, upsert_iceberg, write_iceberg,
         )
 
         spark = ice_registered
@@ -183,6 +184,26 @@ class TestIcebergLite:
         )
         got = {r["k"]: r["v"] for r in via_ds.collect()}
         assert 0 not in got and 1 not in got and got[7] == -7
+
+        # an int64 key column holding a null: keys above 2**53 must not
+        # collide with the deleted key through a float64 round trip
+        path = str(tmp_path / "il1_int64")
+        write_iceberg(
+            spark, path,
+            spark.createDataFrame([(2**53 + 1, 1), (None, 2), (5, 3)],
+                                  "k long, v long"),
+            commit_ts=100,
+        )
+        upsert_iceberg(spark, path,
+                       spark.createDataFrame([(2**53, 4)], "k long, v long"),
+                       ["k"], commit_ts=200)
+        via_ds = spark.read.format("iceberg_lite").load(path)
+        via_api = read_iceberg(spark, path)
+        want = {(2**53 + 1, 1), (None, 2), (5, 3), (2**53, 4)}
+        assert set(map(tuple, via_api.collect())) == want
+        assert sorted(map(tuple, via_ds.collect()), key=repr) == sorted(
+            want, key=repr
+        )
 
     def test_snapshot_time_travel(self, ice_registered, tmp_path):
         from etl_market_survey_spark.sources.iceberg import write_iceberg
@@ -234,7 +255,9 @@ class TestDataSourceSchemaEvolution:
         assert got == {1: None, 2: "x"}
 
     def test_iceberg_lite_evolved_table(self, spark, tmp_path):
-        from etl_market_survey_spark.sources.iceberg import write_iceberg
+        from etl_market_survey_spark.sources.iceberg import (
+            _current_version, _load_metadata, read_iceberg, write_iceberg,
+        )
         from etl_market_survey_spark.sources.pyds_iceberg import (
             IcebergLiteDataSource,
         )
@@ -253,6 +276,24 @@ class TestDataSourceSchemaEvolution:
         df = spark.read.format("iceberg_lite").load(path)
         got = {r["k"]: r["w"] for r in df.collect()}
         assert got == {1: None, 2: "x"}
+
+        # the same metadata laid out as other writers do (format v2: a
+        # ``schemas`` list and ``current-schema-id``, no ``schema``)
+        # reads with the schema the id names, not the first one listed
+        version = _current_version(path)
+        meta = _load_metadata(path, version)
+        evolved = meta.pop("schema")
+        meta["schemas"] = [
+            dict(evolved, fields=evolved["fields"][:2], **{"schema-id": 0}),
+            dict(evolved, **{"schema-id": 1}),
+        ]
+        meta["current-schema-id"] = 1
+        with open(os.path.join(path, "metadata",
+                               f"v{version}.metadata.json"), "w") as f:
+            json.dump(meta, f)
+        for df in (read_iceberg(spark, path),
+                   spark.read.format("iceberg_lite").load(path)):
+            assert {r["k"]: r["w"] for r in df.collect()} == {1: None, 2: "x"}
 
 
 class TestIdModeSupported:
@@ -532,10 +573,10 @@ class TestStreamingChangeFeed:
     sidecars exclusive; insert/delete file scans; row-exact DV
     position deltas), drained exactly-once; parity vs the batch feed."""
 
-    def test_drain_matches_batch_cdf(self, registered, tmp_path):
+    def test_drain_matches_batch_cdf(self, registered, tmp_path, jobs_in):
         from etl_market_survey_spark.sources.deltalog import (
-            add_deletion_vectors, load_snapshot, merge_delta,
-            read_delta_changes,
+            _change_walk, add_deletion_vectors, compact, delete_where,
+            load_snapshot, merge_delta, read_delta_changes, restore_delta,
         )
 
         spark = registered
@@ -543,16 +584,42 @@ class TestStreamingChangeFeed:
         sink = str(tmp_path / "scf1_sink")
         ckpt = str(tmp_path / "scf1_ckpt")
         t = spark.createDataFrame(
-            [(i, i * 10) for i in range(10)], "k long, v long"
+            [(i, i * 10, str(i % 2)) for i in range(10)],
+            "k long, v long, p string",
         )
-        write_delta(spark, path, t, commit_ts=100,
+        write_delta(spark, path, t, partition_col="p", commit_ts=100,
                     properties={"delta.enableChangeDataFeed": "true"})
         merge_delta(spark, path,
-                    spark.createDataFrame([(3, 333), (50, 500)],
-                                          "k long, v long"),
+                    spark.createDataFrame([(3, 333, "1"), (50, 500, "0")],
+                                          "k long, v long, p string"),
                     ["k"], commit_ts=200)
-        rel = next(iter(load_snapshot(path).adds))
+        rel = min(load_snapshot(path).adds)
         add_deletion_vectors(spark, path, {rel: [0]}, commit_ts=300)
+        add_deletion_vectors(spark, path, {rel: [1]}, commit_ts=400)
+        restore_delta(spark, path, 2, commit_ts=500)  # the DV shrinks
+        delete_where(spark, path, partition_values=["0"], commit_ts=600)
+        write_delta(spark, path,  # a second file for compaction to merge
+                    spark.createDataFrame([(11, 110, "1")],
+                                          "k long, v long, p string"),
+                    partition_col="p", commit_ts=650)
+        assert compact(spark, path, commit_ts=700) == 7
+        walk, n_jobs = jobs_in(f"cdf-walk-{tmp_path.name}",
+                               lambda: _change_walk(path, 1, 7))
+        assert n_jobs == 0
+        kinds = [
+            (bool(c.cdc), bool(c.inserts), bool(c.deletes),
+             sorted({ct for _, ct, _ in c.dv_deltas}))
+            for c in walk
+        ]
+        assert kinds == [
+            (True, False, False, []),  # MERGE with cdc sidecars
+            (False, False, False, ["delete"]),  # DV grows
+            (False, False, False, ["delete"]),
+            (False, False, False, ["insert"]),  # RESTORE shrinks it
+            (False, False, True, []),  # partition delete
+            (False, True, False, []),
+            (False, False, False, []),  # compaction: no data change
+        ]
         q = (
             spark.readStream.format("delta_lite")
             .option("readChangeFeed", "true")
@@ -670,10 +737,10 @@ class TestIcebergLiteStreaming:
         )
         q.awaitTermination(120)
 
-    def test_changelog_drain_matches_batch(self, ice, tmp_path):
+    def test_changelog_drain_matches_batch(self, ice, tmp_path, jobs_in):
         from etl_market_survey_spark.sources.iceberg import (
-            delete_rows_iceberg, read_iceberg_changes, snapshot_files,
-            upsert_iceberg, write_iceberg,
+            _change_walk, delete_rows_iceberg, read_iceberg_changes,
+            snapshot_files, upsert_iceberg, write_iceberg,
         )
 
         spark = ice
@@ -693,6 +760,26 @@ class TestIcebergLiteStreaming:
                                   "k long, v long"),
             ["k"], commit_ts=300,
         )  # equality-delete snapshot + append snapshot
+        # the overwrite drops the first file, which carries both a
+        # position delete and an equality delete
+        write_iceberg(
+            spark, path,
+            spark.createDataFrame([(7, 70), (200, 2000)], "k long, v long"),
+            mode="overwrite", commit_ts=400,
+        )
+        walk, n_jobs = jobs_in(f"ice-walk-{tmp_path.name}",
+                               lambda: _change_walk(path))
+        assert n_jobs == 0
+        assert [
+            (len(c.added), len(c.dropped), len(c.dropped_pos),
+             len(c.dropped_eq), len(c.pos_deletes), len(c.eq_deletes))
+            for c in walk
+        ] == [
+            (1, 0, 0, 0, 0, 0),
+            (0, 0, 0, 0, 1, 0),
+            (1, 0, 0, 0, 0, 1),  # the upsert: equality delete + append
+            (1, 2, 1, 1, 0, 0),
+        ]
         self._drain(spark, path, sink, ckpt)
         cols = ("k", "v", "_change_type", "_snapshot_id",
                 "_commit_timestamp")
